@@ -14,12 +14,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.envCpus(4)
     // SPARK_GRAFT_SHUFFLE decouples shuffle partitions from the core count
     // (default = cores, the local-mode norm): growth probes use it to
     // separate spill-onset-at-fixed-partitions from genuine growth — on a
     // real cluster AQE advisory sizing owns this number.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
     // Hive support for the catalog queries (q68-q70); isolated temp warehouse
     val wh = java.nio.file.Files.createTempDirectory("graft-bench-wh").toString
     val spark = GraftSession.hiveBuilder(s"local[$cpus]", "graft-bench", wh)
@@ -103,38 +103,35 @@ object Bench {
         .takeWhile(_ != null)
         .find(d => java.nio.file.Files.exists(d.resolve("build.sbt")) &&
           java.nio.file.Files.isDirectory(d.resolve("src/main/scala/graft")))
-    // Two file copies per run: the legacy BENCH_LOCAL.json (last run wins)
-    // and a per-core-count BENCH_LOCAL_c<cpus>.json, because the driver runs
-    // the bench twice (full cores, then reduced cores for the scaling
-    // measurement) and round 9's second run overwrote the first, destroying
-    // the 32-core per-query record. SPARK_GRAFT_BENCH_JSON overrides both.
-    val outs: Seq[String] = sys.env.get("SPARK_GRAFT_BENCH_JSON") match {
-      case Some(p) => Seq(p)
-      case None => repoRoot.toSeq.flatMap { d =>
-        Seq(d.resolve("BENCH_LOCAL.json").toString,
-            d.resolve(s"BENCH_LOCAL_c$cpus.json").toString)
-      }
-    }
+    // One file per core count, BENCH_LOCAL_c<cpus>.json: a round runs the
+    // bench twice (full cores, then reduced cores for the scaling
+    // measurement), and a single shared file let round 9's second run
+    // overwrite the 32-core per-query record. SPARK_GRAFT_BENCH_JSON
+    // overrides it.
+    val out: Option[String] = sys.env.get("SPARK_GRAFT_BENCH_JSON")
+      .orElse(repoRoot.map(_.resolve(s"BENCH_LOCAL_c$cpus.json").toString))
     // stdout FIRST: the JSON line is the only other copy of the results,
     // and an unwritable SPARK_GRAFT_BENCH_JSON path must not destroy an
     // hours-long run's numbers after the fact
     println(json)
-    if (outs.isEmpty)
-      System.err.println("[bench] no graft repo root above CWD and no " +
-        "SPARK_GRAFT_BENCH_JSON set — skipping the file write (results " +
-        "are on the stdout JSON line above)")
-    var written: Option[String] = None
-    outs.foreach { path =>
-      try {
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(path), json + "\n")
-        println(s"BENCH_JSON $path")
-        if (written.isEmpty) written = Some(path)
-      } catch {
-        case e: Exception =>
-          System.err.println(s"[bench] could not write $path: $e " +
-            "(results are on the stdout JSON line above)")
-      }
+    val written: Option[String] = out match {
+      case None =>
+        System.err.println("[bench] no graft repo root above CWD and no " +
+          "SPARK_GRAFT_BENCH_JSON set — skipping the file write (results " +
+          "are on the stdout JSON line above)")
+        None
+      case Some(path) =>
+        try {
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get(path), json + "\n")
+          println(s"BENCH_JSON $path")
+          Some(path)
+        } catch {
+          case e: Exception =>
+            System.err.println(s"[bench] could not write $path: $e " +
+              "(results are on the stdout JSON line above)")
+            None
+        }
     }
     // Compact summary as the LAST stdout line: the driver captures only a
     // ~2 KB tail of this process's output, and the full per-query JSON line

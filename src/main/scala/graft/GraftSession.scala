@@ -25,6 +25,21 @@ object GraftSession {
   def resolveMaster(fallback: String): String =
     sys.props.getOrElse("spark.master", fallback)
 
+  /** Core count for the mains' `local[n]` master: `SPARK_GRAFT_CPUS` when
+    * set, else `default`. Fails with a message naming the variable instead
+    * of a bare NumberFormatException or a malformed master string.
+    */
+  def envCpus(default: Int): Int =
+    positiveInt("SPARK_GRAFT_CPUS", sys.env.get("SPARK_GRAFT_CPUS"), default)
+
+  private[graft] def positiveInt(name: String, raw: Option[String],
+                                 default: Int): Int = raw match {
+    case None => default
+    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"$name must be a positive integer, got '$v'"))
+  }
+
   def builder(master: String = "local[*]", appName: String = "graft"): SparkSession.Builder =
     SparkSession
       .builder()
@@ -42,6 +57,9 @@ object GraftSession {
       .config("spark.sql.orc.enableVectorizedReader", "true")
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.ui.enabled", "false")
+      // deletes reliable checkpoint files once their frame is unreachable
+      // (spark.graft.reliableMaterialize); local checkpoints are unaffected
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
 
   def local(cores: Int = 0, appName: String = "graft"): SparkSession = {
     val m = if (cores <= 0) "local[*]" else s"local[$cores]"

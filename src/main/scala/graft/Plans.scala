@@ -17,7 +17,7 @@ object Plans {
     val sfDir = args(0)
     val names: Set[String] =
       if (args.length > 1) args(1).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.envCpus(4)
     val wh = Files.createTempDirectory("graft-plans-wh").toString
     val spark = GraftSession.hiveBuilder(s"local[$cpus]", "graft-plans", wh)
       .config("spark.sql.shuffle.partitions", cpus)

@@ -91,7 +91,7 @@ object RelScale {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/tmp/relscale-f10")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.envCpus(32)
     val spark = GraftSession.builder(s"local[$cpus]", "graft-relscale")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

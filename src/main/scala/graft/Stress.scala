@@ -18,20 +18,20 @@ object Stress {
     // "docs" | "embed" | "events" | "all": re-run one family without
     // paying for the others
     val section = args.lift(2).getOrElse("all")
-    val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_RELIABLE=1 runs the iterative ops (connected components)
-    // through fault-tolerant DataFrame.checkpoint instead of
-    // localCheckpoint — the cluster-survival path, stress-timed so its
-    // overhead is a known number, not a guess
-    val reliable = sys.env.get("SPARK_GRAFT_RELIABLE").contains("1")
+    val cpus   = GraftSession.envCpus(32)
     // SPARK_GRAFT_SHUFFLE overrides shuffle partitions (default = cores):
     // the 1M-vector probes need more, smaller reduce tasks so per-task
     // sort buffers fit (32 tasks x wide candidate rows OOMed the spill)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
     val spark = GraftSession.builder(s"local[$cpus]", "graft-stress")
       .config("spark.sql.shuffle.partitions", shuffle)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // --conf spark.graft.reliableMaterialize=true runs every checkpoint
+    // (connected components, CELF, the lazy materialize sites) through
+    // fault-tolerant DataFrame.checkpoint — the cluster-survival path,
+    // stress-timed so its overhead is a known number, not a guess
+    val reliable = Materialize.reliable(spark)
     if (reliable) {
       val ckDir = java.nio.file.Files.createTempDirectory("stress-ckpt")
       spark.sparkContext.setCheckpointDir(ckDir.toString)
@@ -45,7 +45,7 @@ object Stress {
     val corpus = base.crossJoin(replicas)
       .select((col("doc_id") * factor + col("rep")).as("doc_id"),
         expr("substring(text, rep + 1)").as("text"))
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .persist()
     val n = corpus.count()
     println(s"[stress] corpus rows: $n (factor $factor)")
@@ -282,8 +282,8 @@ object Stress {
           shingleSize = 3, numHashes = 32, bands = 8, threshold = 0.5,
           maxBucketSize = 200)
         .select(col("idA"), col("idB"))
-      val (labels, iters) = graft.llm.Dedup.connectedComponentsWithStats(
-        pairs, reliableCheckpoints = reliable)
+      val (labels, iters) =
+        graft.llm.Dedup.connectedComponentsWithStats(pairs)
       val nLabels = labels.count()
       println(s"[stress] cc converged in $iters rounds" +
         (if (reliable) " (reliable checkpoints)" else ""))
@@ -311,16 +311,13 @@ object Stress {
         i => concat_ws(" ", element_at(ctoks, i + 1),
           element_at(ctoks, i + 2), element_at(ctoks, i + 3))))
     time("greedy_cover_seed_k1") {
-      graft.ops.Selection.greedyMaxCover(coverItems(cgrams), 1,
-        reliableCheckpoints = reliable).count()
+      graft.ops.Selection.greedyMaxCover(coverItems(cgrams), 1).count()
     }
     time("greedy_cover_k10") {
-      graft.ops.Selection.greedyMaxCover(coverItems(cgrams), 10,
-        reliableCheckpoints = reliable).count()
+      graft.ops.Selection.greedyMaxCover(coverItems(cgrams), 10).count()
     }
     time("greedy_cover_ties_k5") {
-      graft.ops.Selection.greedyMaxCover(coverItems(ctoks), 5,
-        reliableCheckpoints = reliable).count()
+      graft.ops.Selection.greedyMaxCover(coverItems(ctoks), 5).count()
     }
     }
 
@@ -341,7 +338,7 @@ object Stress {
       .select((col("event_id") * factor + col("rep")).as("event_id"),
         col("ts"), (col("user_id") + col("rep") * maxUser).as("user_id"),
         col("event_type"), col("value"))
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .persist()
     val nEv = events.count()
     println(s"[stress] event rows: $nEv")
@@ -483,7 +480,7 @@ object Stress {
         transform(col("embedding"), (x, i) =>
           x + col("rep") * lit(0.02) *
             element_at(col("embedding"), pmod(i + 1, d) + 1)).as("embedding"))
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .persist()
     val nVecs = evecs.count()
     println(s"[stress] embedding rows: $nVecs")

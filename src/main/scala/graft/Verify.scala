@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.envCpus(4)
     // Hive support: the catalog queries (q68-q70) create metastore tables.
     // A fresh temp warehouse per run keeps the Derby metastore isolated.
     val wh = Files.createTempDirectory("graft-verify-wh").toString

@@ -2306,7 +2306,7 @@ private[graft] object QueriesStats1 {
           when(npv(mid) > 0, col("hi")).otherwise(mid).as("hi"): _*)
         // truncate the plan: CollapseProject would otherwise inline the
         // interval recurrence into one exponentially-growing expression
-        if (k % 10 == 0) cur = cur.localCheckpoint()
+        if (k % 10 == 0) cur = cur.materializeEager
       }
       cur.select(col("sg").as("segment"), col("c0").as("c0_kusd"),
           (1 to 12).map(mm => col(s"cf$mm")).reduce(_ + _)
@@ -2923,7 +2923,7 @@ private[graft] object QueriesStats1 {
         cur = cur.select(ys :+ l2.as("l") :+
           (lit(0.1) * (l2 - col("l")) + lit(0.9) * col("b")).as("b") :+
           (col("sae") + abs(col(s"y$tt") - pred)).as("sae"): _*)
-        if (tt % 10 == 0) cur = cur.localCheckpoint()
+        if (tt % 10 == 0) cur = cur.materializeEager
       }
       cur.select(lit(27L).as("n_quarters"),
         round(col("l"), 2).as("level_kusd"),

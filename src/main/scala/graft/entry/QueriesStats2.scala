@@ -618,7 +618,7 @@ private[graft] object QueriesStats2 {
           (lit(0.2) * (col(s"y$tt") - l2) + lit(0.8) * col(sj)).as(sj))
           ++ others ++
           Seq((col("sae") + abs(col(s"y$tt") - pred)).as("sae")): _*)
-        if (tt % 8 == 0) cur = cur.localCheckpoint()
+        if (tt % 8 == 0) cur = cur.materializeEager
       }
       cur.select(lit(27L).as("n_quarters"),
         round(col("l"), 2).as("level_kusd"),
@@ -1567,7 +1567,7 @@ private[graft] object QueriesStats2 {
         val qsum = types.indices.map(i => col(s"q$i")).reduce(_ + _)
         cur = withQ.select(wNames ++
           types.indices.map(i => (col(s"q$i") / qsum).as(s"p$i")): _*)
-        if (it % 3 == 0) cur = cur.localCheckpoint()
+        if (it % 3 == 0) cur = cur.materializeEager
       }
       val wins = types.indices.map { i =>
         types.indices.filter(_ != i).map(j => col(s"w_${i}_$j"))
@@ -2031,7 +2031,7 @@ private[graft] object QueriesStats2 {
           greatest(after, lit(0L)).as("inv"),
           (col("n_orders") + ord).as("n_orders"),
           (col("lost") + greatest(-after, lit(0L))).as("lost")): _*)
-        if (k % 8 == 7) cur = cur.localCheckpoint()
+        if (k % 8 == 7) cur = cur.materializeEager
       }
       cur.select((ys.reduce(_ + _)).as("total_demand"), col("n_orders"),
           col("lost").as("lost_units"), col("inv").as("final_inventory"))

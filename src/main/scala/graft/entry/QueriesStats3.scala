@@ -524,7 +524,7 @@ private[graft] object QueriesStats3 {
           .select((col("gm") + col("m")).as("gm"))
         colEff = colEff.crossJoin(broadcast(mce))
           .select(col("sg"), (col("ce") - col("m")).as("ce"))
-        grid = grid.localCheckpoint()
+        grid = grid.materializeEager
       }
       val residMad = grid.agg(expr("percentile(abs(r), 0.5)").as("mad"))
       colEff.crossJoin(broadcast(grandDf)).crossJoin(broadcast(residMad))
@@ -1052,7 +1052,7 @@ private[graft] object QueriesStats3 {
             when(col("dik").isNotNull && col("dkj").isNotNull &&
               (col("d").isNull || col("dik") + col("dkj") < col("d")),
               col("dik") + col("dkj")).otherwise(col("d")).as("d"))
-          .localCheckpoint()
+          .materializeEager
       }
       d.select(col("src"), col("dst"), round(col("d"), 6).as("dist"))
         .orderBy(col("src"), col("dst"))
@@ -1128,7 +1128,7 @@ private[graft] object QueriesStats3 {
           Window.orderBy(col("m").desc, col("source"))))
         means = ranked
         survivors = ranked.filter(col("rk") <= keep)
-          .select(col("source")).localCheckpoint()
+          .select(col("source")).materializeEager
       }
       val out = means.filter(col("rk") <= 2)
         .select(col("rk").cast("long").as("final_rank"), col("source"),
@@ -1334,7 +1334,7 @@ private[graft] object QueriesStats3 {
           (col("x") + kg * innov).as("x"), col("r"), col("q"),
           ((lit(1.0) - kg) * pPred).as("p"),
           (col("sse") + innov * innov).as("sse")): _*)
-        if (k % 8 == 0) cur = cur.localCheckpoint()
+        if (k % 8 == 0) cur = cur.materializeEager
       }
       cur.select(lit(30L).as("n_days"), round(col("x"), 4)
           .as("final_level"),
@@ -1556,7 +1556,7 @@ private[graft] object QueriesStats3 {
           (lit(1.0) + types.map(j => col(s"p_${i}_$j") * col(s"h_$j"))
             .reduce(_ + _)).as(s"h_$i")
         }: _*)
-        if (it % 6 == 0) cur = cur.localCheckpoint()
+        if (it % 6 == 0) cur = cur.materializeEager
       }
       cur.selectExpr("stack(4, " + types.map(i =>
           s"'$i', round(h_$i, 4)").mkString(", ") +
@@ -3005,7 +3005,7 @@ private[graft] object QueriesStats3 {
           (lit(1.0) + lit(0.5) * types.map(j =>
             col(s"p_${j}_$i") * col(s"x_$j")).reduce(_ + _)).as(s"x_$i")
         }: _*)
-        if (it % 5 == 0) cur = cur.localCheckpoint()
+        if (it % 5 == 0) cur = cur.materializeEager
       }
       cur.selectExpr("stack(5, " + types.map(i =>
           s"'$i', round(x_$i, 4), round(x_$i / (${types

@@ -1808,7 +1808,7 @@ private[graft] object QueriesStats4 {
         val norm = types.map(i => col(s"y_$i")).reduce(_ + _)
         cur = withY.select(cCols ++
           types.map(i => (col(s"y_$i") / norm).as(s"x_$i")): _*)
-        if (it % 5 == 0) cur = cur.localCheckpoint()
+        if (it % 5 == 0) cur = cur.materializeEager
       }
       val lamExpr = types.map { i =>
         types.map(j => col(s"c_${i}_$j") * col(s"x_$j")).reduce(_ + _)
@@ -1863,7 +1863,7 @@ private[graft] object QueriesStats4 {
             (col(s"m_${i}_$j") / cs).as(s"m_${i}_$j")
           }
         }: _*)
-        if (it % 3 == 0) cur = cur.localCheckpoint()
+        if (it % 3 == 0) cur = cur.materializeEager
       }
       val rowDevs = types.map { i =>
         abs(types.map(j => col(s"m_${i}_$j")).reduce(_ + _) - 1.0)
@@ -2015,7 +2015,7 @@ private[graft] object QueriesStats4 {
           types.map(i => col(s"x_$i") * col(s"p_${i}_$j"))
             .reduce(_ + _).as(s"x_$j")
         }: _*)
-        if (it % 6 == 0) cur = cur.localCheckpoint()
+        if (it % 6 == 0) cur = cur.materializeEager
       }
       val obsShares = obs.crossJoin(broadcast(obsTot))
         .select(col("event_type"), (col("oc") / col("ot")).as("obsSh"))

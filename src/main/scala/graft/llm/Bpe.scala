@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Materialize.Ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -116,7 +117,7 @@ object Bpe {
     // any merge count (persist kept the logical chain growing and its
     // columnar cache measured as pure CPU overhead at vocab size — r9)
     var syms = vocab.select(symbolize(col("word")).as("s"), col("freq"))
-      .localCheckpoint(true)
+      .materializeEager
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var done = false
     while (merges.length < numMerges && !done) {
@@ -138,7 +139,7 @@ object Bpe {
           (top.head.getString(0), top.head.getString(1), top.head.getLong(2))
         merges += Merge(merges.length + 1, a, b, f)
         syms = syms.withColumn("s", applyMerge(col("s"), a, b))
-          .localCheckpoint(true)
+          .materializeEager
       }
     }
     merges.toSeq

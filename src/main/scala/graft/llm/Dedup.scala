@@ -252,31 +252,23 @@ object Dedup {
     * step after near-dup pair generation — [[minhashDedup]]'s single-pass
     * drop is the cheap approximation of keeping one doc per component.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-                          reliableCheckpoints: Boolean = false): DataFrame =
-    connectedComponentsWithStats(pairs, maxIter, reliableCheckpoints)._1
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame =
+    connectedComponentsWithStats(pairs, maxIter)._1
 
   /** [[connectedComponents]] plus the number of rounds it ran — the
     * observable for the O(log diameter) convergence claim.
     *
-    * `reliableCheckpoints = true` stores per-round state via
-    * `DataFrame.checkpoint` in the context's checkpoint directory (must be
-    * set, and on a cluster must be a fault-tolerant FS): `localCheckpoint`
-    * blocks live on executors, so one executor loss mid-iteration kills the
-    * whole job. Local mode keeps the cheap local default.
+    * Per-round state goes through `materializeEager`: local checkpoint
+    * blocks by default, fault-tolerant `DataFrame.checkpoint` under
+    * `spark.graft.reliableMaterialize` ([[graft.Materialize]]) —
+    * `localCheckpoint` blocks live on executors, so one executor loss
+    * mid-iteration kills the whole job.
     */
-  def connectedComponentsWithStats(pairs: DataFrame, maxIter: Int = 20,
-                                   reliableCheckpoints: Boolean = false): (DataFrame, Int) = {
-    if (reliableCheckpoints)
-      require(pairs.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "reliableCheckpoints requires sparkContext.setCheckpointDir on a " +
-          "fault-tolerant FS; without it an executor loss mid-iteration " +
-          "loses localCheckpoint blocks and fails the job")
+  def connectedComponentsWithStats(pairs: DataFrame,
+                                   maxIter: Int = 20): (DataFrame, Int) = {
     // Iterative algorithms must TRUNCATE THE PLAN each round (checkpoint),
     // not just cache: persist() short-circuits execution but the logical
     // plan still nests one level per round and analysis time explodes.
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliableCheckpoints) df.checkpoint(true) else df.localCheckpoint(true)
     val idA = pairs.columns(0)
     val idB = pairs.columns(1)
     // undirected edge list, both directions — ONE pass over `pairs` via
@@ -285,14 +277,14 @@ object Dedup {
     // and a two-branch union re-executes its post-exchange stages once per
     // branch (measured r9: q65 = 52.9 CPU-s vs 18.5 for one kernel pass;
     // the explode form makes the generator subtree appear exactly once)
-    val edges = ckpt(pairs
+    val edges = pairs
       .select(explode(array(
         struct(col(idA).as("src"), col(idB).as("dst")),
         struct(col(idB).as("src"), col(idA).as("dst")))).as("__e"))
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-      .distinct())
-    var labels = ckpt(edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("component")))
+      .distinct().materializeEager
+    var labels = edges.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("component")).materializeEager
     // Convergence is read off the label-sum invariant: labels only ever
     // decrease, so the per-round sum of components is strictly decreasing
     // until the fixpoint and equal exactly there — one cheap aggregate over
@@ -321,9 +313,10 @@ object Dedup {
       // per round, so convergence is O(log diameter) rounds, not O(diameter)
       val parents = viaEdges.select(col("id").as("component"),
         col("component").as("__parent"))
-      val next = ckpt(viaEdges.join(parents, Seq("component"), "left")
+      val next = viaEdges.join(parents, Seq("component"), "left")
         .select(col("id"),
-          coalesce(col("__parent"), col("component")).as("component")))
+          coalesce(col("__parent"), col("component")).as("component"))
+        .materializeEager
       val newSum = labelSum(next)
       converged = newSum.compareTo(prevSum) == 0
       prevSum = newSum
@@ -338,14 +331,14 @@ object Dedup {
         // contraction preserves rep connectivity exactly (only self-loops
         // are dropped), and non-representative nodes keep converging
         // through the pointer-jump step, which reads the full label table.
-        curEdges = ckpt(curEdges
+        curEdges = curEdges
           .join(labels.select(col("id").as("src"),
             col("component").as("__ls")), Seq("src"))
           .join(labels.select(col("id").as("dst"),
             col("component").as("__ld")), Seq("dst"))
           .select(col("__ls").as("src"), col("__ld").as("dst"))
           .filter(col("src") =!= col("dst"))
-          .distinct())
+          .distinct().materializeEager
       }
     }
     (labels, iter)

@@ -283,61 +283,15 @@ object Search {
     * 34% df (round-6 probe), because a mid-df term shared by hundreds of
     * batch queries multiplies its whole posting list by that sharing.
     * The round-7 split-point sweep at the f500 Zipf fixture
-    * ([[graft.MaxScoreProbe]], BENCH_NOTES_r7 §6) measured 0.2 as the
-    * optimum ITSELF: CPU 522/366/316/7913/4385 s at cutoffs
-    * 0.05/0.1/0.2/0.35/0.5 — a shallow basin on the rare side (0.1
-    * within 16%; 0.05 pays 1.65x in uncertifiable fallbacks) and a
-    * 25x cliff once mid-df terms turn essential. A per-batch adaptive
-    * split could at best recover the basin's floor, already within
-    * measurement noise of the constant — negative result recorded, the
-    * constant stands. (The probe's override below is its measurement
-    * hook; it is package-scoped, never configuration-driven, so no
-    * co-resident code can silently shift the serving cutoff.)
+    * (history/BENCH_NOTES_r7.md §6) measured 0.2 as the optimum ITSELF:
+    * CPU 522/366/316/7913/4385 s at cutoffs 0.05/0.1/0.2/0.35/0.5 — a
+    * shallow basin on the rare side (0.1 within 16%; 0.05 pays 1.65x in
+    * uncertifiable fallbacks) and a 25x cliff once mid-df terms turn
+    * essential. A per-batch adaptive split could at best recover the
+    * basin's floor, already within measurement noise of the constant —
+    * negative result recorded, the constant stands.
     */
-  /** Probe-only override of the essential/common split, set exclusively by
-    * [[graft.MaxScoreProbe]] under try/finally. Package-private — a system
-    * property would be writable by any co-resident JVM code, and a pinned
-    * non-default cutoff could land serving on the measured 25x mid-df
-    * cliff with no trace. Values outside the probe's (0, 0.5] sweep range
-    * fall back to the measured constant; any active override logs.
-    */
-  // @volatile: the probe sets this under try/finally on its own thread
-  // while serving plans read it from Spark's planning threads — without a
-  // barrier a pinned (or restored) value could be invisible to a reader
-  @volatile private[graft] var essentialDfFracOverride: Option[Double] = None
-  // last override value already warned about — the warning must be
-  // visible per pinned value, not per expression-build (a single serving
-  // plan reads the cutoff many times)
-  @volatile private var warnedOverride: Option[Double] = None
-
-  private def EssentialDfFrac: Double = {
-    val raw = essentialDfFracOverride
-    raw.filter(f => f > 0.0 && f <= 0.5) match {
-      case Some(f) =>
-        if (!warnedOverride.contains(f)) {
-          warnedOverride = Some(f)
-          System.err.println(
-            f"[graft.Search] WARNING: probe override active — " +
-              f"essential-df cutoff $f%.2f replaces the measured 0.2 " +
-              "optimum for this query batch")
-        }
-        f
-      case None =>
-        // an out-of-range pin silently serving the 0.2 constant would
-        // invalidate the probe's sweep labels — "any active override
-        // logs" must include the rejected ones
-        raw.foreach { f =>
-          if (!warnedOverride.contains(f)) {
-            warnedOverride = Some(f)
-            System.err.println(
-              f"[graft.Search] WARNING: probe override $f%.2f is outside " +
-                "(0, 0.5] and was REJECTED — serving uses the measured " +
-                "0.2 constant")
-          }
-        }
-        0.2
-    }
-  }
+  private final val EssentialDfFrac = 0.2
 
   /** Max-score (WAND-family) serving against a persisted index: EXACT
     * top-k at a fraction of the aggregation work when queries mix rare and

@@ -32,8 +32,8 @@ object Association {
       // consumed by the total, the item-support pass, and both sides of
       // the pair self-join — materialized ONCE as a raw-row checkpoint:
       // a .persist() here measured 30-90 CPU-s vs ~1 for the checkpoint
-      // (r9 OptProbe assoc3; columnar cache build/decode + its stats
-      // flipping downstream join planning)
+      // (r9 assoc3 A/B, history/OPTIMIZATION_r09.md; columnar cache
+      // build/decode + its stats flipping downstream join planning)
       .materialize
     val n = b.agg(countDistinct(col("basket")).as("n_baskets"))
     val freq = b.groupBy(col("item")).agg(count(lit(1)).as("c_item"))

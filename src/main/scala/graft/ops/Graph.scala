@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize.Ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -39,37 +40,30 @@ object Graph {
     * broadcast cross join of its 1-row result — no extra driver action per
     * round. Returns (node, pr, in_deg, out_deg).
     */
-  def pageRank(edges: DataFrame, nIter: Int = 5, damping: Double = 0.85,
-               reliableCheckpoints: Boolean = false): DataFrame = {
+  def pageRank(edges: DataFrame, nIter: Int = 5,
+               damping: Double = 0.85): DataFrame = {
     require(nIter >= 1, "nIter must be >= 1")
-    if (reliableCheckpoints)
-      require(edges.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "reliableCheckpoints requires sparkContext.setCheckpointDir on a " +
-          "fault-tolerant FS (see Dedup.connectedComponentsWithStats)")
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliableCheckpoints) df.checkpoint(true) else df.localCheckpoint(true)
-
     // materialized once: the edge list feeds nodes/out-weights/contrib/
     // degree passes (6 consumers) — an unpersisted caller DAG would
     // re-execute per consumer
-    val e = ckpt(edges.select(col(edges.columns(0)).as("src"),
+    val e = edges.select(col(edges.columns(0)).as("src"),
       col(edges.columns(1)).as("dst"),
-      col(edges.columns(2)).cast("double").as("w")))
-    val nodes = ckpt(
-      e.select(explode(array(col("src"), col("dst"))).as("node"))
-        .distinct())
+      col(edges.columns(2)).cast("double").as("w")).materializeEager
+    val nodes = e.select(explode(array(col("src"), col("dst"))).as("node"))
+      .distinct().materializeEager
     // out-weight once, contributions as edge fractions: the loop never
     // touches raw weights again
     val outw = e.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-    val contrib = ckpt(e.join(outw, Seq("src"))
-      .select(col("src"), col("dst"), (col("w") / col("ow")).as("frac")))
-    val dangling = ckpt(nodes.join(outw.select(col("src").as("node")),
-      Seq("node"), "left_anti"))
+    val contrib = e.join(outw, Seq("src"))
+      .select(col("src"), col("dst"), (col("w") / col("ow")).as("frac"))
+      .materializeEager
+    val dangling = nodes.join(outw.select(col("src").as("node")),
+      Seq("node"), "left_anti").materializeEager
     // |V| is a bounded driver scalar (node count), read once before the loop
     val n = nodes.count().toDouble
     val base = (1.0 - damping) / n
 
-    var pr = ckpt(nodes.select(col("node"), lit(1.0 / n).as("pr")))
+    var pr = nodes.select(col("node"), lit(1.0 / n).as("pr")).materializeEager
     var iter = 0
     while (iter < nIter) {
       val dangMass = pr.join(dangling, Seq("node"), "left_semi")
@@ -78,13 +72,14 @@ object Graph {
         .join(pr.withColumnRenamed("node", "src"), Seq("src"))
         .groupBy(col("dst").as("node"))
         .agg(sum(col("frac") * col("pr")).as("__inc"))
-      pr = ckpt(nodes
+      pr = nodes
         .join(incoming, Seq("node"), "left")
         .crossJoin(broadcast(dangMass))
         .select(col("node"),
           (lit(base) + lit(damping) *
             (coalesce(col("__inc"), lit(0.0)) + col("__dm") / lit(n)))
-            .as("pr")))
+            .as("pr"))
+        .materializeEager
       iter += 1
     }
     val inDeg = e.groupBy(col("dst").as("node"))
@@ -107,39 +102,30 @@ object Graph {
     * Labels are MONOTONE (assigned once, never revised), so each round
     * only touches the frontier: one join of edges against the labeled set,
     * one partial/final (node, label) count, one per-node argmax — all
-    * shuffles on the 8-byte node id. Plan checkpointed per round;
-    * `reliableCheckpoints = true` stores the symmetrized edge set and the
-    * per-round label state via fault-tolerant `DataFrame.checkpoint`
-    * (requires `sparkContext.setCheckpointDir`), matching
-    * [[Dedup.connectedComponents]] and [[pageRank]] for executor-loss
-    * survival on a real cluster. Returns (id, label, round) where
-    * round 0 = seed.
+    * shuffles on the 8-byte node id. The symmetrized edge set and the
+    * per-round label state go through `materializeEager`, so the plan
+    * stays flat and `spark.graft.reliableMaterialize` makes them
+    * fault-tolerant ([[graft.Materialize]]). Returns (id, label, round)
+    * where round 0 = seed.
     */
   def labelPropagate(pairs: DataFrame, seeds: DataFrame,
-                     nIter: Int = 2,
-                     reliableCheckpoints: Boolean = false): DataFrame = {
+                     nIter: Int = 2): DataFrame = {
     require(nIter >= 1)
-    if (reliableCheckpoints)
-      require(pairs.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "reliableCheckpoints requires sparkContext.setCheckpointDir on a " +
-          "fault-tolerant FS; without it an executor loss mid-run " +
-          "loses localCheckpoint blocks and fails the job")
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliableCheckpoints) df.checkpoint(true) else df.localCheckpoint(true)
     val a = pairs.columns(0)
     val b = pairs.columns(1)
     // explode-symmetrized: one pass over the (possibly expensive) pair
     // generator instead of a two-branch union re-executing it — see
     // Dedup.connectedComponentsWithStats
-    val edges = ckpt(pairs
+    val edges = pairs
       .select(explode(array(
         struct(col(a).as("src"), col(b).as("dst")),
         struct(col(b).as("src"), col(a).as("dst")))).as("__e"))
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-      .distinct())
-    var labels = ckpt(seeds
+      .distinct().materializeEager
+    var labels = seeds
       .select(col(seeds.columns(0)).as("id"),
-        col(seeds.columns(1)).as("label"), lit(0L).as("round")))
+        col(seeds.columns(1)).as("label"), lit(0L).as("round"))
+      .materializeEager
     for (r <- 1 to nIter) {
       val votes = edges
         .join(labels.select(col("id").as("src"), col("label")), Seq("src"))
@@ -152,7 +138,7 @@ object Graph {
             .orderBy(col("__c").desc, col("label"))))
         .filter(col("__rn") === 1)
         .select(col("id"), col("label"), lit(r.toLong).as("round"))
-      labels = ckpt(labels.union(won))
+      labels = labels.union(won).materializeEager
     }
     labels
   }
@@ -169,30 +155,21 @@ object Graph {
     * rows, each half-round is one edge-vs-state equi-join on an 8-byte
     * node id plus a partial/final aggregate; the L2 norm folds into the
     * round as a broadcast 1-row cross join (no extra action), and the
-    * plan truncates per round via localCheckpoint —
-    * `reliableCheckpoints = true` swaps in fault-tolerant
-    * `DataFrame.checkpoint` (requires `sparkContext.setCheckpointDir`),
-    * matching [[pageRank]] / [[labelPropagate]] for executor-loss
-    * survival on a real cluster. Returns (node, auth,
-    * hub) — nodes with no in-edges carry auth 0, no out-edges hub 0.
+    * plan truncates per round via `materializeEager` (fault-tolerant under
+    * `spark.graft.reliableMaterialize`, see [[graft.Materialize]]).
+    * Returns (node, auth, hub) — nodes with no in-edges carry auth 0, no
+    * out-edges hub 0.
     */
-  def hits(edges: DataFrame, nIter: Int = 3,
-           reliableCheckpoints: Boolean = false): DataFrame = {
+  def hits(edges: DataFrame, nIter: Int = 3): DataFrame = {
     require(nIter >= 1, "nIter must be >= 1")
-    if (reliableCheckpoints)
-      require(edges.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "reliableCheckpoints requires sparkContext.setCheckpointDir on a " +
-          "fault-tolerant FS; without it an executor loss mid-run " +
-          "loses localCheckpoint blocks and fails the job")
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliableCheckpoints) df.checkpoint(true) else df.localCheckpoint(true)
     // Materialized once via checkpoint, not .persist(): the columnar-cache
     // build/decode of InMemoryRelation measured 3-30x the CPU of the raw-row
     // checkpoint on this path, and its accurate-but-tiny stats flip
-    // downstream joins to plans that re-burn CPU per consumer (r9 OptProbe
-    // hits2/q210ab/assoc3 A/Bs).
-    val e = ckpt(edges.select(col("src"), col("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull).distinct())
+    // downstream joins to plans that re-burn CPU per consumer (r9
+    // hits2/q210ab/assoc3 A/Bs, history/OPTIMIZATION_r09.md).
+    val e = edges.select(col("src"), col("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull).distinct()
+      .materializeEager
     def l2(df: DataFrame, c: String): DataFrame = {
       val n = df.agg(sqrt(sum(col(c) * col(c))).as("__n"))
       df.crossJoin(broadcast(n))
@@ -212,13 +189,13 @@ object Graph {
       .select(col("node"), lit(1.0).as("hub"))
     var auth: DataFrame = null
     for (_ <- 1 to nIter) {
-      val authRaw = ckpt(
-        e.join(hub.withColumnRenamed("node", "src"), Seq("src"))
-          .groupBy(col("dst").as("node")).agg(sum(col("hub")).as("auth")))
+      val authRaw = e.join(hub.withColumnRenamed("node", "src"), Seq("src"))
+        .groupBy(col("dst").as("node")).agg(sum(col("hub")).as("auth"))
+        .materializeEager
       auth = l2(authRaw, "auth")
-      val hubRaw = ckpt(
-        e.join(auth.withColumnRenamed("node", "dst"), Seq("dst"))
-          .groupBy(col("src").as("node")).agg(sum(col("auth")).as("hub")))
+      val hubRaw = e.join(auth.withColumnRenamed("node", "dst"), Seq("dst"))
+        .groupBy(col("src").as("node")).agg(sum(col("auth")).as("hub"))
+        .materializeEager
       hub = l2(hubRaw, "hub")
     }
     val nodes = e.select(col("src").as("node"))
@@ -251,7 +228,7 @@ object Graph {
       // the canonical edge list is consumed 4x (degree pass + three wedge
       // sides): materialize it once, or an expensive upstream candidate
       // generator (e.g. the n-gram pair join) re-runs per consumer
-      .localCheckpoint(true)
+      .materializeEager
     val deg = e.select(explode(array(col("a"), col("b"))).as("v"))
       .groupBy(col("v")).agg(count(lit(1)).as("d"))
     val aFirst = struct(col("da"), col("a")) < struct(col("db"), col("b"))
@@ -260,7 +237,7 @@ object Graph {
       .join(deg.select(col("v").as("b"), col("d").as("db")), Seq("b"))
       .select(when(aFirst, col("a")).otherwise(col("b")).as("lo"),
         when(aFirst, col("b")).otherwise(col("a")).as("hi"))
-      .localCheckpoint(true) // three wedge-join sides read this
+      .materializeEager // three wedge-join sides read this
     val tri = oriented.select(col("lo").as("u"), col("hi").as("v"))
       .join(oriented.select(col("lo").as("v"), col("hi").as("w")), Seq("v"))
       .join(oriented.select(col("lo").as("u"), col("hi").as("w")), Seq("u", "w"))
@@ -291,11 +268,10 @@ object Graph {
     */
   def kCorePeel(edges: DataFrame, k: Int, nRounds: Int): DataFrame = {
     require(k >= 1 && nRounds >= 1)
-    def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(true)
-    var cur = ckpt(edges
+    var cur = edges
       .select(least(col(edges.columns(0)), col(edges.columns(1))).as("src"),
         greatest(col(edges.columns(0)), col(edges.columns(1))).as("dst"))
-      .filter(col("src") =!= col("dst")).distinct())
+      .filter(col("src") =!= col("dst")).distinct().materializeEager
     def summary(round: Int, e: DataFrame): DataFrame = e
       .select(explode(array(col("src"), col("dst"))).as("v"),
         lit(1L).as("half"))
@@ -310,10 +286,11 @@ object Graph {
         .select(explode(array(col("src"), col("dst"))).as("v"))
         .groupBy(col("v")).agg(count(lit(1)).as("d"))
       val keep = deg.filter(col("d") >= k).select(col("v"))
-      cur = ckpt(cur
+      cur = cur
         .join(keep.withColumnRenamed("v", "src"), Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst")))
+        .select(col("src"), col("dst"))
+        .materializeEager
       out = out.unionByName(summary(round, cur))
       round += 1
     }
@@ -341,28 +318,29 @@ object Graph {
     */
   def bfsDistances(edges: DataFrame, nRounds: Int): DataFrame = {
     require(nRounds >= 1)
-    def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(true)
     val e = edges
       .select(col(edges.columns(0)).as("src"), col(edges.columns(1)).as("dst"))
       .filter(col("src") =!= col("dst"))
     // explode-symmetrized single pass (see connectedComponentsWithStats)
-    val sym = ckpt(e
+    val sym = e
       .select(explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("__e"))
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-      .distinct())
+      .distinct().materializeEager
     val srcId = sym.agg(min(col("src")).as("s"))
-    var dist = ckpt(sym.select(col("src").as("node")).distinct()
+    var dist = sym.select(col("src").as("node")).distinct()
       .crossJoin(broadcast(srcId))
       .filter(col("node") === col("s"))
-      .select(col("node"), lit(0L).as("dist")))
+      .select(col("node"), lit(0L).as("dist"))
+      .materializeEager
     var round = 0
     while (round < nRounds) {
       val relaxed = sym.join(dist.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node"), (col("dist") + 1L).as("dist"))
-      dist = ckpt(dist.unionByName(relaxed)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist")))
+      dist = dist.unionByName(relaxed)
+        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+        .materializeEager
       round += 1
     }
     dist

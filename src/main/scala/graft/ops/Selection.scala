@@ -29,23 +29,15 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * The item table is hash-clustered by doc id and materialized once as a
   * raw-row checkpoint (the seed aggregate and every per-round candidate
   * filter read it shuffle-free; the r9 columnar persist() cost 3x the CPU
-  * of the whole query in cache encode/decode — r10 CelfProbe/OptProbe A/B).
-  * `covered` and `bounds` are checkpointed per round so the plan stays
-  * flat, exactly like connectedComponents; `reliableCheckpoints = true`
-  * swaps in fault-tolerant `DataFrame.checkpoint` for executor-loss
-  * survival on a real cluster (requires `sparkContext.setCheckpointDir`).
+  * of the whole query in cache encode/decode — r10 A/B, persist 25.7
+  * CPU-s / 10.8 s wall vs checkpoint 8.1 / 7.6 on the q139 call,
+  * history/OPTIMIZATION_r10.md). `covered` and `bounds` are checkpointed
+  * per round so the plan stays flat, exactly like connectedComponents.
+  * Every checkpoint here is `materializeEager`, so
+  * `spark.graft.reliableMaterialize` makes them fault-tolerant for
+  * executor-loss survival on a real cluster ([[graft.Materialize]]).
   */
 object Selection {
-
-  /** Probe-only override (CelfProbe/OptProbe): Some(false) restores the
-    * r9 persist() of the clustered item table, to re-measure the columnar
-    * cache against the raw-row checkpoint default (r10 A/B: persist 25.7
-    * CPU-s / 10.8 s wall vs ckpt 8.1 / 7.6 on the q139 call — the cache's
-    * batch-stat pruning never paid for its encode/decode; per-round
-    * candidate jobs were <= 0.28 CPU-s either way, CelfProbe r9).
-    * Production callers leave it None.
-    */
-  private[graft] var itemCkptOverride: Option[Boolean] = None
 
   /** Greedy max-cover over `items` (first column: doc id, second: item);
     * duplicates are fine — coverage counts distinct items. Ties break on
@@ -55,36 +47,28 @@ object Selection {
     * changes how much work each round does.
     */
   def greedyMaxCover(items: DataFrame, k: Int,
-                     celfBatch: Int = 64,
-                     reliableCheckpoints: Boolean = false): DataFrame = {
+                     celfBatch: Int = 64): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(celfBatch >= 1, "celfBatch must be >= 1")
     val spark = items.sparkSession
-    if (reliableCheckpoints)
-      require(spark.sparkContext.getCheckpointDir.isDefined,
-        "reliableCheckpoints requires sparkContext.setCheckpointDir on a " +
-          "fault-tolerant FS; without it an executor loss mid-run " +
-          "loses localCheckpoint blocks and fails the job")
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliableCheckpoints) df.checkpoint(true) else df.localCheckpoint(true)
     // hash-cluster + sort by id: the per-round `id IN (batch)` filter
     // prunes cached batches by min/max stats, and both the (id, item)
     // dedup and the groupBy(id) seed run shuffle-free on the id-hash
     // layout (partitioning by id already co-locates every (id, item))
-    val itBase = items
+    // eager raw-row checkpoint (reliable on a cluster when asked): blocks
+    // are context-cleaned once the picks are collected and `it` becomes
+    // unreachable; Bench/Verify's dropQueryState frees them deterministically
+    val it = items
       .select(col(items.columns(0)).as("id"), col(items.columns(1)).as("item"))
       .repartition(col("id"))
       .dropDuplicates(Seq("id", "item"))
       .sortWithinPartitions(col("id"))
-    // eager raw-row checkpoint (reliable on a cluster when asked): blocks
-    // are context-cleaned once the picks are collected and `it` becomes
-    // unreachable; the drivers' dropQueryState frees them deterministically
-    val it = if (itemCkptOverride.contains(false)) itBase.persist()
-             else ckpt(itBase)
+      .materializeEager
     val idType = it.schema("id").dataType
     // Round-1 gains against an empty covered set ARE the exact gains.
-    var bounds = ckpt(it.groupBy(col("id")).agg(count(lit(1)).as("ub")))
-    var covered = it.select(col("item")).limit(0).localCheckpoint(true)
+    var bounds = it.groupBy(col("id")).agg(count(lit(1)).as("ub"))
+      .materializeEager
+    var covered = it.select(col("item")).limit(0).materializeEager
     val picks = scala.collection.mutable.ArrayBuffer.empty[Row]
     var round = 1
     // id -> exact gain vs the CURRENT covered set; reset each round
@@ -204,8 +188,9 @@ object Selection {
         case None => round = k + 1 // all items covered: stop early
         case Some((winId, winGain)) =>
           picks += Row(round.toLong, winId, winGain)
-          covered = ckpt(covered
-            .union(it.filter(col("id") === lit(winId)).select(col("item"))))
+          covered = covered
+            .union(it.filter(col("id") === lit(winId)).select(col("item")))
+            .materializeEager
           // fold this round's exact gains back as the next round's (still
           // valid, tighter) bounds — one broadcast-join rewrite
           val freshDf = spark.createDataFrame(
@@ -213,17 +198,17 @@ object Selection {
               freshGain.toSeq.map { case (i, g) => Row(i, g) }, 1),
             StructType(Seq(StructField("id", idType, nullable = true),
               StructField("__g", LongType, nullable = false))))
-          bounds = ckpt(bounds.filter(col("id") =!= lit(winId))
+          bounds = bounds.filter(col("id") =!= lit(winId))
             .join(broadcast(freshDf), Seq("id"), "left")
-            .select(col("id"), coalesce(col("__g"), col("ub")).as("ub")))
+            .select(col("id"), coalesce(col("__g"), col("ub")).as("ub"))
+            .materializeEager
           round += 1
           round1 = false
       }
     }
-    it.unpersist()
     val schema = StructType(Seq(
       StructField("round", LongType, nullable = false),
-      StructField("id", it.schema("id").dataType, nullable = true),
+      StructField("id", idType, nullable = true),
       StructField("gain", LongType, nullable = false)))
     spark.createDataFrame(
       spark.sparkContext.parallelize(picks.toSeq, 1), schema)

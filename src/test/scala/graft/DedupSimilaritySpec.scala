@@ -154,8 +154,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
     spark.sparkContext.setCheckpointDir(TestSpark.tmpDir("cc-ckpt"))
     try {
       val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("idA", "idB")
-      val reliable = Dedup.connectedComponents(pairs, reliableCheckpoints = true)
-        .as[(Long, Long)].collect().toMap
+      val reliable = TestSpark.withReliableMaterialize {
+        Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
+      }
       val local = Dedup.connectedComponents(pairs)
         .as[(Long, Long)].collect().toMap
       assert(reliable == local)

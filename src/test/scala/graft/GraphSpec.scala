@@ -70,23 +70,24 @@ class GraphSpec extends AnyFunSuite {
     assert(out(1L)._2 == 0L && out(3L) == (("b", 0L)))
   }
 
-  test("labelPropagate reliableCheckpoints: requires a checkpoint dir, then matches") {
+  test("labelPropagate reliableMaterialize: requires a checkpoint dir, then matches") {
     val pairs = Seq((1L, 4L), (2L, 4L), (3L, 4L), (4L, 5L), (2L, 6L), (3L, 6L))
       .toDF("idA", "idB")
     val seeds = Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("id", "label")
-    intercept[IllegalArgumentException] {
-      spark.sparkContext.setCheckpointDir(null)
-      Graph.labelPropagate(pairs, seeds, nIter = 2, reliableCheckpoints = true)
+    TestSpark.withReliableMaterialize {
+      intercept[IllegalArgumentException] {
+        spark.sparkContext.setCheckpointDir(null)
+        Graph.labelPropagate(pairs, seeds, nIter = 2)
+      }
+      val dir = java.nio.file.Files.createTempDirectory("graft-lp-ckpt").toString
+      spark.sparkContext.setCheckpointDir(dir)
+      try {
+        val out = Graph.labelPropagate(pairs, seeds, nIter = 2)
+          .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
+        assert(out(4L) == (("a", 1L)) && out(5L) == (("a", 2L)) &&
+          out(6L) == (("a", 1L)))
+      } finally spark.sparkContext.setCheckpointDir(null)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-lp-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
-      val out = Graph.labelPropagate(pairs, seeds, nIter = 2,
-          reliableCheckpoints = true)
-        .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
-      assert(out(4L) == (("a", 1L)) && out(5L) == (("a", 2L)) &&
-        out(6L) == (("a", 1L)))
-    } finally spark.sparkContext.setCheckpointDir(null)
   }
 
   test("hits: star concentrates authority on the hub-pointed center, cycle is uniform") {
@@ -132,21 +133,23 @@ class GraphSpec extends AnyFunSuite {
     assert(math.abs(out.values.map(v => v._2 * v._2).sum - 1.0) < eps)
   }
 
-  test("hits reliableCheckpoints: requires a checkpoint dir, then matches") {
+  test("hits reliableMaterialize: requires a checkpoint dir, then matches") {
     val edges = Seq((1L, 9L), (2L, 9L), (3L, 9L), (4L, 9L)).toDF("src", "dst")
-    intercept[IllegalArgumentException] {
-      spark.sparkContext.setCheckpointDir(null)
-      Graph.hits(edges, nIter = 3, reliableCheckpoints = true)
+    TestSpark.withReliableMaterialize {
+      intercept[IllegalArgumentException] {
+        spark.sparkContext.setCheckpointDir(null)
+        Graph.hits(edges, nIter = 3)
+      }
+      val dir = java.nio.file.Files.createTempDirectory("graft-hits-ckpt").toString
+      spark.sparkContext.setCheckpointDir(dir)
+      try {
+        val out = Graph.hits(edges, nIter = 3)
+          .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+        assert(math.abs(out(9L)._1 - 1.0) < eps && out(9L)._2 == 0.0)
+        for (s <- 1L to 4L)
+          assert(out(s)._1 == 0.0 && math.abs(out(s)._2 - 0.5) < eps)
+      } finally spark.sparkContext.setCheckpointDir(null)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-hits-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
-      val out = Graph.hits(edges, nIter = 3, reliableCheckpoints = true)
-        .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-      assert(math.abs(out(9L)._1 - 1.0) < eps && out(9L)._2 == 0.0)
-      for (s <- 1L to 4L)
-        assert(out(s)._1 == 0.0 && math.abs(out(s)._2 - 0.5) < eps)
-    } finally spark.sparkContext.setCheckpointDir(null)
   }
 
   test("triangleCounts: triangle, K4, square, star, and dirty edge lists") {

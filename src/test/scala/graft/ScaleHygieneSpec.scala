@@ -22,7 +22,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    broadcasts them anyway at small scale, so the hint buys nothing.
   *    Regex limits: only vals whose RHS is a row-preserving chain
   *    (select/filter/…) off a growing table are classified growing;
-  *    aggregates are legitimately broadcastable and skipped.
+  *    aggregates are legitimately broadcastable and skipped. The same
+  *    layer keeps every checkpoint call in main code inside [[Materialize]],
+  *    the one place that decides whether checkpoints are fault-tolerant.
   *
   * 2. STRUCTURAL layer ([[ScaleChecks]], planted-violation tests here):
   *    the analyzed-plan walk that Verify and WindowAudit run over every
@@ -133,6 +135,30 @@ class ScaleHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"broadcast() hints on growing-derived vals:\n  " +
         offenders.mkString("\n  "))
+  }
+
+  test("every checkpoint in main code goes through Materialize") {
+    // a direct localCheckpoint/checkpoint call would ignore
+    // spark.graft.reliableMaterialize and stay lineage-cutting on a cluster
+    val call = """localCheckpoint\(|\.checkpoint\(""".r
+    val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val sources = Using.resource(Files.walk(Paths.get("src/main/scala"))) {
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    }
+    assert(sources.nonEmpty, "no main sources found (cwd moved?)")
+    val offenders = sources
+      .filter(_.getFileName.toString != "Materialize.scala")
+      .flatMap { p =>
+        // blank comments out but keep their newlines, so lines still match
+        val code = comment.replaceAllIn(new String(Files.readAllBytes(p)),
+          m => "\n" * m.matched.count(_ == '\n'))
+        code.linesIterator.zipWithIndex.collect {
+          case (line, i) if call.findFirstIn(line).isDefined =>
+            s"$p:${i + 1}: ${line.trim}"
+        }
+      }
+    assert(offenders.isEmpty,
+      s"checkpoint calls outside Materialize:\n  " + offenders.mkString("\n  "))
   }
 
   test("the query gallery never self-declares a bounded broadcast batch") {

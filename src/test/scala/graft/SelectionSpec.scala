@@ -64,20 +64,21 @@ class SelectionSpec extends AnyFunSuite {
     assert(got == want.toSeq)
   }
 
-  test("greedyMaxCover reliableCheckpoints: requires a checkpoint dir, then matches") {
+  test("greedyMaxCover reliableMaterialize: requires a checkpoint dir, then matches") {
     val items = Seq(("A", 1), ("A", 2), ("B", 2), ("B", 3), ("C", 4)).toDF("id", "item")
-    intercept[IllegalArgumentException] {
-      spark.sparkContext.setCheckpointDir(null)
-      Selection.greedyMaxCover(items, 2, reliableCheckpoints = true)
+    TestSpark.withReliableMaterialize {
+      intercept[IllegalArgumentException] {
+        spark.sparkContext.setCheckpointDir(null)
+        Selection.greedyMaxCover(items, 2)
+      }
+      val dir = java.nio.file.Files.createTempDirectory("graft-sel-ckpt").toString
+      spark.sparkContext.setCheckpointDir(dir)
+      try {
+        val picks = Selection.greedyMaxCover(items, 3, celfBatch = 1)
+          .collect().map(r => (r.getString(1), r.getLong(2))).toSeq
+        assert(picks == Seq(("A", 2L), ("B", 1L), ("C", 1L)))
+      } finally spark.sparkContext.setCheckpointDir(null)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-sel-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
-      val picks = Selection.greedyMaxCover(items, 3, celfBatch = 1,
-          reliableCheckpoints = true)
-        .collect().map(r => (r.getString(1), r.getLong(2))).toSeq
-      assert(picks == Seq(("A", 2L), ("B", 1L), ("C", 1L)))
-    } finally spark.sparkContext.setCheckpointDir(null)
   }
 
   test("paretoFrontier2d: staircase kept, dominated dropped, duplicates counted") {

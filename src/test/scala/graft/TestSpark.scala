@@ -15,6 +15,14 @@ object TestSpark {
     s
   }
 
+  /** Runs `body` with `spark.graft.reliableMaterialize=true` on the shared
+    * session, unsetting it afterwards so later suites see the default.
+    */
+  def withReliableMaterialize[T](body: => T): T = {
+    spark.conf.set(Materialize.ConfKey, "true")
+    try body finally spark.conf.unset(Materialize.ConfKey)
+  }
+
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 

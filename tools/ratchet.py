@@ -17,8 +17,8 @@ When either sweep lacks the CPU column (pre-r6 baselines), falls back to
 the wall-primary round-4 protocol, and suspects need the isolated
 min-of-4 rerun (SPARK_GRAFT_ONLY) before being called real.
 
-Recommended baselines: BENCH_SWEEP_r7_final.json (local[32]) and
-BENCH_STANDALONE_r7.json (2-executor standalone). Beware the ratchet
+Recommended baselines: history/BENCH_SWEEP_r7_final.json (local[32]) and
+history/BENCH_STANDALONE_r7.json (2-executor standalone). Beware the ratchet
 trap: a sweep baseline can PREDATE same-round conversions — cross-check
 the newest same-code sweep before bisecting.
 

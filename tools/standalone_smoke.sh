@@ -9,8 +9,8 @@
 #      classpath bugs (typed Aggregators, NearestCentroid broadcast
 #      matrices, Hive catalog writes, IVF partitioned index, CELF driver
 #      loop, multimodal mapPartitions).
-#   2. graft.Stress cc section with SPARK_GRAFT_RELIABLE=1 — fault-tolerant
-#      DataFrame.checkpoint across executors.
+#   2. graft.Stress cc section with spark.graft.reliableMaterialize=true —
+#      fault-tolerant DataFrame.checkpoint across executors.
 #   3. graft.StreamSmoke — streaming state-store checkpoint restart across
 #      executor JVMs.
 # Usage: tools/standalone_smoke.sh [outDir] [sfDir]
@@ -65,7 +65,8 @@ python3 "$REPO/tools/check.py" "$SF" "$OUT" || \
   { echo "[smoke] check.py FAILED"; exit 1; }
 
 echo "[smoke] 2/3 connected components with reliable checkpoints"
-SPARK_GRAFT_RELIABLE=1 SPARK_GRAFT_SHUFFLE=16 "${SUBMIT[@]}" \
+SPARK_GRAFT_SHUFFLE=16 "${SUBMIT[@]}" \
+  --conf spark.graft.reliableMaterialize=true \
   --class graft.Stress "$JAR" "$SF" 2 cc || \
   { echo "[smoke] Stress cc FAILED"; exit 1; }
 
