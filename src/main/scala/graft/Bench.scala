@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
   *
@@ -14,63 +12,41 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = GraftSession.envCpus(4)
-    // SPARK_GRAFT_SHUFFLE decouples shuffle partitions from the core count
-    // (default = cores, the local-mode norm): growth probes use it to
-    // separate spill-onset-at-fixed-partitions from genuine growth — on a
-    // real cluster AQE advisory sizing owns this number.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
-    // Hive support for the catalog queries (q68-q70); isolated temp warehouse
-    val wh = java.nio.file.Files.createTempDirectory("graft-bench-wh").toString
-    val spark = GraftSession.hiveBuilder(s"local[$cpus]", "graft-bench", wh)
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Warmup: file listing, parquet footers, codegen compiler, shuffle infra.
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings").foreach { t =>
-      spark.read.parquet(s"$sfDir/$t.parquet").count()
-    }
-    spark.range(1000000).selectExpr("sum(id) as s").collect()
-
-    // SPARK_GRAFT_ONLY=q45_string_funcs,q44_percentiles to time a subset
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     // Each query runs `repeat` times and records the MINIMUM wall time: the
     // box this runs on shows load-average spikes from outside the container
     // that inflate single-shot timings 60-80% across the board, and min-of-N
     // is the standard steady-state estimate under external noise. Failed
     // queries record -1 (never a partial wall time) and land in "errors" —
     // a crashed query must not be mistakable for a fast one.
-    val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "2").toInt
-    require(repeat >= 1, s"SPARK_GRAFT_REPEAT must be >= 1, got $repeat")
-    // Executor CPU time per query, next to wall: CPU is robust to the
-    // external host-load spikes this box takes, so the cross-round ratchet
-    // can tell code regressions (CPU moves too) from noise (only wall
-    // moves). Reads drain the async listener bus before sampling.
-    val meter = new org.apache.spark.graft.BenchMetrics(spark.sparkContext)
-    val results = selected.map { case (name, fn) =>
-      val times = (1 to repeat).map { _ =>
-        val c0 = meter.cpuSeconds()
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-          }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        val cpu = meter.cpuSeconds() - c0
-        // Drop persisted intermediates (several dedup/ANN queries cache
-        // their self-check inputs) so cached blocks don't skew the next
-        // run — OUTSIDE the timed window, teardown is not the query's cost.
-        GraftSession.dropQueryState(spark)
-        if (ok) (elapsed, cpu) else (-1.0, -1.0)
+    val repeat = GraftSession.positiveInt("SPARK_GRAFT_REPEAT",
+      sys.env.get("SPARK_GRAFT_REPEAT"), 2)
+    val (cpus, results) = Sweep.run("bench") { sweep =>
+      val spark = sweep.spark
+      // Warmup: file listing, parquet footers, codegen compiler, shuffle infra.
+      Seq("region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings").foreach { t =>
+        spark.read.parquet(s"$sfDir/$t.parquet").count()
       }
-      val wall = if (times.exists(_._1 < 0)) -1.0 else times.map(_._1).min
-      val cpu = if (times.exists(_._2 < 0)) -1.0 else times.map(_._2).min
-      (name, wall, cpu)
+      spark.range(1000000).selectExpr("sum(id) as s").collect()
+      // Executor CPU time per query, next to wall: CPU is robust to the
+      // external host-load spikes this box takes, so the cross-round ratchet
+      // can tell code regressions (CPU moves too) from noise (only wall
+      // moves).
+      val meter = new org.apache.spark.graft.BenchMetrics(spark.sparkContext)
+      val timed = sweep.eachQuery { (_, fn) =>
+        val runs = (1 to repeat).map { i =>
+          // Drop persisted intermediates (several dedup/ANN queries cache
+          // their self-check inputs) so cached blocks don't skew the next
+          // run — OUTSIDE the timed window, teardown is not the query's cost.
+          if (i > 1) GraftSession.dropQueryState(spark)
+          meter.measure(
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+        }
+        runs.foreach(_.get) // a failed run fails the query: -1 below
+        (runs.map(_.wallSeconds).min, runs.map(_.cpuSeconds).min)
+      }
+      (sweep.cpus, timed.map { case (name, r) =>
+        (name, r.fold(_ => -1.0, _._1), r.fold(_ => -1.0, _._2)) })
     }
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -146,6 +122,5 @@ object Bench {
       .take(5).mkString("[", ",", "]")
     val summary = s"""{"metric":"total","value":${f"$total%.1f"},"unit":"sec","cpu_total":${f"$cpuTotal%.1f"},"n_queries":${results.size},"n_errors":$nErr,"errors":$errsCapped,"repeat":$repeat,"cpus":$cpus,"sf":"$sfDir","queries_file":${written.map("\"" + _ + "\"").getOrElse("null")}}"""
     println(summary)
-    spark.stop()
   }
 }

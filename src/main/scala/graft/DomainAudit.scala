@@ -28,7 +28,8 @@ import org.apache.spark.sql.graftshim.{ColumnShim, DatasetShim}
   * tracks the data (the same closure [[WindowAudit]] gives the
   * BoundedBatchAlias declarations via broadcast-size growth).
   *
-  * Usage: runMain graft.DomainAudit [sfDir] [onlyCsv]
+  * Usage: runMain graft.DomainAudit [sfDir] (`SPARK_GRAFT_ONLY` picks
+  * queries)
   * Output: one `[domain]` line per (query, declared site, function) per
   * declaration; `[domain-violation]` lines and exit 2 on any over-budget
   * site; a query that fails to plan/measure also exits 2 (a site that
@@ -133,18 +134,11 @@ object DomainAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val only = args.lift(1).map(_.split(",").toSet)
-    val wh = java.nio.file.Files.createTempDirectory("graft-domain-wh").toString
-    val spark = GraftSession.hiveBuilder("local[32]", "graft-domain-audit", wh)
-      .config("spark.sql.shuffle.partitions", "32")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     var measured = 0
-    var failed = 0
     val violations = scala.collection.mutable.ArrayBuffer.empty[SiteMeasure]
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-         if only.forall(_.contains(name))) {
-      try {
+    val failed = Sweep.run("domain-audit") { sweep =>
+      val spark = sweep.spark
+      sweep.eachQuery { (name, fn) =>
         val df = fn(spark, sfDir)
         measure(spark, name, df).foreach { m =>
           measured += 1
@@ -164,16 +158,10 @@ object DomainAudit {
               "switch to the two-phase exact path, or re-argue the bound)")
           }
         }
-        GraftSession.dropQueryState(spark)
-      } catch {
-        case e: Exception =>
-          failed += 1
-          println(s"[domain] $name FAILED: ${String.valueOf(e.getMessage).take(120)}")
-      }
+      }.count(_._2.isLeft)
     }
     println(s"[domain] measured $measured declared buffer-all sites at " +
       s"$sfDir; ${violations.size} over budget; $failed queries failed")
-    spark.stop()
     if (violations.nonEmpty || failed > 0) sys.exit(2)
   }
 }

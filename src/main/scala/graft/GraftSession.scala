@@ -9,6 +9,13 @@ import org.apache.spark.sql.SparkSession
   * splitting), shuffle partitions sized to the local core count rather than the
   * 200 default (on a real cluster this would be ~2-3x total cores / set by AQE
   * advisory size).
+  *
+  * The launcher wins: each default applies only when the JVM was not started
+  * with that key as a system property, which is how `spark-submit --conf k=v`
+  * and `--master` reach the driver (and `java -Dk=v` for a plain launch). So
+  * `--conf spark.sql.shuffle.partitions=16` or `--master spark://...` take
+  * effect in every main unchanged; the `master` argument of [[builder]] is
+  * only the fallback for a direct `sbt runMain`.
   */
 object GraftSession {
 
@@ -16,14 +23,39 @@ object GraftSession {
   def defaultShufflePartitions: Int =
     math.max(Runtime.getRuntime.availableProcessors(), 4)
 
-  /** Master actually used: an externally supplied one wins. spark-submit
-    * injects `--master` as the `spark.master` system property; honoring it
-    * here lets the same mains (Verify/Bench/Stress) run unchanged under
-    * cluster submission — the in-process `local[n]` argument is only the
-    * fallback for direct `sbt runMain` invocation.
+  private val LocalN = """local\[(\d+)\]""".r
+
+  /** The settings [[builder]] applies for `master` when the launcher set the
+    * system properties `props`: the engine default of each key, or the
+    * launcher's value where `props` has that key. Shuffle partitions default
+    * to the `n` of a `local[n]` master, else [[defaultShufflePartitions]].
     */
-  def resolveMaster(fallback: String): String =
-    sys.props.getOrElse("spark.master", fallback)
+  private[graft] def settings(master: String,
+                              props: collection.Map[String, String]): Seq[(String, String)] = {
+    val m = props.getOrElse("spark.master", master)
+    val shuffle = m match {
+      case LocalN(n) => n
+      case _ => defaultShufflePartitions.toString
+    }
+    Seq(
+      "spark.master" -> m,
+      "spark.sql.shuffle.partitions" -> shuffle,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      // runtime bloom-filter pruning: big-join probe sides get filtered by a
+      // bloom built from the build side — free I/O reduction at scale
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.orc.enableVectorizedReader" -> "true",
+      "spark.sql.parquet.filterPushdown" -> "true",
+      "spark.ui.enabled" -> "false",
+      // deletes reliable checkpoint files once their frame is unreachable
+      // (spark.graft.reliableMaterialize); local checkpoints are unaffected
+      "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true"
+    ).map { case (k, v) => k -> props.getOrElse(k, v) }
+  }
 
   /** Core count for the mains' `local[n]` master: `SPARK_GRAFT_CPUS` when
     * set, else `default`. Fails with a message naming the variable instead
@@ -32,41 +64,29 @@ object GraftSession {
   def envCpus(default: Int): Int =
     positiveInt("SPARK_GRAFT_CPUS", sys.env.get("SPARK_GRAFT_CPUS"), default)
 
+  /** `raw` (an env var or argument called `name`) as a positive Int, or
+    * `default` when absent; anything else fails naming `name`.
+    */
   private[graft] def positiveInt(name: String, raw: Option[String],
-                                 default: Int): Int = raw match {
-    case None => default
-    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"$name must be a positive integer, got '$v'"))
-  }
+                                 default: Int): Int =
+    parsed(name, raw, default, "a positive integer")(_.toIntOption.filter(_ > 0))
+
+  /** `raw` as any Long (negative included), or `default` when absent. */
+  private[graft] def long(name: String, raw: Option[String], default: Long): Long =
+    parsed(name, raw, default, "an integer")(_.toLongOption)
+
+  private def parsed[T](name: String, raw: Option[String], default: T,
+                        what: String)(parse: String => Option[T]): T =
+    raw match {
+      case None => default
+      case Some(v) => parse(v.trim).getOrElse(
+        throw new IllegalArgumentException(s"$name must be $what, got '$v'"))
+    }
 
   def builder(master: String = "local[*]", appName: String = "graft"): SparkSession.Builder =
-    SparkSession
-      .builder()
-      .master(resolveMaster(master))
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", defaultShufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // runtime bloom-filter pruning: big-join probe sides get filtered by a
-      // bloom built from the build side — free I/O reduction at scale
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.orc.enableVectorizedReader", "true")
-      .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.ui.enabled", "false")
-      // deletes reliable checkpoint files once their frame is unreachable
-      // (spark.graft.reliableMaterialize); local checkpoints are unaffected
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-
-  def local(cores: Int = 0, appName: String = "graft"): SparkSession = {
-    val m = if (cores <= 0) "local[*]" else s"local[$cores]"
-    val s = builder(m, appName).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+    settings(master, sys.props).foldLeft(SparkSession.builder().appName(appName)) {
+      case (b, (k, v)) => b.config(k, v)
+    }
 
   /** Hive-metastore-backed builder (catalog layer, RCFile tables). The Derby
     * metastore lives next to the warehouse so each warehouse is a fully

@@ -19,8 +19,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The trade-off is fault tolerance: local checkpoints truncate lineage,
   * so on a cluster a lost executor fails the query instead of recomputing.
   * A cluster deployment flips ONE switch —
-  * `spark.graft.reliableMaterialize=true` (plus
-  * `sparkContext.setCheckpointDir` on a fault-tolerant filesystem) — and
+  * `spark.graft.reliableMaterialize=true` (plus a checkpoint dir on a
+  * fault-tolerant filesystem: `sparkContext.setCheckpointDir`, or
+  * `spark.checkpoint.dir` set at launch, which Spark applies when the
+  * context starts) — and
   * both forms become an eager reliable `checkpoint(true)`. Reliable
   * checkpoints must be eager: a lazy reliable checkpoint still recomputes
   * the frame once per consumer until something forces it, which is exactly
@@ -62,7 +64,7 @@ object Materialize {
     if (reliable(s)) {
       require(s.sparkContext.getCheckpointDir.isDefined,
         s"$ConfKey=true requires sparkContext.setCheckpointDir on a " +
-          "fault-tolerant filesystem")
+          "fault-tolerant filesystem (or spark.checkpoint.dir set at launch)")
       df.checkpoint(true)
     } else df.localCheckpoint(eager)
   }

@@ -1,42 +1,43 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import java.nio.file.Files
-
-/** Plan-audit helper: print the formatted physical plan of selected
-  * SparkEntry queries (comma-separated names in args(1), or all).
+/** Plan audit: prints the formatted physical plan of every selected
+  * SparkEntry query and runs the static scale gate
+  * ([[ScaleChecks.staticViolations]]) on it — no execution beyond the eager
+  * jobs a query runs while it is built.
   *
-  *   runMain graft.Plans <sfDir> q148_assoc_rules,q153_triangles
+  *   SPARK_GRAFT_ONLY=q148_assoc_rules,q153_triangles runMain graft.Plans <sfDir>
   *
   * Used to keep PLANS_r{N}.md honest — scans pruned, partial aggregates
   * ahead of exchanges, broadcasts where expected, no surprise nested
-  * loops.
+  * loops — and as the fast form of the gate Verify wires to exit 2: a
+  * full 600-plan hygiene pass without Verify's execution. Prints one
+  * `[gate] <query>: <violation>` line per violation and a `[gate] total`
+  * line; exits 2 on any violation, else 3 when a query failed to plan (a
+  * plan no check walked must not read as a pass). Run with
+  * `-Dspark.graft.explainMaterialize=true` to also print each materialize
+  * site's input plan (the final plan shows a Scan ExistingRDD stub there).
   */
 object Plans {
   def main(args: Array[String]): Unit = {
+    require(args.length == 1, "usage: graft.Plans <sfDir>")
     val sfDir = args(0)
-    val names: Set[String] =
-      if (args.length > 1) args(1).split(",").toSet else Set.empty
-    val cpus = GraftSession.envCpus(4)
-    val wh = Files.createTempDirectory("graft-plans-wh").toString
-    val spark = GraftSession.hiveBuilder(s"local[$cpus]", "graft-plans", wh)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // GRAFT_EXPLAIN_MATERIALIZE=1: also print each materialize site's
-    // pre-checkpoint input plan (the final plan shows a Scan ExistingRDD
-    // stub for those subtrees)
-    if (sys.env.get("GRAFT_EXPLAIN_MATERIALIZE").contains("1"))
-      spark.conf.set(Materialize.ExplainKey, "true")
-    SparkEntry.queries
-      .filter(kv => names.isEmpty || names.contains(kv._1))
-      .foreach { case (name, fn) =>
+    var nViolations = 0
+    val failed = Sweep.run("plans") { sweep =>
+      sweep.eachQuery { (name, fn) =>
         println(s"\n===== $name =====")
-        try fn(spark, sfDir).explain("formatted")
-        catch { case e: Throwable =>
-          println(s"[plans] $name failed: ${e.getMessage}")
+        val df = fn(sweep.spark, sfDir)
+        ScaleChecks.staticViolations(df).foreach { v =>
+          nViolations += 1
+          println(s"[gate] $name: $v")
         }
-        finally GraftSession.dropQueryState(spark)
-      }
+        df.explain("formatted")
+      }.collect { case (name, Left(e)) => (name, e) }
+    }
+    failed.foreach { case (name, e) =>
+      println(s"[gate] $name PLAN-FAILED: ${String.valueOf(e.getMessage).take(120)}")
+    }
+    println(s"[gate] total violations: $nViolations, plan failures: ${failed.size}")
+    if (nViolations > 0) sys.exit(2)
+    if (failed.nonEmpty) sys.exit(3)
   }
 }

@@ -90,7 +90,7 @@ object RelScale {
   def main(args: Array[String]): Unit = {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/tmp/relscale-f10")
-    val factor = args.lift(2).map(_.toInt).getOrElse(10)
+    val factor = GraftSession.positiveInt("factor", args.lift(2), 10)
     val cpus = GraftSession.envCpus(32)
     val spark = GraftSession.builder(s"local[$cpus]", "graft-relscale")
       .getOrCreate()

@@ -9,34 +9,48 @@ import org.apache.spark.sql.functions._
   * Near-linear growth in these timings is the evidence that the candidate
   * generation is bucket-bound, not quadratic.
   *
-  * Usage: runMain graft.Stress [sfDir] [factor]
+  * Usage: runMain graft.Stress [sfDir] [factor] [section]
+  *
+  * Shuffle partitions default to the core count; the 1M-vector probes need
+  * more, smaller reduce tasks so per-task sort buffers fit (32 tasks x wide
+  * candidate rows OOMed the spill) — set `spark.sql.shuffle.partitions` at
+  * launch (`--conf` or `-D`). Every fixture and index lives under one
+  * scratch dir that is deleted at exit.
   */
 object Stress {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    Sweep.withScratchDir("graft-stress")(scratch => run(args, scratch))
+
+  private def run(args: Array[String], scratch: java.nio.file.Path): Unit = {
     val sfDir  = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val factor = args.lift(1).map(_.toInt).getOrElse(20)
+    val factor = GraftSession.positiveInt("factor", args.lift(1), 20)
     // "docs" | "embed" | "events" | "all": re-run one family without
     // paying for the others
     val section = args.lift(2).getOrElse("all")
     val cpus   = GraftSession.envCpus(32)
-    // SPARK_GRAFT_SHUFFLE overrides shuffle partitions (default = cores):
-    // the 1M-vector probes need more, smaller reduce tasks so per-task
-    // sort buffers fit (32 tasks x wide candidate rows OOMed the spill)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
+    // SPARK_GRAFT_STATESTORE=advise runs the state-size ADVISOR in the
+    // stream section: the dedup state projection (the section's largest) is
+    // judged against the executor heap, and the backend switches to RocksDB
+    // only when the projection exceeds the budget — the operational form of
+    // the r6 "default OOMs at f500/8g, RocksDB completes" boundary. A fixed
+    // backend is Spark's own `spark.sql.streaming.stateStore.providerClass`.
+    val advise = sys.env.get("SPARK_GRAFT_STATESTORE") match {
+      case None => false
+      case Some("advise") => true
+      case Some(v) => throw new IllegalArgumentException(
+        s"SPARK_GRAFT_STATESTORE must be 'advise' or unset, got '$v'")
+    }
+    def scratchDir(name: String): String =
+      java.nio.file.Files.createDirectory(scratch.resolve(name)).toString
     val spark = GraftSession.builder(s"local[$cpus]", "graft-stress")
-      .config("spark.sql.shuffle.partitions", shuffle)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // --conf spark.graft.reliableMaterialize=true runs every checkpoint
     // (connected components, CELF, the lazy materialize sites) through
     // fault-tolerant DataFrame.checkpoint — the cluster-survival path,
-    // stress-timed so its overhead is a known number, not a guess
+    // stress-timed so its overhead is a known number, not a guess. Its
+    // checkpoint dir comes from the launcher: --conf spark.checkpoint.dir.
     val reliable = Materialize.reliable(spark)
-    if (reliable) {
-      val ckDir = java.nio.file.Files.createTempDirectory("stress-ckpt")
-      spark.sparkContext.setCheckpointDir(ckDir.toString)
-      println(s"[stress] reliable checkpoints -> $ckDir")
-    }
 
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
@@ -64,14 +78,12 @@ object Stress {
     // a probe's reading self-adjudicates without a quiet-window re-run
     val meter = new org.apache.spark.graft.BenchMetrics(spark.sparkContext)
     def time(name: String)(body: => Long): Unit = {
-      val c0 = meter.cpuSeconds()
-      val t0 = System.nanoTime()
-      val rows = body
-      val secs = (System.nanoTime() - t0) / 1e9
-      val cpu = meter.cpuSeconds() - c0
+      val m = meter.measure(body)
+      val rows = m.get
       GraftSession.dropQueryState(spark)
       rewarm()
-      println(f"[stress] $name%-22s $secs%8.2f s  (cpu $cpu%8.1f s)  ($rows rows)")
+      println(f"[stress] $name%-22s ${m.wallSeconds}%8.2f s  " +
+        f"(cpu ${m.cpuSeconds}%8.1f s)  ($rows rows)")
     }
 
     if (section == "docs" || section == "all") {
@@ -231,7 +243,7 @@ object Stress {
       (i + 1, decA((i % 10).toInt) + " " + decB(((i / 10) % 10).toInt) +
         " " + decC(((i / 100) % 10).toInt)))
       .toDF("query_id", "query_text")
-    val idxDir = java.nio.file.Files.createTempDirectory("stress-bm25").toString
+    val idxDir = scratchDir("bm25")
     time("bm25_index_build") {
       graft.llm.Search.writeSearchIndex(corpus, "text", "doc_id", idxDir)
       n
@@ -259,8 +271,7 @@ object Stress {
       concat(col("text"), lit(" tag"), pmod(col("doc_id"), lit(2000L))))
       .persist()
     tagged.count()
-    val zIdxDir = java.nio.file.Files
-      .createTempDirectory("stress-bm25-zipf").toString
+    val zIdxDir = scratchDir("bm25-zipf")
     time("bm25_zipf_index_build") {
       graft.llm.Search.writeSearchIndex(tagged, "text", "doc_id", zIdxDir)
       n
@@ -380,7 +391,7 @@ object Stress {
     // (scan cost scales with FILE COUNT, not bytes), z-order clustering
     // (row-group pruning on a 2-D box vs the as-ingested layout), and the
     // CDC merge (full-volume changelog against a per-key snapshot).
-    val whRoot = java.nio.file.Files.createTempDirectory("stress-wh").toString
+    val whRoot = scratchDir("wh")
     val frag = s"$whRoot/frag"
     // fragmented ingest: 2048 micro-appends' worth of files in one table
     time("wh_fragmented_write") {
@@ -510,7 +521,7 @@ object Stress {
     // serve a 1k-query batch — serving must read only probed cell dirs
     // (dynamic partition pruning), so its cost tracks nProbe/nCentroids of
     // the corpus, not the corpus
-    val ivfDir = java.nio.file.Files.createTempDirectory("stress-ivf").toString
+    val ivfDir = scratchDir("ivf")
     time("ivf_index_build") {
       graft.llm.Similarity.buildIvfIndex(evecs, "embedding", "vec_id",
         ivfDir, nCentroids = 64, kmeansIters = 2)
@@ -582,8 +593,7 @@ object Stress {
     // ADJACENTLY (a same-timestamp duplicate the dedup state must catch,
     // not one the watermark would drop as late), 10% duplicates total
     val uniqueIds = nEvRows * 9 / 10
-    val sdir = java.nio.file.Files.createTempDirectory("stress-stream")
-      .toString
+    val sdir = scratchDir("stream")
     val eid = expr("id * 9 div 10")
     spark.range(nEvRows).select(
         eid.as("event_id"),
@@ -608,24 +618,8 @@ object Stress {
         f.setLastModified(1700000000000L + i * 1000L)
       }
 
-    // SPARK_GRAFT_STATESTORE=rocksdb swaps the state store backend for the
-    // whole stream section — the r5 open question: stream_dedup fell to
-    // 1.87M rows/s at factor 500 (90M-row output + the default HDFS-backed
-    // store); RocksDB keeps state off-heap with incremental snapshots.
-    // Measured at every factor before any thought of adopting as default.
-    // SPARK_GRAFT_STATESTORE=advise runs the state-size ADVISOR instead:
-    // the dedup state projection (the section's largest) is judged against
-    // the executor heap, and the backend switches to RocksDB only when the
-    // projection exceeds the budget — the operational form of the r6
-    // "default OOMs at f500/8g, RocksDB completes" boundary.
-    var dedupAdvice: Option[EventStreams.StateAdvice] = None
-    sys.env.get("SPARK_GRAFT_STATESTORE") match {
-      case Some("rocksdb") =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state" +
-            ".RocksDBStateStoreProvider")
-        println("[stress] state store: RocksDB")
-      case Some("advise") =>
+    val dedupAdvice: Option[EventStreams.StateAdvice] =
+      if (!advise) None else {
         val dedupStateSchema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("event_id",
             org.apache.spark.sql.types.LongType),
@@ -648,18 +642,16 @@ object Stress {
           autoSwitch = true,
           rocksDbRowBytes =
             EventStreams.estimatedRocksDbRowBytes(dedupStateSchema))
-        dedupAdvice = Some(advice)
         println(s"[stress] state advisor: ${advice.recommendation}")
         println(s"[stress] state store: " +
           (if (advice.switched) "RocksDB (advised)" else "default (advised)"))
-      case _ => ()
-    }
+        Some(advice)
+      }
 
     def runStream(name: String, expectRows: Option[Long])
                  (mk: org.apache.spark.sql.DataFrame =>
                     org.apache.spark.sql.DataFrame): Unit = {
-      val ck = java.nio.file.Files
-        .createTempDirectory(s"stress-ck-$name").toString
+      val ck = scratchDir(s"ck-$name")
       // AtomicLong: foreachBatch runs on the stream-execution thread; the
       // final read below is from the main thread after processAllAvailable,
       // so the counter needs an explicit memory barrier, not the incidental
@@ -674,9 +666,9 @@ object Stress {
           outRowsAcc.addAndGet(df.count()); ()
         }
         .start()
-      val t0 = System.nanoTime()
-      q.processAllAvailable()
-      val secs = (System.nanoTime() - t0) / 1e9
+      val drain = meter.measure(q.processAllAvailable())
+      drain.get
+      val secs = drain.wallSeconds
       val stateRows = Option(q.lastProgress)
         .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
       val stateBytes = Option(q.lastProgress)

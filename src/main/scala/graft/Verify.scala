@@ -1,19 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    require(args.length == 2, "usage: graft.Verify <sfDir> <outDir>")
     val Array(sfDir, outDir) = args
-    val cpus = GraftSession.envCpus(4)
-    // Hive support: the catalog queries (q68-q70) create metastore tables.
-    // A fresh temp warehouse per run keeps the Derby metastore isolated.
-    val wh = Files.createTempDirectory("graft-verify-wh").toString
-    val spark = GraftSession.hiveBuilder(s"local[$cpus]", "graft-verify", wh)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // wipe stale results: a leftover dir from a removed/renamed query would
     // otherwise be compared as if current. Guarded: only entries this tool
     // itself writes (q*-named dirs, oracle_sql.json) are deleted, so a
@@ -30,30 +22,23 @@ object Verify {
       }
     }
     out.mkdirs()
-    // SPARK_GRAFT_ONLY=q121_repeated_spans,... — dump/compare a subset while
-    // iterating locally (the driver never sets it, so its gate stays full).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    def selected(name: String) = only.forall(_.contains(name))
     // Scale-shape gate: every query's plan is statically audited (no extra
     // execution — analysis/optimization only) for hint-forced broadcasts of
     // unreduced growing tables, unreduced single-partition windows, and
     // growing x growing conditionless joins. Violations fail the run so a
     // scale regression reddens the round even when the sf0.01 oracle is
     // green (the r5 q281/q299 class). See ScaleChecks for the property.
+    // SPARK_GRAFT_ONLY dumps/compares a subset while iterating locally.
     val scaleViolations = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
+    val selected = Sweep.run("verify") { sweep =>
+      sweep.eachQuery { (name, fn) =>
+        val df = fn(sweep.spark, sfDir)
         ScaleChecks.staticViolations(df).foreach { v =>
           scaleViolations += s"$name: $v"
           System.err.println(s"[verify][scale-audit] $name: $v")
         }
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      }
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      finally GraftSession.dropQueryState(spark)
+      }.map(_._1).toSet
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -72,7 +57,6 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/scale_audit.json"),
       scaleViolations.map(q).mkString("[", ",", "]"))
-    spark.stop()
     if (scaleViolations.nonEmpty) {
       System.err.println(
         s"[verify] SCALE-AUDIT FAILED: ${scaleViolations.size} violations " +

@@ -34,23 +34,15 @@ import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
   * text, raw JSON props, dense embeddings, binary media) — the row-width
   * class of bug the r4 embeddingPairs fix removed.
   *
-  * Usage: runMain graft.WindowAudit [sfDir] [rowThreshold] [onlyCsv]
-  * rowThreshold < 0 dumps per-query maxima (`[dump] <q> <win> <bcast>
-  * <loop> <shuffled> <scanned> <wideMax>[,rows:cols...]`) for cross-sf
-  * comparison instead of flagging.
+  * Usage: runMain graft.WindowAudit [sfDir] [rowThreshold]
+  * (`SPARK_GRAFT_ONLY` picks queries). rowThreshold < 0 dumps per-query
+  * maxima (`[dump] <q> <win> <bcast> <loop> <shuffled> <scanned>
+  * <wideMax>[,rows:cols...]`) for cross-sf comparison instead of flagging.
   */
 object WindowAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val threshold = args.lift(1).map(_.toLong).getOrElse(5000L)
-    val only = args.lift(2).map(_.split(",").toSet)
-    val wh = java.nio.file.Files.createTempDirectory("graft-audit-wh").toString
-    val spark = GraftSession.hiveBuilder("local[32]", "graft-window-audit", wh)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
+    val threshold = GraftSession.long("rowThreshold", args.lift(1), 5000L)
     // rows reaching `p`: descend through 1:1 row-preserving nodes until a
     // node that reports output rows
     def inputRows(p: SparkPlan): Option[Long] = {
@@ -81,10 +73,10 @@ object WindowAudit {
 
     var worst = List.empty[(String, String, Long, String)]
     var nWin, nBcast, nLoop, nHintForced = 0
-    var failed = List.empty[String]
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-         if only.forall(_.contains(name))) {
-      try {
+    val failed = Sweep.run("window-audit") { sweep =>
+      val spark = sweep.spark
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      sweep.eachQuery { (name, fn) =>
         val df = fn(spark, sfDir)
         // structural layer: broadcasts below are classified planner-chosen
         // vs hint-forced from the ANALYZED plan (ResolvedHint), not by
@@ -177,12 +169,7 @@ object WindowAudit {
           if (threshold >= 0 && (rows > threshold || rows < 0))
             worst ::= ((name, kind, rows, chain))
         }
-        GraftSession.dropQueryState(spark)
-      } catch {
-        // String.valueOf: a null-message exception (NPE) must record the
-        // failed query, not abort the audit loop from inside the handler
-        case e: Exception => failed ::= s"$name: ${String.valueOf(e).take(120)}"
-      }
+      }.collect { case (name, Left(e)) => s"$name: ${String.valueOf(e).take(120)}" }
     }
     println(s"[audit] audited: $nWin single-partition windows, " +
       s"$nBcast broadcasts, $nLoop nested-loop joins; " +
@@ -196,6 +183,5 @@ object WindowAudit {
       println(s"[audit] FAILED queries: ${failed.size}")
       failed.foreach(f => println(s"[audit]   $f"))
     }
-    spark.stop()
   }
 }

@@ -112,7 +112,7 @@ object Profile {
     * chosen over [[PrefixSum.exactPercentiles]] deliberately: it is fully
     * DECLARATIVE (no driver reads), so this op stays LAZY — building the
     * DataFrame runs no jobs, the contract every plan-only consumer
-    * (ScaleGate, Explain, library composition) relies on. Edges broadcast
+    * (Plans, library composition) relies on. Edges broadcast
     * as one array, bin assignment is a strict-compare count against that
     * array (identical doubles on any engine — the same interpolation
     * parity as q44), then one partial-agg'd count pass. min/max per

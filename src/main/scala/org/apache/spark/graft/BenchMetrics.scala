@@ -33,6 +33,27 @@ class BenchMetrics(sc: SparkContext) {
     catch { case _: java.util.concurrent.TimeoutException => () }
     cpuNs.get() / 1e9
   }
+
+  /** Runs `body` once: its wall seconds, the executor CPU seconds of the
+    * tasks it ran, and its result or the failure it threw. The one timing
+    * path of the mains; a failure is returned, not thrown, so the caller
+    * decides whether it ends the run.
+    */
+  def measure[T](body: => T): BenchMetrics.Measured[T] = {
+    val c0 = cpuSeconds()
+    val t0 = System.nanoTime()
+    val result = try Right(body) catch { case e: Throwable => Left(e) }
+    val wall = (System.nanoTime() - t0) / 1e9
+    BenchMetrics.Measured(wall, cpuSeconds() - c0, result)
+  }
+}
+
+object BenchMetrics {
+  final case class Measured[T](wallSeconds: Double, cpuSeconds: Double,
+                               result: Either[Throwable, T]) {
+    /** The result, or the failure rethrown. */
+    def get: T = result.fold(e => throw e, identity)
+  }
 }
 
 /** Spark-job counter for specs that pin HOW a path executed, not just its

@@ -137,17 +137,18 @@ class ScaleHygieneSpec extends AnyFunSuite {
         offenders.mkString("\n  "))
   }
 
-  test("every checkpoint in main code goes through Materialize") {
-    // a direct localCheckpoint/checkpoint call would ignore
-    // spark.graft.reliableMaterialize and stay lineage-cutting on a cluster
-    val call = """localCheckpoint\(|\.checkpoint\(""".r
+  /** `file:line: code` of every main-source line outside `allowedFile`
+    * whose code (comments blanked) matches `call`.
+    */
+  private def callsOutside(call: scala.util.matching.Regex,
+                           allowedFile: String): List[String] = {
     val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
     val sources = Using.resource(Files.walk(Paths.get("src/main/scala"))) {
       _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
     }
     assert(sources.nonEmpty, "no main sources found (cwd moved?)")
-    val offenders = sources
-      .filter(_.getFileName.toString != "Materialize.scala")
+    sources
+      .filter(_.getFileName.toString != allowedFile)
       .flatMap { p =>
         // blank comments out but keep their newlines, so lines still match
         val code = comment.replaceAllIn(new String(Files.readAllBytes(p)),
@@ -157,8 +158,24 @@ class ScaleHygieneSpec extends AnyFunSuite {
             s"$p:${i + 1}: ${line.trim}"
         }
       }
+  }
+
+  test("every checkpoint in main code goes through Materialize") {
+    // a direct localCheckpoint/checkpoint call would ignore
+    // spark.graft.reliableMaterialize and stay lineage-cutting on a cluster
+    val offenders = callsOutside("""localCheckpoint\(|\.checkpoint\(""".r,
+      "Materialize.scala")
     assert(offenders.isEmpty,
       s"checkpoint calls outside Materialize:\n  " + offenders.mkString("\n  "))
+  }
+
+  test("every timing in main code goes through BenchMetrics.measure") {
+    // one timing path: wall and executor CPU are read the same way by
+    // Bench and Stress, so their numbers stay comparable
+    val offenders = callsOutside("""System\.(nanoTime|currentTimeMillis)""".r,
+      "BenchMetrics.scala")
+    assert(offenders.isEmpty,
+      s"clock reads outside BenchMetrics.measure:\n  " + offenders.mkString("\n  "))
   }
 
   test("the query gallery never self-declares a bounded broadcast batch") {

@@ -99,7 +99,6 @@ def run_isolated(query, sf, repeat, cpus):
                SPARK_GRAFT_SF_DIR=sf,
                SPARK_GRAFT_REPEAT=str(repeat),
                SPARK_GRAFT_CPUS=str(cpus),
-               SPARK_GRAFT_SHUFFLE=str(cpus),
                SPARK_GRAFT_BENCH_JSON=out)
     if LAUNCHER == "standalone":
         r = subprocess.run(
@@ -112,6 +111,7 @@ def run_isolated(query, sf, repeat, cpus):
             [SPARK_SUBMIT, "--master", f"local[{cpus}]",
              "--driver-memory", "8g",
              "--conf", "spark.ui.enabled=false",
+             "--conf", f"spark.sql.shuffle.partitions={cpus}",
              "--class", "graft.Bench", JAR],
             env=env, cwd=REPO, stdout=subprocess.PIPE,
             stderr=subprocess.STDOUT, text=True)

@@ -43,11 +43,6 @@ case "$SUBSET" in
   *)          ONLY=$SUBSET ;;
 esac
 export SPARK_GRAFT_BENCH_JSON=${SPARK_GRAFT_BENCH_JSON:-/tmp/graft_standalone_bench.json}
-# Bench's own builder sets shuffle partitions from SPARK_GRAFT_SHUFFLE
-# (builder config WINS over spark-submit --conf), so the knob must be the
-# env var — a --conf here would be dead and the run would silently use
-# Bench's default of 4.
-export SPARK_GRAFT_SHUFFLE=${SPARK_GRAFT_SHUFFLE:-32}
 
 echo "[sbench] packaging..."
 (cd "$REPO" && sbt -batch package) || exit 1
@@ -76,4 +71,5 @@ SPARK_GRAFT_REPEAT=$REPEAT \
   --driver-memory 8g \
   --conf spark.executor.cores=8 --conf spark.executor.memory=10g \
   --conf spark.ui.enabled=false \
+  --conf spark.sql.shuffle.partitions=32 \
   --class graft.Bench "$JAR" | grep -E '"metric"|BENCH_JSON'

@@ -10,7 +10,8 @@
 #      matrices, Hive catalog writes, IVF partitioned index, CELF driver
 #      loop, multimodal mapPartitions).
 #   2. graft.Stress cc section with spark.graft.reliableMaterialize=true —
-#      fault-tolerant DataFrame.checkpoint across executors.
+#      fault-tolerant DataFrame.checkpoint across executors, into
+#      spark.checkpoint.dir ($SMOKE_HOME/ckpt, removed at exit).
 #   3. graft.StreamSmoke — streaming state-store checkpoint restart across
 #      executor JVMs.
 # Usage: tools/standalone_smoke.sh [outDir] [sfDir]
@@ -41,6 +42,7 @@ echo "[smoke] packaging..."
 cleanup() {
   SPARK_WORKER_INSTANCES=2 "$SPARK_HOME/sbin/stop-worker.sh" >/dev/null 2>&1
   "$SPARK_HOME/sbin/stop-master.sh" >/dev/null 2>&1
+  rm -rf "$SMOKE_HOME/ckpt"
 }
 trap cleanup EXIT
 cleanup   # clear any stale daemons from a previous run
@@ -65,8 +67,9 @@ python3 "$REPO/tools/check.py" "$SF" "$OUT" || \
   { echo "[smoke] check.py FAILED"; exit 1; }
 
 echo "[smoke] 2/3 connected components with reliable checkpoints"
-SPARK_GRAFT_SHUFFLE=16 "${SUBMIT[@]}" \
+"${SUBMIT[@]}" \
   --conf spark.graft.reliableMaterialize=true \
+  --conf spark.checkpoint.dir="$SMOKE_HOME/ckpt" \
   --class graft.Stress "$JAR" "$SF" 2 cc || \
   { echo "[smoke] Stress cc FAILED"; exit 1; }
 
