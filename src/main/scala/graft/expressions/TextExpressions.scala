@@ -1,7 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.ColumnShim
@@ -28,6 +28,15 @@ object TextExpressions {
     */
   def ngramHashes(tokens: Column, n: Int): Column =
     ColumnShim.column(NgramHashes(ColumnShim.expression(tokens), n))
+
+  /** The (idB, jaccard) pairs of one document A at or above `threshold`,
+    * from A's rare-gram count `szA` and the posting-list tails A collected
+    * (`array<array<struct<id, sz>>>`: for each of A's grams, the entries
+    * after A in that gram's id-sorted list). See [[JaccardOverlap]].
+    */
+  def jaccardOverlap(szA: Column, tails: Column, threshold: Double): Column =
+    ColumnShim.column(JaccardOverlap(
+      ColumnShim.expression(szA), ColumnShim.expression(tails), threshold))
 
   /** Fraction of positions at which two equal-length long arrays agree —
     * the MinHash Jaccard estimate.
@@ -169,6 +178,79 @@ object NgramHashes {
       i += 1
     }
     new GenericArrayData(out)
+  }
+}
+
+/** Per-document overlap kernel of the n-gram Jaccard pairs: counts how
+  * often each B occurs across A's posting-list tails (an open-addressing
+  * long-keyed table sized to the tails, so the buffer is bounded by A's
+  * rare-gram count x the df cap) and keeps B where
+  * `inter / (szA + szB - inter) >= threshold` — the same long arithmetic
+  * and double division as a relational count join, so the values are
+  * bit-identical. Only B sharing at least one gram with A is ever counted.
+  * The threshold is a reference object, not a literal in the generated
+  * code, so every threshold shares one compiled class.
+  */
+case class JaccardOverlap(left: Expression, right: Expression, threshold: Double)
+    extends BinaryExpression {
+
+  override def dataType: DataType = JaccardOverlap.ResultType
+
+  override def nullSafeEval(szA: Any, tails: Any): Any =
+    JaccardOverlap.compute(szA.asInstanceOf[Long], tails.asInstanceOf[ArrayData], threshold)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val t = ctx.addReferenceObj("threshold", threshold, "java.lang.Double")
+    defineCodeGen(ctx, ev, (s, a) =>
+      s"graft.expressions.JaccardOverlap.compute($s, $a, $t.doubleValue())")
+  }
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object JaccardOverlap {
+  val ResultType: DataType = ArrayType(StructType(Seq(
+    StructField("idB", LongType, nullable = false),
+    StructField("jaccard", DoubleType, nullable = false))), containsNull = false)
+
+  /** The per-row kernel, shared by interpreted eval and generated code. */
+  def compute(szA: Long, tails: ArrayData, threshold: Double): ArrayData = {
+    val nt = tails.numElements()
+    var total = 0
+    var i = 0
+    while (i < nt) { total += tails.getArray(i).numElements(); i += 1 }
+    // power-of-two table at load <= 1/2
+    val mask = Integer.highestOneBit(math.max(total, 1)) * 4 - 1
+    val ids  = new Array[Long](mask + 1)
+    val szs  = new Array[Long](mask + 1)
+    val hits = new Array[Int](mask + 1) // 0 = empty slot
+    i = 0
+    while (i < nt) {
+      val tail = tails.getArray(i)
+      var j = 0
+      while (j < tail.numElements()) {
+        val e = tail.getStruct(j, 2)
+        val id = e.getLong(0)
+        var slot = VectorExpressions.mix64(id).toInt & mask
+        while (hits(slot) != 0 && ids(slot) != id) slot = (slot + 1) & mask
+        if (hits(slot) == 0) { ids(slot) = id; szs(slot) = e.getLong(1) }
+        hits(slot) += 1
+        j += 1
+      }
+      i += 1
+    }
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    var slot = 0
+    while (slot <= mask) {
+      val inter = hits(slot).toLong
+      if (inter != 0) {
+        val jaccard = inter.toDouble / (szA + szs(slot) - inter).toDouble
+        if (jaccard >= threshold) out += new GenericInternalRow(Array[Any](ids(slot), jaccard))
+      }
+      slot += 1
+    }
+    new GenericArrayData(out.toArray)
   }
 }
 

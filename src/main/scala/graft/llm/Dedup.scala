@@ -486,15 +486,22 @@ object Dedup {
     * with document frequency outside [2, maxShingleFreq] are removed globally
     * BEFORE pair generation, and the Jaccard is defined on the remaining
     * sets. df=1 shingles can't create a pair; df>max shingles are
-    * boilerplate that would make the posting-list self-join quadratic in
-    * the hottest key.
+    * boilerplate that would make every posting list quadratic in the
+    * hottest key.
     *
     * Two candidate strategies (both produce the identical exact result —
     * spec-tested against brute force):
     *
-    *   - COUNT JOIN (default) — self-join the full rare posting list on the
-    *     gram and count matches per (idA, idB); pure hash aggregation over
-    *     16-byte rows, no per-pair arrays.
+    *   - OVERLAP KERNEL (default) — the rare posting list, each entry
+    *     carrying its doc's rare-gram count, is grouped by gram into
+    *     id-sorted lists of at most `maxShingleFreq` entries; every doc A
+    *     collects the entries after it in each of its lists, and one
+    *     codegen'd expression per A
+    *     ([[graft.expressions.JaccardOverlap]]) counts each B and emits
+    *     only the pairs at or above the threshold. No pair row exists
+    *     below the threshold: at sf0.1 (q25, t=0.3) a relational self-join
+    *     emitted 4.9M pair rows in 4.2M groups for 6,024 kept pairs. A's
+    *     buffer is bounded by its rare-gram count x the df cap.
     *   - PREFIX FILTERING (`prefixFilter = Some(true)`; AllPairs/PPJoin
     *     family) — grams get a global rarity order (df asc, gram); a pair
     *     with Jaccard >= t must share a gram within each doc's
@@ -503,13 +510,15 @@ object Dedup {
     *     verified with one codegen'd array_intersect per pair (gram arrays
     *     join back by id only for the bounded candidate set).
     *
-    * Measured on the 100k-doc stress corpus (short ~150-gram lists, heavy
-    * near-dup clusters) the count join wins at every threshold (t=0.8:
-    * 8.7s vs 12.3s) — replicas collide on rare grams anyway, so the prefix
-    * prunes little while adding a per-doc rarity sort. Prefix filtering is
-    * the right tool when posting lists are long and most candidate pairs
-    * are dissimilar (classic web-scale near-dup at t >= 0.8 over full-page
-    * shingle sets); it is kept as an explicit opt-in for that regime.
+    * Measured on the 50k-doc stress corpus at local[4] (short ~150-gram
+    * lists, heavy near-dup clusters; `graft.Stress <sf0.1> 10 docs`), the
+    * overlap kernel beats prefix filtering at t=0.8: 5.8 s vs 15.0 s wall
+    * (the relational self-join it replaced took 32.7 s) — replicas collide
+    * on rare grams anyway, so the prefix prunes little while adding a
+    * per-doc rarity sort. Prefix
+    * filtering is meant for long posting lists where most candidate pairs
+    * are dissimilar (web-scale near-dup at t >= 0.8 over full-page shingle
+    * sets); it is kept as an explicit opt-in for that regime.
     */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                         n: Int = 3, threshold: Double = 0.3,
@@ -532,28 +541,24 @@ object Dedup {
       .materialize
 
     if (!prefixFilter.getOrElse(false)) {
-      val sizes = rp.groupBy(col("__id")).agg(count(lit(1)).as("__sz"))
-      // shuffle_hash on the self-join: the planner's stats-based choice
-      // broadcasts the full rare posting list (driver-side collect + hash
-      // build, serial — measured ~3 s of the kernel's ~5 s wall at sf0.1);
-      // a shuffled hash join keeps both sides in parallel 32-task
-      // exchanges at identical CPU (r9 shj probe: wall 6.1→2.7 s, CPU
-      // 7.5→7.8 s). At corpus scale the df cap bounds per-gram skew and
-      // AQE advisory sizing bounds the post-shuffle build partitions, so
-      // the build side stays partition-sized.
-      val inter = rp.select(col("__g"), col("__id").as("idA"))
-        .join(rp.select(col("__g"), col("__id").as("idB")).hint("shuffle_hash"),
-          Seq("__g"))
-        .filter(col("idA") < col("idB"))
-        .groupBy(col("idA"), col("idB"))
-        .agg(count(lit(1)).as("__inter"))
-      inter
-        .join(sizes.select(col("__id").as("idA"), col("__sz").as("__szA")), Seq("idA"))
-        .join(sizes.select(col("__id").as("idB"), col("__sz").as("__szB")), Seq("idB"))
-        .withColumn("jaccard", col("__inter").cast("double") /
-          (col("__szA") + col("__szB") - col("__inter")).cast("double"))
-        .filter(col("jaccard") >= threshold)
-        .select(col("idA"), col("idB"), col("jaccard"))
+      // each posting entry carries its doc's rare-gram count; a null id
+      // pairs with nothing, as in `idA < idB`
+      val sized = rp.filter(col("__id").isNotNull)
+        .groupBy(col("__id")).agg(collect_list(col("__g")).as("__gs"))
+        .select(explode(col("__gs")).as("__g"),
+          struct(col("__id"), size(col("__gs")).cast("long").as("__sz")).as("__e"))
+      val lists = sized.groupBy(col("__g"))
+        .agg(sort_array(collect_list(col("__e"))).as("__pl"))
+      // doc A at position p of a list takes the entries after it
+      val tails = lists.select(col("__pl"), posexplode(col("__pl")))
+        .filter(col("pos") < size(col("__pl")) - 1)
+        .select(col("col.__id").as("idA"), col("col.__sz").as("__szA"),
+          slice(col("__pl"), col("pos") + 2, size(col("__pl")) - col("pos") - 1)
+            .as("__tail"))
+      tails.groupBy(col("idA"), col("__szA"))
+        .agg(collect_list(col("__tail")).as("__tails"))
+        .select(col("idA"), inline(graft.expressions.TextExpressions
+          .jaccardOverlap(col("__szA"), col("__tails"), threshold)))
     } else {
       // per-doc: size and the full sorted gram-set array (for verification)
       val sets = rp.groupBy(col("__id"))
@@ -573,9 +578,9 @@ object Dedup {
         .filter(col("__rk") <= ceil((lit(1.0) - threshold) * col("__sz")) + 1)
         .select(col("__g"), col("__id"))
 
-      // shuffle_hash for the same reason as the count-join branch: the
-      // planner's stats-based choice broadcasts the prefix posting list
-      // (serial driver-side build); both sides belong in parallel exchanges
+      // shuffle_hash: the planner's stats-based choice broadcasts the
+      // prefix posting list (a serial driver-side build); both sides belong
+      // in parallel exchanges
       val cand = prefix.select(col("__g"), col("__id").as("idA"))
         .join(prefix.select(col("__g"), col("__id").as("idB"))
           .hint("shuffle_hash"), Seq("__g"))

@@ -477,9 +477,9 @@ object Search {
       .materialize
     val norms = w.groupBy(col("doc_id"))
       .agg(sqrt(sum(col("w") * col("w"))).as("norm"))
-    // shuffle_hash: same serial-broadcast-build avoidance as the n-gram
-    // kernel's self-join (Dedup.ngramJaccardPairs) — df-capped postings,
-    // parallel exchanges instead of a driver-built broadcast
+    // shuffle_hash: same serial-broadcast-build avoidance as the prefix
+    // branch of Dedup.ngramJaccardPairs — df-capped postings, parallel
+    // exchanges instead of a driver-built broadcast
     w.select(col("term"), col("doc_id").as("idA"), col("w").as("wa"))
       .join(w.select(col("term"), col("doc_id").as("idB"), col("w").as("wb"))
         .hint("shuffle_hash"), Seq("term"))

@@ -116,6 +116,44 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("ngram jaccard overlap kernel equals brute force on id, df-cap and threshold edges") {
+    // unigrams; cap 3: "cap" (df 3) is kept, "hot" (df 4) is dropped, s*
+    // (df 1) are dropped, so doc e's rare set is empty
+    val (a, b, c, d, e) = (-7L, (1L << 41) + 3, -(1L << 42), 5L, (1L << 40) + 9)
+    val docs = Seq(
+      a -> "cap x1 x2 hot sa",
+      b -> "cap x1 x2 hot sb",
+      c -> "cap y1 hot",
+      d -> "y1 sd",
+      e -> "se1 se2 hot").toDF("doc_id", "text")
+    val sets = docs.as[(Long, String)].collect().toSeq
+      .map { case (id, t) => id -> t.split(" ").toSet }
+    val df = sets.flatMap(_._2).groupBy(identity).map { case (g, gs) => g -> gs.size }
+    val rare = sets.map { case (id, gs) =>
+      id -> gs.filter(g => df(g) >= 2 && df(g) <= 3) }.toMap
+    assert(rare(e).isEmpty && rare(a) == Set("cap", "x1", "x2"))
+    def brute(t: Double) = (for {
+      (x, gx) <- rare.toSeq; (y, gy) <- rare.toSeq
+      if x < y && (gx & gy).nonEmpty
+      inter = (gx & gy).size
+      jac = inter.toDouble / (gx.size + gy.size - inter)
+      if jac >= t
+    } yield (x, y, jac)).toSet
+    // jaccard(c, a) = jaccard(c, b) = 1/4 and jaccard(c, d) = 1/2 exactly
+    val expected = Map(
+      0.0  -> Set((c, a, 0.25), (c, b, 0.25), (c, d, 0.5), (a, b, 1.0)),
+      0.25 -> Set((c, a, 0.25), (c, b, 0.25), (c, d, 0.5), (a, b, 1.0)),
+      0.5  -> Set((c, d, 0.5), (a, b, 1.0)))
+    for ((t, exp) <- expected; prefix <- Seq(false, true)) {
+      val got = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
+          n = 1, threshold = t, maxShingleFreq = 3, prefixFilter = Some(prefix))
+        .as[(Long, Long, Double)].collect().toSet
+      assert(brute(t) == exp, s"t=$t brute force disagrees with the fixture")
+      assert(got == exp, s"t=$t prefix=$prefix " +
+        s"missing=${exp -- got} spurious=${got -- exp}")
+    }
+  }
+
   test("connectedComponents: chain, triangle, isolated pair, long path") {
     // components: {1,2,3,4} (chain), {10,11,12} (triangle), {20,21} (pair),
     // {30..39} (10-node path — exercises multi-round propagation)

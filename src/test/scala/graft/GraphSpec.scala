@@ -79,7 +79,7 @@ class GraphSpec extends AnyFunSuite {
         spark.sparkContext.setCheckpointDir(null)
         Graph.labelPropagate(pairs, seeds, nIter = 2)
       }
-      val dir = java.nio.file.Files.createTempDirectory("graft-lp-ckpt").toString
+      val dir = TestSpark.tmpDir("graft-lp-ckpt")
       spark.sparkContext.setCheckpointDir(dir)
       try {
         val out = Graph.labelPropagate(pairs, seeds, nIter = 2)
@@ -140,7 +140,7 @@ class GraphSpec extends AnyFunSuite {
         spark.sparkContext.setCheckpointDir(null)
         Graph.hits(edges, nIter = 3)
       }
-      val dir = java.nio.file.Files.createTempDirectory("graft-hits-ckpt").toString
+      val dir = TestSpark.tmpDir("graft-hits-ckpt")
       spark.sparkContext.setCheckpointDir(dir)
       try {
         val out = Graph.hits(edges, nIter = 3)

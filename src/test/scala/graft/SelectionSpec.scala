@@ -71,7 +71,7 @@ class SelectionSpec extends AnyFunSuite {
         spark.sparkContext.setCheckpointDir(null)
         Selection.greedyMaxCover(items, 2)
       }
-      val dir = java.nio.file.Files.createTempDirectory("graft-sel-ckpt").toString
+      val dir = TestSpark.tmpDir("graft-sel-ckpt")
       spark.sparkContext.setCheckpointDir(dir)
       try {
         val picks = Selection.greedyMaxCover(items, 3, celfBatch = 1)

@@ -422,7 +422,7 @@ class WarehouseOpsSpec extends AnyFunSuite {
     val df = spark.range(n).select(
       (col("id") * 2654435761L % n).as("a"),
       (col("id") * 40503L % n).as("b"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val dir = TestSpark.tmpDir("graft-zorder")
     // baseline: lexicographic sort by a -> b spans stay ~full-range
     df.repartitionByRange(8, col("a")).sortWithinPartitions(col("a"))
       .write.mode("overwrite").parquet(s"$dir/lex")
