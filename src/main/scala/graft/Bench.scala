@@ -8,6 +8,14 @@ package graft
   * select-only query would degenerate to a parquet row-count). A warmup pass
   * touches every table so first-query timings don't absorb session/footer
   * initialization.
+  *
+  * Per query the record holds the min wall and min executor CPU seconds of
+  * `SPARK_GRAFT_REPEAT` runs (`queries`, `cpu_queries`) and the codegen
+  * compiles of the LAST run (`compiles_queries`, summed in
+  * `compiles_total`): this JVM's `CodegenMetrics` count, so task compiles
+  * too under `local[n]`. With a repeat of 2 or more it counts the classes
+  * Spark's codegen cache did not keep from the run before, plus any whose
+  * generated source differs from run to run.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -43,20 +51,24 @@ object Bench {
             fn(spark, sfDir).write.format("noop").mode("overwrite").save())
         }
         runs.foreach(_.get) // a failed run fails the query: -1 below
-        (runs.map(_.wallSeconds).min, runs.map(_.cpuSeconds).min)
+        (runs.map(_.wallSeconds).min, runs.map(_.cpuSeconds).min,
+          runs.last.compiles)
       }
       (sweep.cpus, timed.map { case (name, r) =>
-        (name, r.fold(_ => -1.0, _._1), r.fold(_ => -1.0, _._2)) })
+        (name, r.fold(_ => -1.0, _._1), r.fold(_ => -1.0, _._2),
+          r.fold(_ => -1L, _._3)) })
     }
-    val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val cq = results.map { case (k, _, c) => "\"" + k + "\":" + f"$c%.3f" }
-      .mkString("{", ",", "}")
-    val errs = results.collect { case (k, v, _) if v < 0 => "\"" + k + "\"" }
+    def byQuery[V](f: ((String, Double, Double, Long)) => V): String =
+      results.map(r => "\"" + r._1 + "\":" + f(r)).mkString("{", ",", "}")
+    val qs = byQuery(_._2)
+    val cq = byQuery(r => f"${r._3}%.3f")
+    val kq = byQuery(_._4)
+    val errs = results.collect { case (k, v, _, _) if v < 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
     val cpuTotal = results.map(_._3).filter(_ >= 0).sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu_queries":$cq,"cpu_total":${f"$cpuTotal%.1f"},"errors":$errs,"repeat":$repeat,"sf":"$sfDir"}"""
+    val compilesTotal = results.map(_._4).filter(_ >= 0).sum
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu_queries":$cq,"cpu_total":${f"$cpuTotal%.1f"},"compiles_queries":$kq,"compiles_total":$compilesTotal,"errors":$errs,"repeat":$repeat,"sf":"$sfDir"}"""
     // The full JSON also goes to a FILE: the driver's stdout capture
     // truncates long lines (600 wall + 600 CPU entries), and a tail cut
     // mid-map invites misreads (r6: a CPU-map tail diffed against an r5
@@ -118,9 +130,9 @@ object Bench {
     val nErr = results.count(_._2 < 0)
     // error names capped at 5 so a pathological all-fail run can't push
     // this line past the tail capture either; the file has the full list
-    val errsCapped = results.collect { case (k, v, _) if v < 0 => "\"" + k + "\"" }
+    val errsCapped = results.collect { case (k, v, _, _) if v < 0 => "\"" + k + "\"" }
       .take(5).mkString("[", ",", "]")
-    val summary = s"""{"metric":"total","value":${f"$total%.1f"},"unit":"sec","cpu_total":${f"$cpuTotal%.1f"},"n_queries":${results.size},"n_errors":$nErr,"errors":$errsCapped,"repeat":$repeat,"cpus":$cpus,"sf":"$sfDir","queries_file":${written.map("\"" + _ + "\"").getOrElse("null")}}"""
+    val summary = s"""{"metric":"total","value":${f"$total%.1f"},"unit":"sec","cpu_total":${f"$cpuTotal%.1f"},"compiles_total":$compilesTotal,"n_queries":${results.size},"n_errors":$nErr,"errors":$errsCapped,"repeat":$repeat,"cpus":$cpus,"sf":"$sfDir","queries_file":${written.map("\"" + _ + "\"").getOrElse("null")}}"""
     println(summary)
   }
 }

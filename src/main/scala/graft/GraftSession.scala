@@ -53,7 +53,14 @@ object GraftSession {
       "spark.ui.enabled" -> "false",
       // deletes reliable checkpoint files once their frame is unreachable
       // (spark.graft.reliableMaterialize); local checkpoints are unaffected
-      "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true"
+      "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true",
+      // Spark's cache of generated classes (default 100): a warm pass that
+      // needs more compiles its classes again on every pass. The largest
+      // warm working sets measured are about 131 classes (the perfbench
+      // gallery pass; q116 or q334 alone in a Bench repeat); Spark splits
+      // the cache into 4 LRU segments, so 500 holds one such set about 4
+      // times over (README). Static: read once per JVM, at its first codegen.
+      "spark.sql.codegen.cache.maxEntries" -> "500"
     ).map { case (k, v) => k -> props.getOrElse(k, v) }
   }
 

@@ -3,6 +3,7 @@ package org.apache.spark.graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
 /** Executor-CPU-time meter for the bench ratchet. Lives under
@@ -35,22 +36,27 @@ class BenchMetrics(sc: SparkContext) {
   }
 
   /** Runs `body` once: its wall seconds, the executor CPU seconds of the
-    * tasks it ran, and its result or the failure it threw. The one timing
-    * path of the mains; a failure is returned, not thrown, so the caller
-    * decides whether it ends the run.
+    * tasks it ran, the codegen compiles in this JVM while it ran, and its
+    * result or the failure it threw. The one timing path of the mains; a
+    * failure is returned, not thrown, so the caller decides whether it ends
+    * the run. Compiles are this JVM's `CodegenMetrics` count: driver and
+    * task compiles under a `local[n]` master, driver compiles only when
+    * executors run in other JVMs.
     */
   def measure[T](body: => T): BenchMetrics.Measured[T] = {
     val c0 = cpuSeconds()
+    val k0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val t0 = System.nanoTime()
     val result = try Right(body) catch { case e: Throwable => Left(e) }
     val wall = (System.nanoTime() - t0) / 1e9
-    BenchMetrics.Measured(wall, cpuSeconds() - c0, result)
+    BenchMetrics.Measured(wall, cpuSeconds() - c0,
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - k0, result)
   }
 }
 
 object BenchMetrics {
   final case class Measured[T](wallSeconds: Double, cpuSeconds: Double,
-                               result: Either[Throwable, T]) {
+                               compiles: Long, result: Either[Throwable, T]) {
     /** The result, or the failure rethrown. */
     def get: T = result.fold(e => throw e, identity)
   }

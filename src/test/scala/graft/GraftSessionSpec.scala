@@ -5,14 +5,16 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Session-wide settings: the one checkpoint decision in [[Materialize]],
-  * the builder's settings and checkpoint cleanup, and how the mains read
-  * their env vars, arguments, query selection and scratch dirs. Only the
-  * Materialize and cleanup tests touch the shared session; the rest are
-  * pure functions, so this suite starts no session of its own.
+  * the builder's settings, checkpoint cleanup and codegen cache, and how the
+  * mains read their env vars, arguments, query selection and scratch dirs.
+  * Only the Materialize, cleanup and codegen-cache tests touch the shared
+  * session; the rest are pure functions, so this suite starts no session of
+  * its own.
   */
 class GraftSessionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -66,6 +68,20 @@ class GraftSessionSpec extends AnyFunSuite {
       .contains("true"))
   }
 
+  test("codegen cache: a working set past Spark's default 100 classes " +
+    "compiles nothing when it runs again") {
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // each k inlines its own constants, so each projection is its own class
+    def run(k: Int) = spark.range(4).selectExpr(s"id * $k + ${k + 1} as v").collect()
+    val ks = 1 to 80
+    val c0 = compiles
+    ks.foreach(run)
+    assert(compiles - c0 > 100, "the working set must outgrow Spark's default")
+    val c1 = compiles
+    ks.take(30).foreach(run)
+    assert(compiles - c1 == 0, "classes compiled one pass earlier were evicted")
+  }
+
   test("SPARK_GRAFT_CPUS parsing: default when unset, positive ints only") {
     def parse(raw: Option[String]) =
       GraftSession.positiveInt("SPARK_GRAFT_CPUS", raw, 4)
@@ -108,13 +124,15 @@ class GraftSessionSpec extends AnyFunSuite {
       "spark.sql.orc.enableVectorizedReader" -> "true",
       "spark.sql.parquet.filterPushdown" -> "true",
       "spark.ui.enabled" -> "false",
-      "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true")
+      "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true",
+      "spark.sql.codegen.cache.maxEntries" -> "500")
     assert(settings("local[*]", Map.empty) == defaults)
     // a local[n] master sizes the shuffle to n
     assert(settings("local[6]", Map.empty) == defaults ++ Map(
       "spark.master" -> "local[6]", "spark.sql.shuffle.partitions" -> "6"))
     val launched = Map("spark.sql.shuffle.partitions" -> "7",
-      "spark.sql.adaptive.enabled" -> "false")
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.codegen.cache.maxEntries" -> "100")
     assert(settings("local[4]", launched) ==
       defaults ++ launched + ("spark.master" -> "local[4]"))
     // a launcher master replaces the fallback, and sizes the shuffle too
