@@ -103,15 +103,9 @@ object Stress {
       graft.llm.Dedup.ngramJaccardPairs(corpus, "text", "doc_id",
         n = 3, threshold = 0.5, maxShingleFreq = 100).count()
     }
-    time("ngram_jacc_t08_prefix") {
+    time("ngram_jacc_t08") {
       graft.llm.Dedup.ngramJaccardPairs(corpus, "text", "doc_id",
-        n = 3, threshold = 0.8, maxShingleFreq = 100,
-        prefixFilter = Some(true)).count()
-    }
-    time("ngram_jacc_t08_count") {
-      graft.llm.Dedup.ngramJaccardPairs(corpus, "text", "doc_id",
-        n = 3, threshold = 0.8, maxShingleFreq = 100,
-        prefixFilter = Some(false)).count()
+        n = 3, threshold = 0.8, maxShingleFreq = 100).count()
     }
     time("text_profile_scan") {
       corpus.select(graft.functions.TextFunctions.qualityScore(col("text")).as("q"))

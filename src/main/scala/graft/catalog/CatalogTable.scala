@@ -1,6 +1,5 @@
 package graft.catalog
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -15,7 +14,8 @@ import org.apache.spark.sql.functions.{col, lit}
   *     (DefaultHCatScheme.java:120-149 — Spark's insertInto is positional);
   *   - commit-time `ALTER TABLE SET LOCATION` (HCatTap.java:184-195);
   *   - regex-based partition-file exclusion (CascadingHCatUtil.java:114-138 —
-  *     Spark's pathGlobFilter is glob-only).
+  *     Spark's pathGlobFilter is glob-only), in
+  *     [[graft.io.RegexExcludingFileIndex]].
   */
 final case class CatalogTable(db: String, table: String) {
 
@@ -86,46 +86,4 @@ final case class CatalogTable(db: String, table: String) {
     df.write.mode("overwrite").format(fmt).save(path)
     setLocation(spark, path)
   }
-}
-
-object CatalogTable {
-
-  /** List data files under a directory, excluding any whose path matches
-    * `ignoreRegex` (reference A13: `hive-tap.path.partition.file.ignore-regex`,
-    * CascadingHCatUtil.java:114-138). Spark's `pathGlobFilter` is glob-only.
-    * Driver-side listing — the audit/debug surface; reads go through
-    * [[graft.io.RegexExcludingFileIndex]] so listing and exclusion stay
-    * inside the scan machinery.
-    */
-  def listFilesExcluding(spark: SparkSession, dir: String, ignoreRegex: String): Seq[String] = {
-    val pattern = ignoreRegex.r
-    val p       = new Path(dir)
-    val fs      = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val it  = fs.listFiles(p, true)
-      val out = Seq.newBuilder[String]
-      while (it.hasNext) {
-        val f    = it.next()
-        val path = f.getPath.toString
-        val name = f.getPath.getName
-        // _ and . prefixed files are Hadoop temp/hidden: always skipped
-        // (reference ORCFile.java:85-90; Spark InMemoryFileIndex does same).
-        if (!name.startsWith("_") && !name.startsWith(".") &&
-            pattern.findFirstIn(path).isEmpty) out += path
-      }
-      out.result()
-    }
-  }
-
-  /** Read a directory as `format`, excluding files matching `ignoreRegex`,
-    * via a [[graft.io.RegexExcludingFileIndex]]: the listing runs through
-    * Spark's own (parallelizable, cached) file index and the exclusion is a
-    * FileIndex decorator, so the plan stays a normal file scan — partition
-    * pruning and filter pushdown intact, no explicit-path enumeration in the
-    * plan, and schema inference sees only the surviving files.
-    */
-  def readExcluding(spark: SparkSession, dir: String, format: String,
-                    ignoreRegex: String): DataFrame =
-    graft.io.RegexExcludingFileIndex.read(spark, dir, format, ignoreRegex)
 }

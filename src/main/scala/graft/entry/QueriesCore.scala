@@ -1104,8 +1104,8 @@ private[graft] object QueriesCore {
           fs.rename(st.getPath,
             new org.apache.hadoop.fs.Path(s"$root/data/copy_$i.parquet"))
         }
-      graft.catalog.CatalogTable
-        .readExcluding(s, s"$root/data", "parquet", ".*copy_.*")
+      graft.io.RegexExcludingFileIndex
+        .read(s, s"$root/data", "parquet", ".*copy_.*")
         .groupBy(col("s_nationkey"))
         .agg(count(lit(1)).as("n"),
           round(sum(col("s_acctbal")), 2).as("sum_bal"))

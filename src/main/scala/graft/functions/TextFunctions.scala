@@ -85,12 +85,6 @@ object TextFunctions {
         p.getField("n_chars").cast("double"))
   }
 
-  /** Fraction of characters that are uppercase letters. */
-  def upperRatio(text: Column): Column =
-    when(length(text) === 0, 0.0)
-      .otherwise(length(regexp_replace(text, "[^A-Z]", "")).cast("double") /
-        length(text).cast("double"))
-
   /** Fraction of tokens that are English stopwords — high values indicate
     * natural running text, near-zero indicates tables/code/noise.
     */

@@ -4,8 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Dense-vector math over `array<float>` embedding columns, built from
-  * codegen'd higher-order functions (`zip_with` + `aggregate`) — no UDF
-  * serialization cost, works directly on the columnar representation.
+  * codegen'd native expressions ([[graft.expressions.VectorExpressions]]) —
+  * no UDF serialization cost, works directly on the columnar representation.
   * All arithmetic is widened to double for oracle-grade determinism.
   */
 object VectorFunctions {
@@ -21,12 +21,6 @@ object VectorFunctions {
     */
   def cosine(a: Column, b: Column): Column =
     graft.expressions.VectorExpressions.cosine(a, b)
-
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(a, b, (x, y) => {
-      val diff = x.cast("double") - y.cast("double")
-      diff * diff
-    }), lit(0.0), (acc, v) => acc + v))
 
   /** L2-normalized copy of the vector (double elements). Pre-normalizing the
     * corpus once turns every cosine into a plain dot product — at 100 TB that
@@ -56,12 +50,6 @@ object VectorFunctions {
   /** Inverse of [[quantizeInt8]]: codes * scale, as `array<double>`. */
   def dequantizeInt8(qv: Column): Column =
     graft.expressions.VectorExpressions.dequantizeInt8(qv)
-
-  /** One bit of a random-hyperplane LSH signature (sign of the projection
-    * onto deterministic pseudo-random plane `planeId`).
-    */
-  def hyperplaneBit(vec: Column, planeId: Int): Column =
-    hyperplaneSignature(vec, 1, planeId).cast("int")
 
   /** `nBits`-bit random-hyperplane signature packed into a long (native
     * primitive-loop expression). Hamming distance between signatures

@@ -15,32 +15,30 @@ import org.apache.spark.sql.SparkSession
   */
 object Compaction {
 
-  /** Total bytes of data files under `dir` (ignores _ and . hidden files). */
-  def dataBytes(spark: SparkSession, dir: String): Long = {
+  /** Lengths of the data files under `dir`, listed recursively. Names
+    * starting with `_` or `.` are Hadoop temp/hidden files (reference
+    * ORCFile.java:85-90; Spark's InMemoryFileIndex skips them too).
+    */
+  private def dataFileLengths(spark: SparkSession, dir: String): Seq[Long] = {
     val p  = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var total = 0L
-    val it = fs.listFiles(p, true)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(p, true)
+    val out = Seq.newBuilder[Long]
     while (it.hasNext) {
       val f = it.next()
       val name = f.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) total += f.getLen
+      if (!name.startsWith("_") && !name.startsWith(".")) out += f.getLen
     }
-    total
+    out.result()
   }
 
+  /** Total bytes of data files under `dir` (ignores _ and . hidden files). */
+  def dataBytes(spark: SparkSession, dir: String): Long =
+    dataFileLengths(spark, dir).sum
+
   /** Number of data files under `dir`. */
-  def dataFileCount(spark: SparkSession, dir: String): Int = {
-    val p  = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var n = 0
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val name = it.next().getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) n += 1
-    }
-    n
-  }
+  def dataFileCount(spark: SparkSession, dir: String): Int =
+    dataFileLengths(spark, dir).size
 
   /** Rewrite `dir` (a `format` table directory) into
     * ceil(bytes / targetBytes) files via a staging directory + atomic-ish

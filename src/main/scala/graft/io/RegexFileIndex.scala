@@ -10,14 +10,13 @@ import org.apache.spark.sql.types.StructType
   * `hive-tap.path.partition.file.ignore-regex`,
   * reference CascadingHCatUtil.java:114-138).
   *
-  * [[CatalogTable.listFilesExcluding]] lists on the driver and passes
-  * explicit paths to the reader — fine for one partition directory, wrong at
-  * warehouse scale (a million-file table means a million-path plan and a
-  * single-threaded listing). This variant keeps the listing inside Spark's
-  * own `InMemoryFileIndex` (parallelized via a listing job over many dirs,
-  * cached, refreshable) and applies the exclusion as a [[FileIndex]]
-  * decorator, so partition pruning, filter pushdown, and size estimation all
-  * see the already-filtered file set.
+  * Listing on the driver and passing explicit paths to the reader would be
+  * wrong at warehouse scale (a million-file table means a million-path plan
+  * and a single-threaded listing). The listing stays inside Spark's own
+  * `InMemoryFileIndex` (parallelized via a listing job over many dirs,
+  * cached, refreshable) and the exclusion is a [[FileIndex]] decorator, so
+  * partition pruning, filter pushdown, and size estimation all see the
+  * already-filtered file set.
   */
 final class RegexExcludingFileIndex(underlying: FileIndex, ignoreRegex: String)
     extends FileIndex {
@@ -48,20 +47,16 @@ final class RegexExcludingFileIndex(underlying: FileIndex, ignoreRegex: String)
 object RegexExcludingFileIndex {
 
   /** Read `dir` as `format` with files matching `ignoreRegex` excluded at
-    * the FileIndex layer. Schema is taken from `userSchema` or inferred from
-    * the NON-excluded files only (an excluded stray file with a divergent
-    * schema must not poison inference).
+    * the FileIndex layer. The schema is inferred from the NON-excluded
+    * files only (an excluded stray file with a divergent schema must not
+    * poison inference).
     */
   def read(spark: SparkSession, dir: String, format: String,
-           ignoreRegex: String, userSchema: Option[StructType] = None,
-           options: Map[String, String] = Map.empty,
-           recursive: Boolean = true): DataFrame = {
-    // recursive by default: the reference lists a partition directory's
-    // files recursively (partition columns come from the metastore there,
-    // not from dir names). Pass recursive = false to keep Spark's hive-style
-    // partition discovery instead.
-    val listOpts =
-      if (recursive) options + ("recursiveFileLookup" -> "true") else options
+           ignoreRegex: String): DataFrame = {
+    // recursive: the reference lists a partition directory's files
+    // recursively (partition columns come from the metastore there, not
+    // from dir names)
+    val listOpts = Map("recursiveFileLookup" -> "true")
     val base = new InMemoryFileIndex(spark, Seq(new Path(dir)), listOpts, None)
     val index = new RegexExcludingFileIndex(base, ignoreRegex)
     val fileFormat = format match {
@@ -79,8 +74,7 @@ object RegexExcludingFileIndex {
     val pattern = ignoreRegex.r
     val kept = base.allFiles()
       .filter(f => pattern.findFirstIn(f.getPath.toString).isEmpty)
-    val dataSchema = userSchema.orElse(
-        fileFormat.inferSchema(spark, options, kept))
+    val dataSchema = fileFormat.inferSchema(spark, listOpts, kept)
       .getOrElse(throw new IllegalArgumentException(
         s"no schema: nothing inferable under $dir after exclusion '$ignoreRegex'"))
     val relation = HadoopFsRelation(

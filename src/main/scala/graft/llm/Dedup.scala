@@ -489,41 +489,28 @@ object Dedup {
     * boilerplate that would make every posting list quadratic in the
     * hottest key.
     *
-    * Two candidate strategies (both produce the identical exact result —
-    * spec-tested against brute force):
-    *
-    *   - OVERLAP KERNEL (default) — the rare posting list, each entry
-    *     carrying its doc's rare-gram count, is grouped by gram into
-    *     id-sorted lists of at most `maxShingleFreq` entries; every doc A
-    *     collects the entries after it in each of its lists, and one
-    *     codegen'd expression per A
-    *     ([[graft.expressions.JaccardOverlap]]) counts each B and emits
-    *     only the pairs at or above the threshold. No pair row exists
-    *     below the threshold: at sf0.1 (q25, t=0.3) a relational self-join
-    *     emitted 4.9M pair rows in 4.2M groups for 6,024 kept pairs. A's
-    *     buffer is bounded by its rare-gram count x the df cap.
-    *   - PREFIX FILTERING (`prefixFilter = Some(true)`; AllPairs/PPJoin
-    *     family) — grams get a global rarity order (df asc, gram); a pair
-    *     with Jaccard >= t must share a gram within each doc's
-    *     floor((1-t)*|d|)+1 rarest grams, so the self-join runs on that
-    *     (1-t) fraction of the posting list only and candidates are
-    *     verified with one codegen'd array_intersect per pair (gram arrays
-    *     join back by id only for the bounded candidate set).
+    * The rare posting list, each entry carrying its doc's rare-gram
+    * count, is grouped by gram into id-sorted lists of at most
+    * `maxShingleFreq` entries; every doc A collects the entries after it
+    * in each of its lists, and one codegen'd expression per A
+    * ([[graft.expressions.JaccardOverlap]]) counts each B and emits only
+    * the pairs at or above the threshold (exact — spec-tested against
+    * brute force). No pair row exists below the threshold: at sf0.1 (q25,
+    * t=0.3) a relational self-join emitted 4.9M pair rows in 4.2M groups
+    * for 6,024 kept pairs. A's buffer is bounded by its rare-gram count x
+    * the df cap.
     *
     * Measured on the 50k-doc stress corpus at local[4] (short ~150-gram
-    * lists, heavy near-dup clusters; `graft.Stress <sf0.1> 10 docs`), the
-    * overlap kernel beats prefix filtering at t=0.8: 5.8 s vs 15.0 s wall
-    * (the relational self-join it replaced took 32.7 s) — replicas collide
-    * on rare grams anyway, so the prefix prunes little while adding a
-    * per-doc rarity sort. Prefix
-    * filtering is meant for long posting lists where most candidate pairs
-    * are dissimilar (web-scale near-dup at t >= 0.8 over full-page shingle
-    * sets); it is kept as an explicit opt-in for that regime.
+    * lists, heavy near-dup clusters; `graft.Stress <sf0.1> 10 docs`): 5.8 s
+    * wall at t=0.8, where the relational self-join took 32.7 s and an
+    * AllPairs-style prefix filter (self-join on each doc's rarest grams,
+    * then per-pair verification) 15.0 s — replicas collide on rare grams
+    * anyway, so the prefix prunes little while adding a per-doc rarity
+    * sort.
     */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                         n: Int = 3, threshold: Double = 0.3,
-                        maxShingleFreq: Int = 100,
-                        prefixFilter: Option[Boolean] = None): DataFrame = {
+                        maxShingleFreq: Int = 100): DataFrame = {
     // Materialized: the gram-df aggregation and the filtered posting list
     // both consume it; shingling should run once per document.
     val posting = df.select(col(idCol).as("__id"),
@@ -536,70 +523,27 @@ object Dedup {
       .agg(count(lit(1)).as("__df"))
       .filter(col("__df").between(2, maxShingleFreq))
 
-    // rare posting list with each gram's global rarity key (df, gram)
     val rp = posting.join(rare, Seq("__g"))
       .materialize
 
-    if (!prefixFilter.getOrElse(false)) {
-      // each posting entry carries its doc's rare-gram count; a null id
-      // pairs with nothing, as in `idA < idB`
-      val sized = rp.filter(col("__id").isNotNull)
-        .groupBy(col("__id")).agg(collect_list(col("__g")).as("__gs"))
-        .select(explode(col("__gs")).as("__g"),
-          struct(col("__id"), size(col("__gs")).cast("long").as("__sz")).as("__e"))
-      val lists = sized.groupBy(col("__g"))
-        .agg(sort_array(collect_list(col("__e"))).as("__pl"))
-      // doc A at position p of a list takes the entries after it
-      val tails = lists.select(col("__pl"), posexplode(col("__pl")))
-        .filter(col("pos") < size(col("__pl")) - 1)
-        .select(col("col.__id").as("idA"), col("col.__sz").as("__szA"),
-          slice(col("__pl"), col("pos") + 2, size(col("__pl")) - col("pos") - 1)
-            .as("__tail"))
-      tails.groupBy(col("idA"), col("__szA"))
-        .agg(collect_list(col("__tail")).as("__tails"))
-        .select(col("idA"), inline(graft.expressions.TextExpressions
-          .jaccardOverlap(col("__szA"), col("__tails"), threshold)))
-    } else {
-      // per-doc: size and the full sorted gram-set array (for verification)
-      val sets = rp.groupBy(col("__id"))
-        .agg(count(lit(1)).as("__sz"),
-          sort_array(collect_list(col("__g"))).as("__gs"))
-        .materialize
-
-      // prefix = the floor((1-t)*sz)+1 rarest grams of each doc. Computed
-      // as ceil(...)+1, which is >= the exact floor(...)+1 bound under any
-      // fp rounding of (1-t)*sz (a floor() could undershoot by one when the
-      // product lands an ulp below an integer — a silent recall hole).
-      val byRarity = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("__id")).orderBy(col("__df"), col("__g"))
-      val prefix = rp
-        .withColumn("__rk", row_number().over(byRarity))
-        .join(sets.select(col("__id"), col("__sz")), Seq("__id"))
-        .filter(col("__rk") <= ceil((lit(1.0) - threshold) * col("__sz")) + 1)
-        .select(col("__g"), col("__id"))
-
-      // shuffle_hash: the planner's stats-based choice broadcasts the
-      // prefix posting list (a serial driver-side build); both sides belong
-      // in parallel exchanges
-      val cand = prefix.select(col("__g"), col("__id").as("idA"))
-        .join(prefix.select(col("__g"), col("__id").as("idB"))
-          .hint("shuffle_hash"), Seq("__g"))
-        .filter(col("idA") < col("idB"))
-        .select(col("idA"), col("idB"))
-        .dropDuplicates("idA", "idB")
-
-      cand
-        .join(sets.select(col("__id").as("idA"), col("__sz").as("__szA"),
-          col("__gs").as("__gsA")), Seq("idA"))
-        .join(sets.select(col("__id").as("idB"), col("__sz").as("__szB"),
-          col("__gs").as("__gsB")), Seq("idB"))
-        .withColumn("__inter",
-          size(array_intersect(col("__gsA"), col("__gsB"))).cast("long"))
-        .withColumn("jaccard", col("__inter").cast("double") /
-          (col("__szA") + col("__szB") - col("__inter")).cast("double"))
-        .filter(col("jaccard") >= threshold)
-        .select(col("idA"), col("idB"), col("jaccard"))
-    }
+    // each posting entry carries its doc's rare-gram count; a null id
+    // pairs with nothing, as in `idA < idB`
+    val sized = rp.filter(col("__id").isNotNull)
+      .groupBy(col("__id")).agg(collect_list(col("__g")).as("__gs"))
+      .select(explode(col("__gs")).as("__g"),
+        struct(col("__id"), size(col("__gs")).cast("long").as("__sz")).as("__e"))
+    val lists = sized.groupBy(col("__g"))
+      .agg(sort_array(collect_list(col("__e"))).as("__pl"))
+    // doc A at position p of a list takes the entries after it
+    val tails = lists.select(col("__pl"), posexplode(col("__pl")))
+      .filter(col("pos") < size(col("__pl")) - 1)
+      .select(col("col.__id").as("idA"), col("col.__sz").as("__szA"),
+        slice(col("__pl"), col("pos") + 2, size(col("__pl")) - col("pos") - 1)
+          .as("__tail"))
+    tails.groupBy(col("idA"), col("__szA"))
+      .agg(collect_list(col("__tail")).as("__tails"))
+      .select(col("idA"), inline(graft.expressions.TextExpressions
+        .jaccardOverlap(col("__szA"), col("__tails"), threshold)))
   }
 
   /** Exact embedding near-duplicate pairs: all-pairs cosine >= threshold.

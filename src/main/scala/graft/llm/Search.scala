@@ -120,31 +120,23 @@ object Search {
     val post = spark.read.parquet(s"$path/postings")
       .filter(col("term").isin(terms: _*))
     val stats = spark.read.parquet(s"$path/stats")
-    // Max-score serving needs the per-term stats table; indexes written
-    // before it existed fall back to the direct plan.
-    val hasTermStats = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/termstats")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
-    if (hasTermStats) {
-      val tstats = spark.read.parquet(s"$path/termstats")
-        .filter(col("term").isin(terms: _*))
-      // Short-circuit on the batch's term mix (ONE bounded driver action
-      // over batch-term stats x the 1-row corpus stats): max-score pruning
-      // only ever pays when the batch has BOTH essential (rare) terms to
-      // build a floor from AND common terms whose fan-out it can skip.
-      // All-common batches (nothing to prune with) and all-rare batches
-      // (nothing worth pruning) take the direct plan with zero added
-      // stages.
-      val meta = tstats.select(col("df"))
-        .crossJoin(stats.select(col("n_docs"))).collect()
-      val nEss = meta.count(r =>
-        r.getLong(0) <= EssentialDfFrac * r.getLong(1))
-      val nCommon = meta.length - nEss
-      if (nEss > 0 && nCommon > 0)
-        rankServed(post, tstats, stats, queries, k, k1, b)
-      else rank(post, stats, queries, k, k1, b, dedupeQueries = true)
-    } else rank(post, stats, queries, k, k1, b, dedupeQueries = true)
+    val tstats = spark.read.parquet(s"$path/termstats")
+      .filter(col("term").isin(terms: _*))
+    // Short-circuit on the batch's term mix (ONE bounded driver action
+    // over batch-term stats x the 1-row corpus stats): max-score pruning
+    // only ever pays when the batch has BOTH essential (rare) terms to
+    // build a floor from AND common terms whose fan-out it can skip.
+    // All-common batches (nothing to prune with) and all-rare batches
+    // (nothing worth pruning) take the direct plan with zero added
+    // stages.
+    val meta = tstats.select(col("df"))
+      .crossJoin(stats.select(col("n_docs"))).collect()
+    val nEss = meta.count(r =>
+      r.getLong(0) <= EssentialDfFrac * r.getLong(1))
+    val nCommon = meta.length - nEss
+    if (nEss > 0 && nCommon > 0)
+      rankServed(post, tstats, stats, queries, k, k1, b)
+    else rank(post, stats, queries, k, k1, b, dedupeQueries = true)
   }
 
   /** Shared scoring tail: prune postings to query terms, df over the
@@ -442,12 +434,6 @@ object Search {
         col("tie").as("doc_id"), scoreCol, col("rank"))
   }
 
-  /** The oracle-side tokenizer fragment (DuckDB), kept adjacent to
-    * [[searchTokens]] so the two dialects stay in lockstep.
-    */
-  def searchTokensSqlFrom(table: String, idCol: String, textCol: String): String =
-    s"SELECT $idCol, unnest(string_split_regex(lower($textCol), '[^a-z0-9]+')) AS term FROM $table"
-
   /** Sparse TF-IDF cosine similarity between document PAIRS — the
     * lexical doc-doc near-match pass (plagiarism / boilerplate family
     * detection) next to the set-based n-gram Jaccard in Dedup and the
@@ -477,12 +463,11 @@ object Search {
       .materialize
     val norms = w.groupBy(col("doc_id"))
       .agg(sqrt(sum(col("w") * col("w"))).as("norm"))
-    // shuffle_hash: same serial-broadcast-build avoidance as the prefix
-    // branch of Dedup.ngramJaccardPairs — df-capped postings, parallel
-    // exchanges instead of a driver-built broadcast
+    // unhinted: the planner broadcasts `w` while it fits the broadcast
+    // threshold and shuffles both sides past it
     w.select(col("term"), col("doc_id").as("idA"), col("w").as("wa"))
-      .join(w.select(col("term"), col("doc_id").as("idB"), col("w").as("wb"))
-        .hint("shuffle_hash"), Seq("term"))
+      .join(w.select(col("term"), col("doc_id").as("idB"), col("w").as("wb")),
+        Seq("term"))
       .filter(col("idA") < col("idB"))
       .groupBy(col("idA"), col("idB")).agg(sum(col("wa") * col("wb")).as("dot"))
       .join(norms.select(col("doc_id").as("idA"), col("norm").as("na")),

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.catalog.CatalogTable
-import graft.io.RcFileHiveTable
+import graft.io.{RcFileHiveTable, RegexExcludingFileIndex}
 import graft.schema.HiveDdl
 
 /** Metastore-backed behaviors (SURVEY.md §2 A10-A16) on a local Hive-support
@@ -75,10 +75,10 @@ class CatalogSpec extends AnyFunSuite {
     val dir = TestSpark.tmpDir("excl")
     Seq((1, "a")).toDF("id", "v").write.parquet(s"$dir/keep")
     Seq((2, "b")).toDF("id", "v").write.parquet(s"$dir/skipme")
-    val files = CatalogTable.listFilesExcluding(spark, dir, ".*skipme.*")
-    assert(files.nonEmpty)
-    assert(files.forall(!_.contains("skipme")))
-    val df = CatalogTable.readExcluding(spark, dir, "parquet", ".*skipme.*")
+    val df = RegexExcludingFileIndex.read(spark, dir, "parquet", ".*skipme.*")
+    val files = df.inputFiles.toSeq
+    assert(files.exists(_.contains("/keep/")), files)
+    assert(files.forall(!_.contains("skipme")), files)
     assert(TestSpark.rows(df.select("id")).flatten == Seq(1))
   }
 
@@ -95,7 +95,7 @@ class CatalogSpec extends AnyFunSuite {
       .filter(st => st.isFile && st.getPath.getName.startsWith("part-")).head
     fs.rename(part.getPath,
       new org.apache.hadoop.fs.Path(s"$dir/t/skipme_0.parquet"))
-    val df = CatalogTable.readExcluding(spark, s"$dir/t", "parquet", ".*skipme.*")
+    val df = RegexExcludingFileIndex.read(spark, s"$dir/t", "parquet", ".*skipme.*")
     assert(df.columns.toSeq == Seq("id", "v"),
       s"inference must only see surviving files: ${df.columns.toSeq}")
     assert(TestSpark.rows(df.orderBy("id").select("id")).flatten == Seq(1, 2, 3))

@@ -87,7 +87,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(pairs.filter($"idB" === $"idA" + 2000).count() >= 15)
   }
 
-  test("ngram jaccard equals brute force on BOTH strategies (count join / prefix filter)") {
+  test("ngram jaccard equals brute force at thresholds 0.4 and 0.7") {
     // brute force: same df-filtered gram sets, all-pairs intersection
     val posting = corpus.select($"doc_id",
       explode(array_distinct(graft.expressions.TextExpressions.ngramHashes(
@@ -103,14 +103,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
       jac = inter.toDouble / (ga.size + gb.size - inter)
       if jac >= t
     } yield (a, b, math.rint(jac * 1e9) / 1e9)).toSet
-    for (t <- Seq(0.4, 0.7); prefix <- Seq(false, true)) {
+    for (t <- Seq(0.4, 0.7)) {
       val got = Dedup.ngramJaccardPairs(corpus, "text", "doc_id",
-          n = 2, threshold = t, maxShingleFreq = 1000,
-          prefixFilter = Some(prefix))
+          n = 2, threshold = t, maxShingleFreq = 1000)
         .select($"idA", $"idB", round($"jaccard", 9).as("j"))
         .as[(Long, Long, Double)].collect().toSet
       val exp = brute(t)
-      assert(got == exp, s"t=$t prefix=$prefix " +
+      assert(got == exp, s"t=$t " +
         s"missing=${(exp -- got).take(3)} spurious=${(got -- exp).take(3)}")
       assert(exp.nonEmpty, s"t=$t brute-force fixture empty")
     }
@@ -144,12 +143,12 @@ class DedupSimilaritySpec extends AnyFunSuite {
       0.0  -> Set((c, a, 0.25), (c, b, 0.25), (c, d, 0.5), (a, b, 1.0)),
       0.25 -> Set((c, a, 0.25), (c, b, 0.25), (c, d, 0.5), (a, b, 1.0)),
       0.5  -> Set((c, d, 0.5), (a, b, 1.0)))
-    for ((t, exp) <- expected; prefix <- Seq(false, true)) {
+    for ((t, exp) <- expected) {
       val got = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
-          n = 1, threshold = t, maxShingleFreq = 3, prefixFilter = Some(prefix))
+          n = 1, threshold = t, maxShingleFreq = 3)
         .as[(Long, Long, Double)].collect().toSet
       assert(brute(t) == exp, s"t=$t brute force disagrees with the fixture")
-      assert(got == exp, s"t=$t prefix=$prefix " +
+      assert(got == exp, s"t=$t " +
         s"missing=${exp -- got} spurious=${got -- exp}")
     }
   }
