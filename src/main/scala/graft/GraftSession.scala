@@ -5,10 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** Session factory with the engine's scale-oriented defaults.
   *
   * Tuned for correctness parity with a DuckDB oracle (UTC session time zone)
-  * and for large-scale execution: AQE on (runtime shuffle coalescing, skew-join
-  * splitting), shuffle partitions sized to the local core count rather than the
-  * 200 default (on a real cluster this would be ~2-3x total cores / set by AQE
-  * advisory size).
+  * and for large-scale execution: shuffle partitions sized to the local core
+  * count rather than the 200 default (on a real cluster this would be ~2-3x
+  * total cores / set by AQE advisory size). AQE with shuffle coalescing and
+  * skew-join splitting, runtime bloom filters, the vectorized ORC reader and
+  * parquet filter pushdown are Spark's own defaults, so they are not restated
+  * here (`GraftSessionSpec` fails if a Spark upgrade turns one off).
   *
   * The launcher wins: each default applies only when the JVM was not started
   * with that key as a system property, which is how `spark-submit --conf k=v`
@@ -40,16 +42,8 @@ object GraftSession {
     Seq(
       "spark.master" -> m,
       "spark.sql.shuffle.partitions" -> shuffle,
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.enabled" -> "true",
-      // runtime bloom-filter pruning: big-join probe sides get filtered by a
-      // bloom built from the build side — free I/O reduction at scale
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-      "spark.sql.orc.enableVectorizedReader" -> "true",
-      "spark.sql.parquet.filterPushdown" -> "true",
       "spark.ui.enabled" -> "false",
       // deletes reliable checkpoint files once their frame is unreachable
       // (spark.graft.reliableMaterialize); local checkpoints are unaffected
@@ -108,12 +102,6 @@ object GraftSession {
         s"jdbc:derby:;databaseName=$warehouseDir/metastore_db;create=true")
       .config("spark.sql.hive.metastorePartitionPruning", "true")
       .enableHiveSupport()
-
-  def localHive(warehouseDir: String, appName: String = "graft-hive"): SparkSession = {
-    val s = hiveBuilder("local[*]", appName, warehouseDir).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   /** Per-query teardown for the 600-query driver loops (Bench/Verify/
     * audits): drops the SQL cache AND every RDD-level persisted block.

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import org.apache.hadoop.fs.FileSystem
+import org.apache.hadoop.util.ShutdownHookManager
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -79,5 +81,17 @@ object Sweep {
   def withScratchDir[T](prefix: String)(body: Path => T): T = {
     val dir = Files.createTempDirectory(prefix)
     try body(dir) finally JavaUtils.deleteRecursively(dir.toFile)
+  }
+
+  /** A fresh temp dir that lives until the JVM exits. It is deleted then by
+    * a Hadoop shutdown hook registered below Spark's own priority, so it
+    * runs after every session (and its Derby metastore) has stopped.
+    */
+  def tempDirUntilExit(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    ShutdownHookManager.get().addShutdownHook(
+      () => JavaUtils.deleteRecursively(dir.toFile),
+      FileSystem.SHUTDOWN_HOOK_PRIORITY + 1)
+    dir
   }
 }

@@ -1,15 +1,16 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import graft.ops._
 import graft.functions.{TextFunctions => TF, UrlFunctions => UF, VectorFunctions => VF}
 import graft.llm.{Bpe, Dedup, Multimodal, Pq, Search, Similarity}
 
 /** Shared fixtures for the [[SparkEntry]] query parts: table
-  * readers, deterministic scratch dirs, the near-dup corpus,
-  * and the SQL fragments used verbatim by both engines.
+  * readers, per-JVM scratch dirs, the near-dup corpus, the derived
+  * tables several queries build, and the SQL fragments used verbatim by
+  * both engines.
   */
 private[graft] object EntryShared {
 
@@ -20,20 +21,18 @@ private[graft] object EntryShared {
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** Deterministic per-query scratch dir for queries that stage external
-    * write locations (q70/q71); wiped and recreated on every call so the
-    * queries stay idempotent across Verify/Bench repeats.
+  private lazy val scratchRoot = Sweep.tempDirUntilExit("graft-scratch")
+
+  /** Per-query scratch dir for queries that stage external write locations;
+    * wiped and recreated on every call so the queries stay idempotent
+    * across Verify/Bench repeats. Every one lives under a root of this JVM
+    * that is deleted at its exit, so no two JVMs share one.
     */
   def scratchDir(name: String): String = {
-    val root = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft-scratch/$name")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    if (root.exists()) rm(root)
-    root.mkdirs()
-    root.getAbsolutePath
+    val dir = scratchRoot.resolve(name).toFile
+    org.apache.spark.network.util.JavaUtils.deleteRecursively(dir)
+    dir.mkdirs()
+    dir.getAbsolutePath
   }
 
   /** events with `ts` normalized to TimestampType, whatever the generator
@@ -63,6 +62,241 @@ private[graft] object EntryShared {
   def docsWithNearDups(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
     d.union(d.select(col("doc_id") + 100000L, expr("substring(text, 21)")))
+  }
+
+  // --- Derived tables that several queries build the same way ----------
+
+  /** Each user's events in time order (event_id breaks ties). */
+  val byUser: WindowSpec = Window.partitionBy(col("user_id"))
+    .orderBy(col("ts"), col("event_id"))
+
+  /** Running frame over `dur`, from the first row to the current one. */
+  val durRunning: WindowSpec = Window.orderBy(col("dur"))
+    .rowsBetween(Window.unboundedPreceding, 0)
+
+  /** One row per customer: `dur`, the days from first to last order, and
+    * `event`, churn: the last order is more than 90 days before the last
+    * order date of the corpus.
+    */
+  def survivalCohort(s: SparkSession, dir: String): DataFrame = {
+    val maxD = t(s, dir, "orders").agg(max(col("o_orderdate")).as("mx"))
+    t(s, dir, "orders")
+      .groupBy(col("o_custkey"))
+      .agg(min(col("o_orderdate")).as("first"),
+        max(col("o_orderdate")).as("last"))
+      .crossJoin(broadcast(maxD))
+      .select(datediff(col("last"), col("first")).cast("long").as("dur"),
+        (datediff(col("mx"), col("last")) > 90).as("event"))
+  }
+
+  /** [[survivalCohort]] plus `big`: the customer's last order (latest
+    * date, then highest key) is priced at 150,000 or more.
+    */
+  def survivalCohortBySize(s: SparkSession, dir: String): DataFrame = {
+    val maxD = t(s, dir, "orders").agg(max(col("o_orderdate")).as("mx"))
+    val lastOrd = t(s, dir, "orders")
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("o_custkey"))
+          .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)))
+      .filter(col("rn") === 1)
+      .select(col("o_custkey"), col("o_totalprice").as("last_price"))
+    t(s, dir, "orders")
+      .groupBy(col("o_custkey"))
+      .agg(min(col("o_orderdate")).as("first"),
+        max(col("o_orderdate")).as("last"))
+      .crossJoin(broadcast(maxD))
+      .join(lastOrd, Seq("o_custkey"))
+      .select(datediff(col("last"), col("first")).cast("long").as("dur"),
+        (datediff(col("mx"), col("last")) > 90).as("event"),
+        (col("last_price") >= 150000.0).as("big"))
+  }
+
+  /** Events per calendar day: `d`, and the count `y` as a double. */
+  def dailyEvents(s: SparkSession, dir: String): DataFrame =
+    events(s, dir)
+      .groupBy(to_date(col("ts")).as("d"))
+      .agg(count(lit(1)).cast("double").as("y"))
+
+  /** Purchases per calendar day (`d`, count `y` as a double) and `x`, a
+    * weekend flag (1.0 on Saturday and Sunday).
+    */
+  def dailyPurchases(s: SparkSession, dir: String): DataFrame =
+    events(s, dir)
+      .filter(col("event_type") === "purchase")
+      .groupBy(to_date(col("ts")).as("d"))
+      .agg(count(lit(1)).cast("double").as("y"))
+      .withColumn("x",
+        when(dayofweek(col("d")).isin(1, 7), 1.0).otherwise(0.0))
+
+  /** Event-type transitions: how often a user's event of type `src` is
+    * followed by one of type `dst` (`c`, a double), in [[byUser]] order.
+    */
+  def eventTransitions(s: SparkSession, dir: String): DataFrame =
+    events(s, dir)
+      .select(col("user_id"), col("event_id"), col("ts"),
+        col("event_type").as("dst"))
+      .withColumn("src", lag(col("dst"), 1).over(byUser))
+      .filter(col("src").isNotNull)
+      .groupBy(col("src"), col("dst"))
+      .agg(count(lit(1)).cast("double").as("c"))
+
+  /** Each event's user, id, time and `item` (the `k` of its JSON props). */
+  def userItemEvents(s: SparkSession, dir: String): DataFrame =
+    events(s, dir)
+      .select(col("user_id"), col("event_id"), col("ts"),
+        get_json_object(col("props"), "$.k").cast("long").as("item"))
+
+  /** Item-to-item transitions: [[userItemEvents]] with the user's previous
+    * item as `src` (repeats dropped) and `day`, days since the first event
+    * of the corpus.
+    */
+  def itemTransitionsByDay(s: SparkSession, dir: String): DataFrame = {
+    val d0 = events(s, dir).agg(min(to_date(col("ts"))).as("d0"))
+    events(s, dir).crossJoin(broadcast(d0))
+      .select(col("user_id"), col("event_id"), col("ts"),
+        get_json_object(col("props"), "$.k").cast("long").as("item"),
+        datediff(to_date(col("ts")), col("d0")).as("day"))
+      .withColumn("src", lag(col("item"), 1).over(byUser))
+      .filter(col("src").isNotNull && col("src") =!= col("item"))
+  }
+
+  /** Each customer's order total in exact integer cents (`cents`). */
+  def customerOrderCents(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "orders")
+      .groupBy(col("o_custkey"))
+      .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
+        .as("cents"))
+
+  /** Each customer's order count (`cnt`). */
+  def customerOrderCounts(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "orders")
+      .groupBy(col("o_custkey")).agg(count(lit(1)).as("cnt"))
+
+  /** Each customer's order total in cents per year (`yr`), 1995 and 1996. */
+  def customerYearCents(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "orders")
+      .filter(year(col("o_orderdate")).isin(1995, 1996))
+      .groupBy(year(col("o_orderdate")).cast("long").as("yr"),
+        col("o_custkey"))
+      .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
+        .as("cents"))
+
+  /** Every 1995 and 1996 order as its year `yr` and cents `v`. */
+  def orderCentsByYear(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "orders")
+      .filter(year(col("o_orderdate")).isin(1995, 1996))
+      .select(year(col("o_orderdate")).cast("long").as("yr"),
+        expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").as("v"))
+
+  /** Order revenue per order date `d`, summed in cents, as a double `rev`. */
+  def dailyOrderRevenue(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "orders")
+      .groupBy(col("o_orderdate").cast("date").as("d"))
+      .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
+        .cast("double").as("rev"))
+
+  /** Order revenue per `day` in integer cents (`cents`). */
+  def dailyOrderCents(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "orders")
+      .groupBy(to_date(col("o_orderdate")).as("day"))
+      .agg(expr("CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS " +
+        "BIGINT)) AS BIGINT)").as("cents"))
+
+  /** Daily order revenue `y` in dollars against `tt`, days since
+    * 1992-01-01.
+    */
+  def dailyRevenueTrend(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "orders")
+      .groupBy(to_date(col("o_orderdate")).as("day"))
+      .agg((sum(floor(col("o_totalprice") * 100 + 0.5)) / 100.0)
+        .cast("double").as("y"))
+      .select(datediff(col("day"), lit("1992-01-01")).cast("double")
+        .as("tt"), col("y"))
+
+  /** Each order's line total in cents (price after discount and tax)
+    * minus its stated total in cents, as `diff`.
+    */
+  def orderTotalDiffs(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "lineitem")
+      .groupBy(col("l_orderkey"))
+      .agg(sum(expr("CAST(floor(l_extendedprice * (1 - l_discount) * " +
+        "(1 + l_tax) * 100 + 0.5) AS BIGINT)")).as("calc"))
+      .join(t(s, dir, "orders").select(col("o_orderkey"),
+        expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
+          .as("stated")),
+        col("l_orderkey") === col("o_orderkey"))
+      .select((col("calc") - col("stated")).as("diff"))
+
+  /** Per brand: revenue in cents `rev`, quantity `qty` and distinct
+    * orders `ords`.
+    */
+  def brandRevenue(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "lineitem")
+      .join(t(s, dir, "part")
+        .select(col("p_partkey"), col("p_brand")),
+        col("l_partkey") === col("p_partkey"))
+      .groupBy(col("p_brand"))
+      .agg(sum(expr(
+        "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"))
+        .as("rev"),
+        sum(col("l_quantity").cast("long")).as("qty"),
+        countDistinct(col("l_orderkey")).as("ords"))
+
+  /** Each customer's key `ck` and balance in cents `v`. */
+  def customerBalanceCents(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "customer")
+      .select(col("c_custkey").as("ck"),
+        expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)").as("v"))
+
+  /** Balances in cents `v` of the customers in ASIA and EUROPE, with
+    * `is_a` true for ASIA.
+    */
+  def asiaEuropeBalances(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "customer")
+      .join(broadcast(t(s, dir, "nation")
+        .select(col("n_nationkey"), col("n_regionkey"))),
+        col("c_nationkey") === col("n_nationkey"))
+      .join(broadcast(t(s, dir, "region")
+        .select(col("r_regionkey"), col("r_name"))),
+        col("n_regionkey") === col("r_regionkey"))
+      .filter(col("r_name").isin("ASIA", "EUROPE"))
+      .select(expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)")
+        .as("v"), (col("r_name") === "ASIA").as("is_a"))
+
+  /** Per market segment `sg`: customer count `ng` and the first two
+    * moments of the balance in cents, `sg1` and `sg2`.
+    */
+  def segmentBalanceMoments(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "customer")
+      .select(col("c_mktsegment").as("sg"),
+        expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)").as("v"))
+      .groupBy(col("sg"))
+      .agg(count(lit(1)).as("ng"), sum(col("v")).as("sg1"),
+        sum(col("v") * col("v")).as("sg2"))
+
+  /** Each supplier `sk` at deterministic pseudo-random coordinates `x`,
+    * `y` in [0, 1,000,000).
+    */
+  def supplierPoints(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "supplier")
+      .select(col("s_suppkey").as("sk"),
+        pmod(col("s_suppkey") * 48271L + 99991L, lit(1000000L)).as("x"),
+        pmod(col("s_suppkey") * 16807L + 12347L, lit(1000000L)).as("y"))
+
+  /** `embeddings` with the vector as an array of doubles. */
+  def embeddingsAsDouble(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "embeddings").select(col("vec_id"),
+      transform(col("embedding"), x => x.cast("double")).as("embedding"))
+
+  /** The three literal search queries (`query_id`, `query_text`) of the
+    * BM25 gallery; [[bm25OracleSql]] callers pass the same VALUES.
+    */
+  def bm25Queries(s: SparkSession): DataFrame = {
+    import s.implicits._
+    Seq(
+      (1L, "spark window agg"),
+      (2L, "vector scan batch"),
+      (3L, "customer stream query")).toDF("query_id", "query_text")
   }
 
 
@@ -332,6 +566,15 @@ private[graft] object EntryShared {
         .as("f_digit"),
       when(col("lang") === "en", 1.0).otherwise(0.0).as("y"))
     (feat, Seq("f_bias", "f_len", "f_space", "f_digit"))
+  }
+
+  /** [[classifierFeatures]] and the weights that 3 logistic-GD steps at
+    * lr 0.5 learn on them, the model every classifier query scores.
+    */
+  def classifierModel(s: SparkSession, dir: String)
+      : (DataFrame, Seq[String], Array[Double]) = {
+    val (feat, cols) = classifierFeatures(s, dir)
+    (feat, cols, LinearModel.logisticGd(feat, cols, "y", lr = 0.5, nIter = 3))
   }
 
   /** One unrolled greedy max-cover round for the q139 oracle: gains over

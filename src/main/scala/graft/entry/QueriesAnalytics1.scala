@@ -139,11 +139,7 @@ private[graft] object QueriesAnalytics1 {
       // quality vs destination quality — PageRank q134 conflates them);
       // 2 fixed mutual-reinforcement rounds, L2 norms folded in as
       // broadcast 1-row frames. Top-15 authorities on ROUNDED scores.
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val ev = events(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"))
+      val ev = userItemEvents(s, dir)
       val edges = ev.withColumn("src", lag(col("item"), 1).over(byUser))
         .filter(col("src").isNotNull && col("src") =!= col("item"))
         .select(col("src"), col("item").as("dst"))
@@ -185,11 +181,7 @@ private[graft] object QueriesAnalytics1 {
       // agree" metric next to q128's fusion. Each common doc contributes
       // the SUFFIX sum of (1-p)p^(d-1)/d from depth max(ra, rb): the
       // depth table is 10 broadcast rows, the join is rank-pair sized.
-      import s.implicits._
-      val queries = Seq(
-        (1L, "spark window agg"),
-        (2L, "vector scan batch"),
-        (3L, "customer stream query")).toDF("query_id", "query_text")
+      val queries = bm25Queries(s)
       val lex = Search.bm25TopK(t(s, dir, "documents"), "text", "doc_id",
           queries, 10)
         .select(col("query_id"), col("doc_id"),
@@ -237,8 +229,6 @@ private[graft] object QueriesAnalytics1 {
       // the first 80% of each user's stream (one window shuffle), argmax
       // next per prev type, held-out accuracy on the remaining 20% —
       // the sequence-model sanity baseline over behavioral data.
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
       val seq0 = events(s, dir)
         .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
         .withColumn("prev", lag(col("event_type"), 1).over(byUser))
@@ -288,8 +278,6 @@ private[graft] object QueriesAnalytics1 {
       // counts (counts-only after one window shuffle), next to the
       // unconditional H(next) — the gap is how much the previous event
       // predicts the next one (the sequence-level twin of q152's MI).
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
       val tr = events(s, dir)
         .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
         .withColumn("prev", lag(col("event_type"), 1).over(byUser))
@@ -399,9 +387,7 @@ private[graft] object QueriesAnalytics1 {
       // ROC AUC of the q138/q144 classifier via the tie-correct
       // Mann-Whitney rank-sum: distinct-score table + one two-phase
       // cumulative count gives average ranks without any global sort.
-      val (feat, cols) = classifierFeatures(s, dir)
-      val w = graft.ops.LinearModel.logisticGd(feat, cols, "y",
-        lr = 0.5, nIter = 3)
+      val (feat, cols, w) = classifierModel(s, dir)
       val z = cols.zip(w).map { case (c, wi) => col(c) * lit(wi) }
         .reduce(_ + _)
       val scored = feat.select(col("y"),
@@ -601,14 +587,7 @@ private[graft] object QueriesAnalytics1 {
       // bounded, so the product window is safe at any customer count);
       // the product-limit estimator is exp(Σ ln((n−d)/n)) over event
       // times — integer-derived ratios, 6-dp parity holds cross-engine.
-      val maxD = t(s, dir, "orders").agg(max(col("o_orderdate")).as("mx"))
-      val cust = t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(min(col("o_orderdate")).as("first"),
-          max(col("o_orderdate")).as("last"))
-        .crossJoin(broadcast(maxD))
-        .select(datediff(col("last"), col("first")).cast("long").as("dur"),
-          (datediff(col("mx"), col("last")) > 90).as("event"))
+      val cust = survivalCohort(s, dir)
       val byDur = cust.groupBy(col("dur"))
         .agg(count(lit(1)).as("c_all"),
           sum(when(col("event"), 1L).otherwise(0L)).as("d_events"))
@@ -621,12 +600,10 @@ private[graft] object QueriesAnalytics1 {
           col("n_total") - (col("cum_all") - col("c_all")))
       // n_risk == d_events can only happen at the maximal duration (no
       // one outlives it) — excluded so ln stays finite on both engines.
-      val w = Window.orderBy(col("dur"))
-        .rowsBetween(Window.unboundedPreceding, 0)
       risk.filter(col("d_events") > 0 && col("n_risk") > col("d_events"))
         .withColumn("survival", round(exp(sum(log(
           (col("n_risk") - col("d_events")).cast("double") /
-            col("n_risk").cast("double"))).over(w)), 6))
+            col("n_risk").cast("double"))).over(durRunning)), 6))
         .select(col("dur").as("duration_days"), col("n_risk"),
           col("d_events"), col("survival"))
         .orderBy(col("duration_days"))
@@ -1361,11 +1338,7 @@ private[graft] object QueriesAnalytics1 {
       // subgraph miners start from. Six fixed peel rounds, each one degree
       // aggregate + two semi-joins on 8-byte ids, checkpoint-truncated;
       // the oracle replays the rounds unrolled as plain SQL.
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val ev = events(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"))
+      val ev = userItemEvents(s, dir)
       val edges = ev.withColumn("src", lag(col("item"), 1).over(byUser))
         .filter(col("src").isNotNull && col("item").isNotNull &&
           col("src") =!= col("item"))
@@ -1380,11 +1353,7 @@ private[graft] object QueriesAnalytics1 {
       // (Bellman-Ford with unit weights): how tightly the item space is
       // connected, and the reachable-radius profile. State is |V| 16-byte
       // rows, one state-edge join per round.
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val ev = events(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"))
+      val ev = userItemEvents(s, dir)
       val edges = ev.withColumn("src", lag(col("item"), 1).over(byUser))
         .filter(col("src").isNotNull && col("item").isNotNull &&
           col("src") =!= col("item"))

@@ -337,11 +337,7 @@ private[graft] object QueriesAnalytics2 {
       // IDCG from the true relevant count. Labels come from the same
       // posting join the ranker uses (term-keyed, bounded), never a scan
       // of docs x queries.
-      import s.implicits._
-      val queries = Seq(
-        (1L, "spark window agg"),
-        (2L, "vector scan batch"),
-        (3L, "customer stream query")).toDF("query_id", "query_text")
+      val queries = bm25Queries(s)
       val docs = t(s, dir, "documents")
       val ranked = Search.bm25TopK(docs, "text", "doc_id", queries, 10)
       val qt = queries.select(col("query_id"), explode(expr(
@@ -608,9 +604,7 @@ private[graft] object QueriesAnalytics2 {
       // coefficients as literals, so selection is one scan + bounded
       // top-k. Margins are rounded BEFORE ordering so the cut is
       // engine-stable.
-      val (feat, cols) = classifierFeatures(s, dir)
-      val wts = graft.ops.LinearModel.logisticGd(feat, cols, "y",
-        lr = 0.5, nIter = 3)
+      val (_, _, wts) = classifierModel(s, dir)
       val len = length(col("text")).cast("double")
       val scored = t(s, dir, "documents").select(col("doc_id"),
         (lit(wts(0)) + lit(wts(1)) * (len / 100.0) +
@@ -1073,9 +1067,7 @@ private[graft] object QueriesAnalytics2 {
       // disagree on the decile boundary), deciles via the two-phase
       // global ranker (no whole-table window), cumulative positive share
       // and lift per decile.
-      val (feat, cols) = classifierFeatures(s, dir)
-      val wts = graft.ops.LinearModel.logisticGd(feat, cols, "y",
-        lr = 0.5, nIter = 3)
+      val (_, _, wts) = classifierModel(s, dir)
       val len = length(col("text")).cast("double")
       val scored = t(s, dir, "documents").select(col("doc_id"),
         when(col("lang") === "en", 1L).otherwise(0L).as("y"),
@@ -1611,10 +1603,7 @@ private[graft] object QueriesAnalytics2 {
       // counted from a lag over the calendar-bounded day series, then the
       // closed-form normal approximation z = (R - mu_R)/sigma_R from the
       // integer (n1, n2) counts — floats only in the final statistic.
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(expr("CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS " +
-          "BIGINT)) AS BIGINT)").as("cents"))
+      val daily = dailyOrderCents(s, dir)
       val st = daily.agg(sum(col("cents")).as("tot"),
         count(lit(1)).as("n"))
       val signed = daily.crossJoin(broadcast(st))
@@ -1957,10 +1946,7 @@ private[graft] object QueriesAnalytics2 {
       // variance composition drops to double at the end — below 2^53
       // (every oracle sf) that composition is still bit-exact, so the
       // block-maxima statistics stay engine-stable.
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(expr("CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS " +
-          "BIGINT)) AS BIGINT)").as("cents"))
+      val daily = dailyOrderCents(s, dir)
       val blocks = daily
         .groupBy(date_trunc("month", col("day")).as("mth"))
         .agg(max(expr("cents div 100")).as("mx"))
@@ -2276,10 +2262,7 @@ private[graft] object QueriesAnalytics2 {
       // rank over (sum, rep), so no float ever decides an ordering. The
       // only data-sized pass is the daily aggregate + the position
       // equi-join (200*168 bounded rows).
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(expr("CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS " +
-          "BIGINT)) AS BIGINT)").as("cents"))
+      val daily = dailyOrderCents(s, dir)
       val idx = PrefixSum.globalRank(daily, Seq(col("day")), "tpos")
       val st = idx.agg(count(lit(1)).as("nd"))
       val pos = s.range(1, 201).select(col("id").as("rep"))
@@ -2377,16 +2360,7 @@ private[graft] object QueriesAnalytics2 {
       // one chained two-phase prefix-sum pass over the distinct-value
       // table), so the only floats are the three final divisions.
       // Complements KS (q168), JS (q270) and Mann-Whitney (q278).
-      val geo = t(s, dir, "customer")
-        .join(broadcast(t(s, dir, "nation")
-          .select(col("n_nationkey"), col("n_regionkey"))),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")
-          .select(col("r_regionkey"), col("r_name"))),
-          col("n_regionkey") === col("r_regionkey"))
-        .filter(col("r_name").isin("ASIA", "EUROPE"))
-        .select(expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)")
-          .as("v"), (col("r_name") === "ASIA").as("is_a"))
+      val geo = asiaEuropeBalances(s, dir)
       val byVal = geo.groupBy(col("v"))
         .agg(sum(when(col("is_a"), 1L).otherwise(0L)).as("ca"),
           sum(when(!col("is_a"), 1L).otherwise(0L)).as("cb"))

@@ -370,8 +370,6 @@ private[graft] object QueriesCore {
     }),
 
     "q30_sessionize" -> ((s, dir) => {
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
       events(s, dir)
         .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
         .withColumn("new_sess",
@@ -395,7 +393,7 @@ private[graft] object QueriesCore {
 
     "q32_orc_roundtrip" -> ((s, dir) => {
       // lineitem -> snappy ORC -> read back -> aggregate (SURVEY.md A4/A5/A21)
-      val path = s"${sys.props("java.io.tmpdir")}/graft_q32_orc"
+      val path = scratchDir("q32_orc")
       // repartition before write: a filtered slice should not fan out into
       // one tiny file per input partition (small-files discipline), and
       // repartition (unlike coalesce) keeps the scan+filter fully parallel
@@ -411,7 +409,7 @@ private[graft] object QueriesCore {
 
     "q33_text_roundtrip" -> ((s, dir) => {
       // customer -> pipe-delimited text -> read with DDL schema (A9, TextDelimited)
-      val path = s"${sys.props("java.io.tmpdir")}/graft_q33_text"
+      val path = scratchDir("q33_text")
       val tbl = graft.io.TextTable(path,
         graft.io.SchemaSpec.Ddl(
           "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, c_mktsegment string"),
@@ -426,7 +424,7 @@ private[graft] object QueriesCore {
     "q34_partition_prune" -> ((s, dir) => {
       // write partitioned by derived year, read back pruned via the
       // reference's filter-string grammar (A11/A12)
-      val path = s"${sys.props("java.io.tmpdir")}/graft_q34_part"
+      val path = scratchDir("q34_part")
       // one file per partition value: repartition on the partition column
       // before a partitionBy write (the layout a partitioned table wants)
       t(s, dir, "orders").withColumn("yr", year(col("o_orderdate")))
@@ -774,8 +772,7 @@ private[graft] object QueriesCore {
       // at cosine 0.995 is ~1e-6: the LSH output must EQUAL the planted
       // set. sigBits sizes the bucket count — it must grow with the corpus
       // (buckets ~ n/loadFactor) or per-bucket occupancy goes quadratic.
-      val emb = t(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("embedding"))
+      val emb = embeddingsAsDouble(s, dir)
       val d = size(col("embedding"))
       val perturbed = emb.select((col("vec_id") + 100000L).as("vec_id"),
         transform(col("embedding"), (x, i) =>
@@ -1121,8 +1118,7 @@ private[graft] object QueriesCore {
       // a wide margin and recall needs no O(n^2) scan. A hit requires the
       // source's cell to be among the query's nProbe probed cells — the
       // property that breaks when centroids don't track data geometry.
-      val emb = t(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("embedding"))
+      val emb = embeddingsAsDouble(s, dir)
       val d = size(col("embedding"))
       val queries = emb.filter(col("vec_id") < 20)
         .select((col("vec_id") + 100000L).as("vec_id"),

@@ -27,8 +27,7 @@ private[graft] object QueriesPipeline {
       // are global witnesses, a hard 0; (2) >=90% of the planted duplicates
       // are caught, which requires source and copy to share a k-means cell
       // — the property that breaks when centroids ignore data geometry.
-      val emb = t(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("embedding"))
+      val emb = embeddingsAsDouble(s, dir)
       val d = size(col("embedding"))
       val perturbed = emb.select((col("vec_id") + 100000L).as("vec_id"),
         transform(col("embedding"), (x, i) =>
@@ -186,8 +185,7 @@ private[graft] object QueriesPipeline {
       // corpus. Ground truth as in q72: queries are perturbations of
       // corpus vectors (cosine ~0.995 vs ~0.35 background), top-1 must
       // recover the source through the persisted layout.
-      val emb = t(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("embedding"))
+      val emb = embeddingsAsDouble(s, dir)
       val root = scratchDir("q82_ivf")
       Similarity.buildIvfIndex(emb, "embedding", "vec_id", root,
         nCentroids = 16, kmeansIters = 3)
@@ -363,8 +361,7 @@ private[graft] object QueriesPipeline {
       // (planted perturbed copies, per-pair LSH miss probability ~1e-6 at
       // sigBits=12 x 12 tables), so the survivors must be EXACTLY the
       // original ids — the oracle is a plain scan of embeddings.
-      val emb = t(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("embedding"))
+      val emb = embeddingsAsDouble(s, dir)
       val d = size(col("embedding"))
       val perturbed = emb.select((col("vec_id") + 100000L).as("vec_id"),
         transform(col("embedding"), (x, i) =>
@@ -424,11 +421,7 @@ private[graft] object QueriesPipeline {
       // posting lists built in one corpus pass, query terms broadcast,
       // per-term scores fixed to integer micro-units before the sum so
       // ranks are float-order-independent (Search.scala scale notes).
-      import s.implicits._
-      val queries = Seq(
-        (1L, "spark window agg"),
-        (2L, "vector scan batch"),
-        (3L, "customer stream query")).toDF("query_id", "query_text")
+      val queries = bm25Queries(s)
       Search.bm25TopK(t(s, dir, "documents"), "text", "doc_id", queries, 10)
         .orderBy(col("query_id"), col("rank"))
     }),
@@ -1064,11 +1057,7 @@ private[graft] object QueriesPipeline {
       // exact integer micro-units so the fused order is float-free). The
       // RAG-stack ranking primitive: each system ranks independently,
       // fusion is one tiny union + aggregate over <= 2k rows per query.
-      import s.implicits._
-      val queries = Seq(
-        (1L, "spark window agg"),
-        (2L, "vector scan batch"),
-        (3L, "customer stream query")).toDF("query_id", "query_text")
+      val queries = bm25Queries(s)
       val lex = Search.bm25TopK(t(s, dir, "documents"), "text", "doc_id",
           queries, 10)
         .select(col("query_id"), col("doc_id"),
@@ -1126,8 +1115,7 @@ private[graft] object QueriesPipeline {
       // subspaces in one aggregate per round; scoring never touches the
       // original vectors.
       import s.implicits._
-      val emb = t(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("embedding"))
+      val emb = embeddingsAsDouble(s, dir)
       val planted = emb.filter(col("vec_id") < 20)
         .select((col("vec_id") + 100000L).as("vec_id"),
           transform(col("embedding"), x => x * lit(1.05)).as("embedding"))
@@ -1158,8 +1146,7 @@ private[graft] object QueriesPipeline {
       // exactly 1 -> same probed cell, near-identical codes) must come
       // back top-1.
       import s.implicits._
-      val emb = t(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("embedding"))
+      val emb = embeddingsAsDouble(s, dir)
       val planted = emb.filter(col("vec_id") < 20)
         .select((col("vec_id") + 100000L).as("vec_id"),
           transform(col("embedding"), x => x * lit(1.05)).as("embedding"))
@@ -1203,11 +1190,7 @@ private[graft] object QueriesPipeline {
       // sequence): the link-analysis quality signal web-scale corpus
       // pipelines rank hosts/items with. Fixed 5 damped iterations with
       // dangling-mass redistribution — deterministic and engine-portable.
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val ev = events(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"))
+      val ev = userItemEvents(s, dir)
       val edges = ev.withColumn("src", lag(col("item"), 1).over(byUser))
         .filter(col("src").isNotNull && col("src") =!= col("item"))
         .groupBy(col("src"), col("item").as("dst"))
@@ -1283,9 +1266,7 @@ private[graft] object QueriesPipeline {
       // partial-agg sums). Output: learned coefficients + training-set
       // log-loss/accuracy, all replayed by the oracle's unrolled updates.
       import s.implicits._
-      val (feat, cols) = classifierFeatures(s, dir)
-      val w = graft.ops.LinearModel.logisticGd(feat, cols, "y",
-        lr = 0.5, nIter = 3)
+      val (feat, cols, w) = classifierModel(s, dir)
       val ev = graft.ops.LinearModel.logisticEval(feat, cols, "y", w).head()
       (cols.zipWithIndex.map { case (c, i) => (i.toLong, c, w(i)) } ++
         Seq((4L, "__log_loss", ev.getDouble(0)),
@@ -1372,9 +1353,7 @@ private[graft] object QueriesPipeline {
       // predicted probability, compare mean prediction vs observed
       // positive rate per bin — the "is the quality score a probability
       // or just a ranking" audit. One aggregate over the scored corpus.
-      val (feat, cols) = classifierFeatures(s, dir)
-      val w = graft.ops.LinearModel.logisticGd(feat, cols, "y",
-        lr = 0.5, nIter = 3)
+      val (feat, cols, w) = classifierModel(s, dir)
       val z = cols.zip(w).map { case (c, wi) => col(c) * lit(wi) }
         .reduce(_ + _)
       feat.withColumn("p", lit(1.0) / (lit(1.0) + exp(-z)))

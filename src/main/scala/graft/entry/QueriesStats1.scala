@@ -60,16 +60,7 @@ private[graft] object QueriesStats1 {
       // transport-cost companion to q293's energy distance). Value gaps
       // come from a rank self-join (two-phase ranker), never a global
       // lead window.
-      val geo = t(s, dir, "customer")
-        .join(broadcast(t(s, dir, "nation")
-          .select(col("n_nationkey"), col("n_regionkey"))),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")
-          .select(col("r_regionkey"), col("r_name"))),
-          col("n_regionkey") === col("r_regionkey"))
-        .filter(col("r_name").isin("ASIA", "EUROPE"))
-        .select(expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)")
-          .as("v"), (col("r_name") === "ASIA").as("is_a"))
+      val geo = asiaEuropeBalances(s, dir)
       val byVal = geo.groupBy(col("v"))
         .agg(sum(when(col("is_a"), 1L).otherwise(0L)).as("ca"),
           sum(when(!col("is_a"), 1L).otherwise(0L)).as("cb"))
@@ -405,10 +396,7 @@ private[graft] object QueriesStats1 {
       // Subgroup stats stay exact integers (weekly totals, integer
       // ranges); the limits are fixed-order doubles, so the violation
       // comparisons agree across engines. Calendar-bounded week table.
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(expr("CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS " +
-          "BIGINT)) AS BIGINT)").as("cents"))
+      val daily = dailyOrderCents(s, dir)
       val d0 = daily.agg(min(col("day")).as("dmin"))
       val weeks = daily.crossJoin(broadcast(d0))
         .select(expr("datediff(day, dmin) div 7").as("wk"), col("cents"))
@@ -579,10 +567,7 @@ private[graft] object QueriesStats1 {
       // (variance sum 1/k - 1/k^2) — record-value theory says trends
       // inflate the count. Running max over the calendar-bounded day
       // series; harmonic sums from the exact day index, one pass.
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(expr("CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS " +
-          "BIGINT)) AS BIGINT)").as("cents"))
+      val daily = dailyOrderCents(s, dir)
       // calendar-bounded series: a global ordered window is safe here
       val wPrev = Window.orderBy(col("day"))
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -1193,16 +1178,7 @@ private[graft] object QueriesStats1 {
       // (F_n - G_m)^2, computed over the value-grouped table with the
       // same exact-integer prefix-sum CDFs — (CA*m - CB*n)^2 squares
       // once in double, weighted by the value's multiplicity.
-      val geo = t(s, dir, "customer")
-        .join(broadcast(t(s, dir, "nation")
-          .select(col("n_nationkey"), col("n_regionkey"))),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")
-          .select(col("r_regionkey"), col("r_name"))),
-          col("n_regionkey") === col("r_regionkey"))
-        .filter(col("r_name").isin("ASIA", "EUROPE"))
-        .select(expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)")
-          .as("v"), (col("r_name") === "ASIA").as("is_a"))
+      val geo = asiaEuropeBalances(s, dir)
       val byVal = geo.groupBy(col("v"))
         .agg(sum(when(col("is_a"), 1L).otherwise(0L)).as("ca"),
           sum(when(!col("is_a"), 1L).otherwise(0L)).as("cb"))
@@ -1583,12 +1559,7 @@ private[graft] object QueriesStats1 {
       // size and the df-4 chi-square survival of 4F the large-sample
       // p. Everything after the group aggregate is broadcast
       // arithmetic.
-      val g = t(s, dir, "customer")
-        .select(col("c_mktsegment").as("sg"),
-          expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)").as("v"))
-        .groupBy(col("sg"))
-        .agg(count(lit(1)).as("ng"), sum(col("v")).as("sg1"),
-          sum(col("v") * col("v")).as("sg2"))
+      val g = segmentBalanceMoments(s, dir)
       val stat = g.agg(count(lit(1)).as("k"), sum(col("ng")).as("n"),
           sum(col("sg1")).as("s1"), sum(col("sg2")).as("s2"),
           sum(col("sg1").cast("double") * col("sg1") / col("ng"))
@@ -1655,12 +1626,7 @@ private[graft] object QueriesStats1 {
       // pairs from one set of per-group exact moments plus the pooled
       // MSE — the bounded 5x5 pair grid is broadcast arithmetic, and
       // the df=inf k=5 critical value 3.86 flags significance.
-      val g = t(s, dir, "customer")
-        .select(col("c_mktsegment").as("sg"),
-          expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)").as("v"))
-        .groupBy(col("sg"))
-        .agg(count(lit(1)).as("ng"), sum(col("v")).as("sg1"),
-          sum(col("v") * col("v")).as("sg2"))
+      val g = segmentBalanceMoments(s, dir)
       val mse = g.agg(sum(col("ng")).as("n"), count(lit(1)).as("k"),
           sum(col("sg2")).as("s2"),
           sum(col("sg1").cast("double") * col("sg1") / col("ng"))
@@ -1690,15 +1656,7 @@ private[graft] object QueriesStats1 {
       // agreement = bias +/- 1.96 sd, and the share of orders outside
       // their own limits. Moments are exact integer cents in one
       // grouped pass; the limits comparison re-uses the same frame.
-      val diffs = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * (1 - l_discount) * " +
-          "(1 + l_tax) * 100 + 0.5) AS BIGINT)")).as("calc"))
-        .join(t(s, dir, "orders").select(col("o_orderkey"),
-          expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-            .as("stated")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("calc") - col("stated")).as("diff"))
+      val diffs = orderTotalDiffs(s, dir)
       // diff^2 can pass 2^63 at scale: accumulate the square sum as
       // DECIMAL(38,0) (exact, overflow-free) and go double only once
       val mom = diffs.agg(count(lit(1)).as("n"), sum(col("diff")).as("s1"),
@@ -2000,15 +1958,7 @@ private[graft] object QueriesStats1 {
       // exact (decimal square sum), the normal out-of-spec prediction
       // uses the A&S 7.1.26 erf polynomial, and observed ppm is an
       // exact integer count.
-      val diffs = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * (1 - l_discount) * " +
-          "(1 + l_tax) * 100 + 0.5) AS BIGINT)")).as("calc"))
-        .join(t(s, dir, "orders").select(col("o_orderkey"),
-          expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-            .as("stated")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("calc") - col("stated")).as("diff"))
+      val diffs = orderTotalDiffs(s, dir)
       val lim = 100.0
       val mom = diffs.agg(count(lit(1)).as("n"), sum(col("diff")).as("s1"),
           sum(col("diff").cast("decimal(19,0)") *
@@ -2209,13 +2159,11 @@ private[graft] object QueriesStats1 {
         .crossJoin(broadcast(tot))
         .withColumn("n_risk",
           col("n_total") - (col("cum_all") - col("c_all")))
-      val w = Window.orderBy(col("dur"))
-        .rowsBetween(Window.unboundedPreceding, 0)
       val surv = risk
         .filter(col("d_events") > 0 && col("n_risk") > col("d_events"))
         .withColumn("s", exp(sum(log(
           (col("n_risk") - col("d_events")).cast("double") /
-            col("n_risk").cast("double"))).over(w)))
+            col("n_risk").cast("double"))).over(durRunning)))
         .filter(col("dur") <= 365)
       val steps = surv
         .withColumn("pd", coalesce(lag(col("dur"), 1)
@@ -2691,9 +2639,7 @@ private[graft] object QueriesStats1 {
       // no-skill floor). Shares classifierFeatures + the GD trainer
       // with q138/q144 so the decomposition audits EXACTLY that model;
       // one scored-corpus pass + one bounded 10-bin aggregate.
-      val (feat, cols) = classifierFeatures(s, dir)
-      val w = graft.ops.LinearModel.logisticGd(feat, cols, "y",
-        lr = 0.5, nIter = 3)
+      val (feat, cols, w) = classifierModel(s, dir)
       val z = cols.zip(w).map { case (c, wi) => col(c) * lit(wi) }
         .reduce(_ + _)
       val scored = feat
@@ -3360,12 +3306,7 @@ private[graft] object QueriesStats1 {
       // and every OLS standard error lean on. Two passes: moments,
       // then residual moments against t; chi2 df=1 survival via the
       // A&S erf polynomial.
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg((sum(floor(col("o_totalprice") * 100 + 0.5)) / 100.0)
-          .cast("double").as("y"))
-        .select(datediff(col("day"), lit("1992-01-01")).cast("double")
-          .as("tt"), col("y"))
+      val daily = dailyRevenueTrend(s, dir)
       val mo = daily.agg(count(lit(1)).cast("double").as("n"),
           sum(col("tt")).as("st"), sum(col("tt") * col("tt")).as("stt"),
           sum(col("y")).as("sy"), sum(col("tt") * col("y")).as("sty"))
@@ -3406,12 +3347,7 @@ private[graft] object QueriesStats1 {
       // — the moment-based cross-check on q362's ECDF-based
       // Lilliefors (they reject for different shapes of
       // non-normality).
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg((sum(floor(col("o_totalprice") * 100 + 0.5)) / 100.0)
-          .cast("double").as("y"))
-        .select(datediff(col("day"), lit("1992-01-01")).cast("double")
-          .as("tt"), col("y"))
+      val daily = dailyRevenueTrend(s, dir)
       val mo = daily.agg(count(lit(1)).cast("double").as("n"),
           sum(col("tt")).as("st"), sum(col("tt") * col("tt")).as("stt"),
           sum(col("y")).as("sy"), sum(col("tt") * col("y")).as("sty"))

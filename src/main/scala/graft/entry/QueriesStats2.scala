@@ -634,10 +634,7 @@ private[graft] object QueriesStats2 {
       // from value-grouped counts + grouped prefix sums over the
       // shared value grid. No pair enumeration at any scale; exact
       // integers until the two final divisions.
-      val base = t(s, dir, "orders")
-        .filter(year(col("o_orderdate")).isin(1995, 1996))
-        .select(year(col("o_orderdate")).cast("long").as("yr"),
-          expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").as("v"))
+      val base = orderCentsByYear(s, dir)
       val cnt = base.groupBy(col("yr"), col("v"))
         .agg(count(lit(1)).as("c"))
       val grid = base.select(col("v")).distinct()
@@ -994,14 +991,7 @@ private[graft] object QueriesStats2 {
       // bounded distinct-duration table; every risk set comes from ONE
       // suffix count (two-phase prefix sum), so no per-customer window
       // exists at any customer count.
-      val maxD = t(s, dir, "orders").agg(max(col("o_orderdate")).as("mx"))
-      val cust = t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(min(col("o_orderdate")).as("first"),
-          max(col("o_orderdate")).as("last"))
-        .crossJoin(broadcast(maxD))
-        .select(datediff(col("last"), col("first")).cast("long").as("dur"),
-          (datediff(col("mx"), col("last")) > 90).as("event"))
+      val cust = survivalCohort(s, dir)
       val byDur = cust.groupBy(col("dur"))
         .agg(count(lit(1)).as("c_all"),
           sum(when(col("event"), 1L).otherwise(0L)).as("d_events"))
@@ -1014,14 +1004,12 @@ private[graft] object QueriesStats2 {
           col("n_total") - (col("cum_all") - col("c_all")))
       // the running NA sums are over event rows only — a calendar-bounded
       // frame, so the single-partition window is broadcast-sized
-      val w = Window.orderBy(col("dur"))
-        .rowsBetween(Window.unboundedPreceding, 0)
       risk.filter(col("d_events") > 0)
         .withColumn("ch", sum(col("d_events").cast("double") /
-          col("n_risk").cast("double")).over(w))
+          col("n_risk").cast("double")).over(durRunning))
         .withColumn("vs", sum(col("d_events").cast("double") /
           (col("n_risk").cast("double") * col("n_risk").cast("double")))
-          .over(w))
+          .over(durRunning))
         .select(col("dur").as("duration_days"), col("n_risk"),
           col("d_events"), round(col("ch"), 6).as("cum_hazard"),
           round(exp(-col("ch")), 6).as("fh_survival"),
@@ -1123,8 +1111,6 @@ private[graft] object QueriesStats2 {
       // quadratic hub fanout (the 100-item fixture needs none). Ordering
       // is on the ROUNDED score so ulp-level sum differences can't
       // reshuffle the top-k across engines.
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
       // cap each user at their first 25 events so the graph's density is
       // scale-invariant: uncapped, the 100-item fixture saturates to a
       // complete graph at sf0.1 and the non-adjacent candidate set is empty
@@ -1228,9 +1214,7 @@ private[graft] object QueriesStats2 {
       // to q259/q364. The series is calendar-bounded, so the lag window
       // and both aggregates run over a broadcast-sized frame; MASE scales
       // every model by the naive in-sample MAE.
-      val daily = events(s, dir)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).cast("double").as("y"))
+      val daily = dailyEvents(s, dir)
       val w = Window.orderBy(col("d"))
       val scored = daily
         .withColumn("f1", lag(col("y"), 1).over(w))
@@ -1314,10 +1298,7 @@ private[graft] object QueriesStats2 {
       // two-phase global rank (no whole-table NTILE window), so both the
       // partition and every share are engine-identical at any customer
       // count.
-      val base = t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-          .as("cents"))
+      val base = customerOrderCents(s, dir)
       val ranked = graft.ops.PrefixSum.globalRank(
           base, Seq(col("cents"), col("o_custkey")), "rk")
         .crossJoin(broadcast(base.agg(count(lit(1)).as("n"))))
@@ -1341,10 +1322,7 @@ private[graft] object QueriesStats2 {
       // q170 (Gini) and q327 (Theil). Atkinson needs one extra sqrt
       // moment; Palma reuses the exact decile partition, so everything
       // closes in two tiny aggregates over integer-cent sums.
-      val base = t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-          .as("cents"))
+      val base = customerOrderCents(s, dir)
       val ranked = graft.ops.PrefixSum.globalRank(
           base, Seq(col("cents"), col("o_custkey")), "rk")
         .crossJoin(broadcast(base.agg(count(lit(1)).as("n"))))
@@ -1405,22 +1383,7 @@ private[graft] object QueriesStats2 {
       // Σ S(s-)·d_k/n with S the any-event KM survival, all from ONE
       // suffix count over the calendar-bounded distinct-duration table.
       // The exclusive running product is a [unbounded, -1) log-sum.
-      val maxD = t(s, dir, "orders").agg(max(col("o_orderdate")).as("mx"))
-      val lastOrd = t(s, dir, "orders")
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("o_custkey"))
-            .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)))
-        .filter(col("rn") === 1)
-        .select(col("o_custkey"), col("o_totalprice").as("last_price"))
-      val cust = t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(min(col("o_orderdate")).as("first"),
-          max(col("o_orderdate")).as("last"))
-        .crossJoin(broadcast(maxD))
-        .join(lastOrd, Seq("o_custkey"))
-        .select(datediff(col("last"), col("first")).cast("long").as("dur"),
-          (datediff(col("mx"), col("last")) > 90).as("event"),
-          (col("last_price") >= 150000.0).as("big"))
+      val cust = survivalCohortBySize(s, dir)
       val byDur = cust.groupBy(col("dur"))
         .agg(count(lit(1)).as("c_all"),
           sum(when(col("event") && col("big"), 1L).otherwise(0L)).as("d1"),
@@ -1435,8 +1398,6 @@ private[graft] object QueriesStats2 {
         .filter(col("d1") + col("d2") > 0)
       val wPrev = Window.orderBy(col("dur"))
         .rowsBetween(Window.unboundedPreceding, -1)
-      val wCum = Window.orderBy(col("dur"))
-        .rowsBetween(Window.unboundedPreceding, 0)
       val dAll = (col("d1") + col("d2")).cast("double")
       risk
         // ln(1 - d/n) guarded: only the terminal duration can have n == d
@@ -1449,10 +1410,10 @@ private[graft] object QueriesStats2 {
           exp(coalesce(sum(col("lnS")).over(wPrev), lit(0.0))))
         .withColumn("cif1", sum(col("sPrev") *
           col("d1").cast("double") / col("n_risk").cast("double"))
-          .over(wCum))
+          .over(durRunning))
         .withColumn("cif2", sum(col("sPrev") *
           col("d2").cast("double") / col("n_risk").cast("double"))
-          .over(wCum))
+          .over(durRunning))
         .select(col("dur").as("duration_days"), col("n_risk"), col("d1"),
           col("d2"), round(col("cif1"), 6).as("cif_bigspender"),
           round(col("cif2"), 6).as("cif_other"))
@@ -1492,10 +1453,7 @@ private[graft] object QueriesStats2 {
       // excluded by construction (documented blocked-NN semantics,
       // identical on both engines).
       val r = 40000L
-      val sup = t(s, dir, "supplier")
-        .select(col("s_suppkey").as("sk"),
-          pmod(col("s_suppkey") * 48271L + 99991L, lit(1000000L)).as("x"),
-          pmod(col("s_suppkey") * 16807L + 12347L, lit(1000000L)).as("y"))
+      val sup = supplierPoints(s, dir)
       val offs = s.range(-3, 4).select(col("id").as("dx"))
         .crossJoin(s.range(-3, 4).select(col("id").as("dy")))
       val expd = sup.crossJoin(broadcast(offs))
@@ -1666,9 +1624,7 @@ private[graft] object QueriesStats2 {
       // feeds motif/novelty mining. Day indices from the two-phase
       // global rank; everything after the daily rollup runs on the
       // calendar-bounded frame.
-      val daily = events(s, dir)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).cast("double").as("y"))
+      val daily = dailyEvents(s, dir)
       val stats = daily.agg(avg(col("y")).as("mu"),
         sqrt(avg(col("y") * col("y")) - avg(col("y")) * avg(col("y")))
           .as("sd"))
@@ -1695,22 +1651,7 @@ private[graft] object QueriesStats2 {
       // likelihood score needs only per-group risk counts, so the whole
       // fit runs on the calendar-bounded duration table: one suffix
       // count per group, then three one-row Newton updates.
-      val maxD = t(s, dir, "orders").agg(max(col("o_orderdate")).as("mx"))
-      val lastOrd = t(s, dir, "orders")
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("o_custkey"))
-            .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)))
-        .filter(col("rn") === 1)
-        .select(col("o_custkey"), col("o_totalprice").as("last_price"))
-      val cust = t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(min(col("o_orderdate")).as("first"),
-          max(col("o_orderdate")).as("last"))
-        .crossJoin(broadcast(maxD))
-        .join(lastOrd, Seq("o_custkey"))
-        .select(datediff(col("last"), col("first")).cast("long").as("dur"),
-          (datediff(col("mx"), col("last")) > 90).as("event"),
-          (col("last_price") >= 150000.0).as("big"))
+      val cust = survivalCohortBySize(s, dir)
       val byDur = cust.groupBy(col("dur"))
         .agg(sum(when(!col("big"), 1L).otherwise(0L)).as("c0"),
           sum(when(col("big"), 1L).otherwise(0L)).as("c1"),
@@ -1719,11 +1660,9 @@ private[graft] object QueriesStats2 {
           sum(when(col("event") && col("big"), 1L).otherwise(0L))
             .as("d1"))
       val tot = byDur.agg(sum(col("c0")).as("t0"), sum(col("c1")).as("t1"))
-      val wCum = Window.orderBy(col("dur"))
-        .rowsBetween(Window.unboundedPreceding, 0)
       val evt = byDur
-        .withColumn("cum0", sum(col("c0")).over(wCum))
-        .withColumn("cum1", sum(col("c1")).over(wCum))
+        .withColumn("cum0", sum(col("c0")).over(durRunning))
+        .withColumn("cum1", sum(col("c1")).over(durRunning))
         .crossJoin(broadcast(tot))
         .filter(col("d0") + col("d1") > 0)
         .select(
@@ -1799,9 +1738,7 @@ private[graft] object QueriesStats2 {
       // prefix sums that give the tie-correct rank AUC — no pair
       // enumeration at any scale; the structural components are weighted
       // variances over the bounded score table.
-      val (feat, cols) = classifierFeatures(s, dir)
-      val wts = graft.ops.LinearModel.logisticGd(feat, cols, "y",
-        lr = 0.5, nIter = 3)
+      val (feat, cols, wts) = classifierModel(s, dir)
       val z = cols.zip(wts).map { case (c, wi) => col(c) * lit(wi) }
         .reduce(_ + _)
       val scored = feat.select(col("y"),
@@ -1910,11 +1847,7 @@ private[graft] object QueriesStats2 {
       // Holland-Leinhardt M-A-N profile) say whether item flows are
       // two-way. Everything runs on the distinct-edge table — two
       // semijoins and closed-form null count, no pair enumeration.
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val ev = events(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"))
+      val ev = userItemEvents(s, dir)
       val ed = ev.withColumn("src", lag(col("item"), 1).over(byUser))
         .filter(col("src").isNotNull && col("src") =!= col("item"))
         .select(col("src"), col("item").as("dst"))
@@ -1953,10 +1886,7 @@ private[graft] object QueriesStats2 {
       // bound for DBSCAN's semantics — real growing corpora scale eps
       // down or the space up.
       val eps = 60000L
-      val sup = t(s, dir, "supplier")
-        .select(col("s_suppkey").as("sk"),
-          pmod(col("s_suppkey") * 48271L + 99991L, lit(1000000L)).as("x"),
-          pmod(col("s_suppkey") * 16807L + 12347L, lit(1000000L)).as("y"))
+      val sup = supplierPoints(s, dir)
       val offs = s.range(-1, 2).select(col("id").as("dx"))
         .crossJoin(s.range(-1, 2).select(col("id").as("dy")))
       val expd = sup.crossJoin(broadcast(offs))
@@ -2135,9 +2065,7 @@ private[graft] object QueriesStats2 {
       // complement to q276's runs test and q314's records test. A strict
       // sign-product cut (ties are not turning points), lag/lead over
       // the calendar-bounded daily frame.
-      val daily = events(s, dir)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).cast("double").as("y"))
+      val daily = dailyEvents(s, dir)
       val w = Window.orderBy(col("d"))
       val tp = daily
         .withColumn("yp", lag(col("y"), 1).over(w))
@@ -2200,9 +2128,7 @@ private[graft] object QueriesStats2 {
       // 1.96·√n/2) — the quantile-inference companion to q188/q217.
       // One two-phase global rank + one conditional aggregate; no
       // global-order task at any scale.
-      val base = t(s, dir, "customer")
-        .select(col("c_custkey").as("ck"),
-          expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)").as("v"))
+      val base = customerBalanceCents(s, dir)
       val ranked = graft.ops.PrefixSum.globalRank(
           base, Seq(col("v"), col("ck")), "rk")
         .crossJoin(broadcast(base.agg(count(lit(1)).as("n"))))
@@ -2288,9 +2214,7 @@ private[graft] object QueriesStats2 {
       // threshold-fixed companion to q313's threshold sweep, with MCC as
       // the imbalance-robust headline. One aggregate over the scored
       // frame.
-      val (feat, cols) = classifierFeatures(s, dir)
-      val wts = graft.ops.LinearModel.logisticGd(feat, cols, "y",
-        lr = 0.5, nIter = 3)
+      val (feat, cols, wts) = classifierModel(s, dir)
       val z = cols.zip(wts).map { case (c, wi) => col(c) * lit(wi) }
         .reduce(_ + _)
       val probs = feat.select(col("y"),
@@ -2365,10 +2289,7 @@ private[graft] object QueriesStats2 {
       // q351's VaR numbers: are violations binomially consistent with
       // 5%? The return series is calendar-bounded; the LR closes in two
       // tiny aggregates (x=0 / x=n guarded so ln never sees 0).
-      val daily = t(s, dir, "orders")
-        .groupBy(col("o_orderdate").cast("date").as("d"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-          .cast("double").as("rev"))
+      val daily = dailyOrderRevenue(s, dir)
       val w = Window.orderBy(col("d"))
       val r = daily.withColumn("prev", lag(col("rev"), 1).over(w))
         .filter(col("prev").isNotNull)
@@ -2428,8 +2349,7 @@ private[graft] object QueriesStats2 {
       // pooled OR — the stratified-confounding companion to q230's DiD
       // and q360's IPW. Per-stratum 2x2 cells collapse map-side; the MH
       // algebra runs on the bounded nation table.
-      val oc = t(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("cnt"))
+      val oc = customerOrderCounts(s, dir)
       val base = t(s, dir, "customer")
         .join(oc, col("c_custkey") === col("o_custkey"), "left")
         .select(col("c_nationkey").as("nk"),
@@ -2722,8 +2642,7 @@ private[graft] object QueriesStats2 {
       // minimum confounder strength (on the RR scale) that could explain
       // the association away — the modern sensitivity-analysis one-liner
       // on top of the stratified 2x2 machinery (OR < 1 inverted first).
-      val oc = t(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("cnt"))
+      val oc = customerOrderCounts(s, dir)
       val base = t(s, dir, "customer")
         .join(oc, col("c_custkey") === col("o_custkey"), "left")
         .select(col("c_nationkey").as("nk"),

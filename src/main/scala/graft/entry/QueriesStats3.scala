@@ -173,9 +173,7 @@ private[graft] object QueriesStats3 {
       // sd·probit(p) with Acklam's central-region rational probit
       // (identical formula both engines; every p here is central) — the
       // diagnostic PLOT behind q362/q375's normality tests.
-      val base = t(s, dir, "customer")
-        .select(col("c_custkey").as("ck"),
-          expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)").as("v"))
+      val base = customerBalanceCents(s, dir)
       val st = base.agg(count(lit(1)).as("n"),
         avg(col("v").cast("double") / 100.0).as("mu"),
         sqrt(avg(col("v").cast("double") / 100.0 *
@@ -328,9 +326,7 @@ private[graft] object QueriesStats3 {
       // actual — the leakage-free protocol the in-sample q407 scorecard
       // doesn't give. One exclusive-prefix window over the calendar-
       // bounded daily frame.
-      val daily = events(s, dir)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).cast("double").as("y"))
+      val daily = dailyEvents(s, dir)
       val w = Window.orderBy(col("d"))
         .rowsBetween(Window.unboundedPreceding, -1)
       val rn = Window.orderBy(col("d"))
@@ -351,16 +347,7 @@ private[graft] object QueriesStats3 {
       // brand table, Borda score = Σ (n − rank) — the social-choice
       // merge of conflicting rankings (q161's RBO compares two lists;
       // this FUSES three). Top 10 by Borda, ties to the brand key.
-      val br = t(s, dir, "lineitem")
-        .join(t(s, dir, "part")
-          .select(col("p_partkey"), col("p_brand")),
-          col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(sum(expr(
-          "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"))
-          .as("rev"),
-          sum(col("l_quantity").cast("long")).as("qty"),
-          countDistinct(col("l_orderkey")).as("ords"))
+      val br = brandRevenue(s, dir)
       val wR = Window.orderBy(col("rev").desc, col("p_brand"))
       val wQ = Window.orderBy(col("qty").desc, col("p_brand"))
       val wO = Window.orderBy(col("ords").desc, col("p_brand"))
@@ -385,10 +372,7 @@ private[graft] object QueriesStats3 {
       // completing the q168 KS / q329 CvM GOF family on the same
       // value-grid machinery: grouped counts + two grouped prefix sums,
       // zero pair enumeration.
-      val base = t(s, dir, "orders")
-        .filter(year(col("o_orderdate")).isin(1995, 1996))
-        .select(year(col("o_orderdate")).cast("long").as("yr"),
-          expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").as("v"))
+      val base = orderCentsByYear(s, dir)
       val grid = base.groupBy(col("v"))
         .agg(sum(when(col("yr") === 1995, 1L).otherwise(0L)).as("c1"),
           sum(when(col("yr") === 1996, 1L).otherwise(0L)).as("c2"))
@@ -676,10 +660,7 @@ private[graft] object QueriesStats3 {
       // threshold bursts. best(t) = P_t − min(0, min_{s<t} P_s), all
       // from two windows over the calendar-bounded daily frame; ties
       // resolve to the earliest end then latest start deterministically.
-      val daily = t(s, dir, "orders")
-        .groupBy(col("o_orderdate").cast("date").as("d"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-          .cast("double").as("rev"))
+      val daily = dailyOrderRevenue(s, dir)
       val mu = daily.agg(avg(col("rev")).as("mu"),
         min(col("d")).as("d0"))
       val w = Window.orderBy(col("d"))
@@ -824,12 +805,7 @@ private[graft] object QueriesStats3 {
       // companion to q138's logistic: exp(b) is the weekend rate ratio.
       // Each step is ONE aggregate with the 2-scalar state broadcast
       // back; the 2×2 Newton solve is closed-form Cramer.
-      val daily = events(s, dir)
-        .filter(col("event_type") === "purchase")
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).cast("double").as("y"))
-        .withColumn("x",
-          when(dayofweek(col("d")).isin(1, 7), 1.0).otherwise(0.0))
+      val daily = dailyPurchases(s, dir)
       var fit = daily.agg(log(avg(col("y"))).as("a"))
         .select(col("a"), lit(0.0).as("b"))
       for (it <- 1 to 3) {
@@ -915,10 +891,7 @@ private[graft] object QueriesStats3 {
       // (< ~5.5e7) and cum counts rows per year-cohort, so v·cum_excl
       // stays exact while the cohort has < ~1.6e11 rows (9.2e18 / 5.5e7);
       // past that, compute the integral terms in DECIMAL(38,0).
-      val base = t(s, dir, "orders")
-        .filter(year(col("o_orderdate")).isin(1995, 1996))
-        .select(year(col("o_orderdate")).cast("long").as("yr"),
-          expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").as("v"))
+      val base = orderCentsByYear(s, dir)
       val grid = base.groupBy(col("v"))
         .agg(sum(when(col("yr") === 1995, 1L).otherwise(0L)).as("c1"),
           sum(when(col("yr") === 1996, 1L).otherwise(0L)).as("c2"))
@@ -1022,15 +995,7 @@ private[graft] object QueriesStats3 {
       // the bounded 5×5 grid; each pivot round is two joins on it, with
       // NULL as +infinity.
       val types = Seq("click", "error", "purchase", "signup", "view")
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val tr = events(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          col("event_type").as("dst"))
-        .withColumn("src", lag(col("dst"), 1).over(byUser))
-        .filter(col("src").isNotNull)
-        .groupBy(col("src"), col("dst"))
-        .agg(count(lit(1)).cast("double").as("c"))
+      val tr = eventTransitions(s, dir)
       val rowTot = tr.groupBy(col("src")).agg(sum(col("c")).as("rt"))
       val edges = tr.join(rowTot, Seq("src"))
         .select(col("src"), col("dst"), (-log(col("c") / col("rt")))
@@ -1348,15 +1313,7 @@ private[graft] object QueriesStats3 {
       // first and last weeks: retained / added / dropped edges and edge
       // Jaccard — the graph-evolution read on q134's fixture. Two
       // distinct-edge rollups + one full outer join on id pairs.
-      val d0 = events(s, dir).agg(min(to_date(col("ts"))).as("d0"))
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val ev = events(s, dir).crossJoin(broadcast(d0))
-        .select(col("user_id"), col("event_id"), col("ts"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"),
-          datediff(to_date(col("ts")), col("d0")).as("day"))
-        .withColumn("src", lag(col("item"), 1).over(byUser))
-        .filter(col("src").isNotNull && col("src") =!= col("item"))
+      val ev = itemTransitionsByDay(s, dir)
       def week(lo: Int, hi: Int) = ev
         .filter(col("day").between(lo, hi))
         .select(col("src"), col("item").as("dst")).distinct()
@@ -1531,15 +1488,7 @@ private[graft] object QueriesStats3 {
       // time-to-conversion read the transition matrix alone doesn't
       // give.
       val types = Seq("click", "error", "signup", "view")
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val tr = events(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          col("event_type").as("dst"))
-        .withColumn("src", lag(col("dst"), 1).over(byUser))
-        .filter(col("src").isNotNull)
-        .groupBy(col("src"), col("dst"))
-        .agg(count(lit(1)).cast("double").as("c"))
+      val tr = eventTransitions(s, dir)
       val rowTot = tr.groupBy(col("src")).agg(sum(col("c")).as("rt"))
       val p = tr.join(rowTot, Seq("src"))
         .select(col("src"), col("dst"), (col("c") / col("rt")).as("p"))
@@ -1678,8 +1627,7 @@ private[graft] object QueriesStats3 {
       // through the propensity side (the modern upgrade over q360's
       // plain IPW). Strata with no treated or no control units are
       // dropped and counted.
-      val oc = t(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("cnt"))
+      val oc = customerOrderCounts(s, dir)
       val base = t(s, dir, "customer")
         .join(oc, col("c_custkey") === col("o_custkey"), "left")
         .select(col("c_nationkey").as("nk"),
@@ -1726,10 +1674,7 @@ private[graft] object QueriesStats3 {
       // nearest-neighbor test, pairs from the same eps-cell expansion
       // (cell = max radius) — never all-pairs.
       val eps = 60000L
-      val sup = t(s, dir, "supplier")
-        .select(col("s_suppkey").as("sk"),
-          pmod(col("s_suppkey") * 48271L + 99991L, lit(1000000L)).as("x"),
-          pmod(col("s_suppkey") * 16807L + 12347L, lit(1000000L)).as("y"))
+      val sup = supplierPoints(s, dir)
       val offs = s.range(-1, 2).select(col("id").as("dx"))
         .crossJoin(s.range(-1, 2).select(col("id").as("dy")))
       val expd = sup.crossJoin(broadcast(offs))
@@ -1770,15 +1715,7 @@ private[graft] object QueriesStats3 {
       // degree — the rich-get-richer exponent behind q483's churn
       // counts. Two distinct-edge rollups + one anti-join, OLS closed
       // form.
-      val d0 = events(s, dir).agg(min(to_date(col("ts"))).as("d0"))
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val ev = events(s, dir).crossJoin(broadcast(d0))
-        .select(col("user_id"), col("event_id"), col("ts"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"),
-          datediff(to_date(col("ts")), col("d0")).as("day"))
-        .withColumn("src", lag(col("item"), 1).over(byUser))
-        .filter(col("src").isNotNull && col("src") =!= col("item"))
+      val ev = itemTransitionsByDay(s, dir)
       val w0 = ev.filter(col("day") <= 6)
         .select(col("src"), col("item").as("dst")).distinct()
       val later = ev.filter(col("day") > 6)
@@ -1812,9 +1749,7 @@ private[graft] object QueriesStats3 {
       // template match counts. The triangular self-join is day² on the
       // calendar-bounded frame (intentional); matches use the Chebyshev
       // distance.
-      val daily = events(s, dir)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).cast("double").as("y"))
+      val daily = dailyEvents(s, dir)
       val sd = daily.agg((sqrt(avg(col("y") * col("y")) -
         avg(col("y")) * avg(col("y"))) * 0.2).as("r"))
       val w = Window.orderBy(col("d"))
@@ -1886,16 +1821,7 @@ private[graft] object QueriesStats3 {
       // rank sums — do the criteria agree at all, before q460 fuses
       // them? Rankings are exact permutations on the bounded brand
       // table; the statistic is one tiny aggregate.
-      val br = t(s, dir, "lineitem")
-        .join(t(s, dir, "part")
-          .select(col("p_partkey"), col("p_brand")),
-          col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(sum(expr(
-          "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"))
-          .as("rev"),
-          sum(col("l_quantity").cast("long")).as("qty"),
-          countDistinct(col("l_orderkey")).as("ords"))
+      val br = brandRevenue(s, dir)
       val ranked = br
         .withColumn("r1", row_number().over(
           Window.orderBy(col("rev").desc, col("p_brand"))).cast("long"))
@@ -1966,8 +1892,7 @@ private[graft] object QueriesStats3 {
       // outcomes) differenced at d = 1..9 — the DISTRIBUTIONAL effect
       // q492's single ATE number can't show. Two group windows shuffle
       // once on the treatment flag.
-      val oc = t(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("cnt"))
+      val oc = customerOrderCounts(s, dir)
       val base = t(s, dir, "customer")
         .join(oc, col("c_custkey") === col("o_custkey"), "left")
         .select(col("c_custkey").as("ck"),
@@ -2077,8 +2002,6 @@ private[graft] object QueriesStats3 {
       // so the scan collects the aggregated edge list once and runs
       // union-find per threshold driver-side — five distributed CC runs
       // here would spend 9s of scheduling on a 100-node graph.
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
       val wtr = events(s, dir)
         .select(col("user_id"), col("event_id"), col("ts"),
           get_json_object(col("props"), "$.k").cast("long").as("item"))
@@ -2121,8 +2044,7 @@ private[graft] object QueriesStats3 {
       // with R the fractional balance rank — the bivariate companion to
       // q170's Gini (which concentrates y against its own rank). One
       // global rank + one covariance aggregate.
-      val oc = t(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("cnt"))
+      val oc = customerOrderCounts(s, dir)
       val base = t(s, dir, "customer")
         .join(oc, col("c_custkey") === col("o_custkey"), "left")
         .select(col("c_custkey").as("ck"),
@@ -2313,10 +2235,7 @@ private[graft] object QueriesStats3 {
       // transition counts vs the iid-Bernoulli null — the second half
       // of the standard VaR backtest (q437 checks the count, this the
       // timing). One lag over the calendar-bounded return series.
-      val daily = t(s, dir, "orders")
-        .groupBy(col("o_orderdate").cast("date").as("d"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-          .cast("double").as("rev"))
+      val daily = dailyOrderRevenue(s, dir)
       val w = Window.orderBy(col("d"))
       val r = daily.withColumn("prev", lag(col("rev"), 1).over(w))
         .filter(col("prev").isNotNull)
@@ -2365,8 +2284,7 @@ private[graft] object QueriesStats3 {
       // 1/(N+1), tie-corrected variance — the nonparametric analog of
       // q439's stratified OR. Midranks come from grouped counts + one
       // per-stratum window over the BOUNDED order-count grid.
-      val oc = t(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("cnt"))
+      val oc = customerOrderCounts(s, dir)
       val base = t(s, dir, "customer")
         .join(oc, col("c_custkey") === col("o_custkey"), "left")
         .select(col("c_nationkey").as("nk"),
@@ -2481,14 +2399,7 @@ private[graft] object QueriesStats3 {
       // curve — the SE the point estimate needs before anyone compares
       // curves: Var = S²·Σ d/(n(n−d)), both running sums over the same
       // calendar-bounded event-time table.
-      val maxD = t(s, dir, "orders").agg(max(col("o_orderdate")).as("mx"))
-      val cust = t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(min(col("o_orderdate")).as("first"),
-          max(col("o_orderdate")).as("last"))
-        .crossJoin(broadcast(maxD))
-        .select(datediff(col("last"), col("first")).cast("long").as("dur"),
-          (datediff(col("mx"), col("last")) > 90).as("event"))
+      val cust = survivalCohort(s, dir)
       val byDur = cust.groupBy(col("dur"))
         .agg(count(lit(1)).as("c_all"),
           sum(when(col("event"), 1L).otherwise(0L)).as("d"))
@@ -2500,15 +2411,13 @@ private[graft] object QueriesStats3 {
         .withColumn("n_risk",
           col("n_total") - (col("cum_all") - col("c_all")))
         .filter(col("d") > 0 && col("n_risk") > col("d"))
-      val w = Window.orderBy(col("dur"))
-        .rowsBetween(Window.unboundedPreceding, 0)
       risk
         .withColumn("surv", exp(sum(log(
           (col("n_risk") - col("d")).cast("double") /
-            col("n_risk").cast("double"))).over(w)))
+            col("n_risk").cast("double"))).over(durRunning)))
         .withColumn("gsum", sum(col("d").cast("double") /
           (col("n_risk").cast("double") *
-            (col("n_risk") - col("d")).cast("double"))).over(w))
+            (col("n_risk") - col("d")).cast("double"))).over(durRunning))
         .withColumn("se", col("surv") * sqrt(col("gsum")))
         .select(col("dur").as("duration_days"), col("n_risk"), col("d"),
           round(col("surv"), 6).as("survival"),
@@ -2565,9 +2474,7 @@ private[graft] object QueriesStats3 {
       // ΔR·P over distinct scores descending, with cumulative TP/N from
       // ONE multi-column prefix-sum pass (descending realized as
       // complements of the ascending sums).
-      val (feat, cols) = classifierFeatures(s, dir)
-      val wts = graft.ops.LinearModel.logisticGd(feat, cols, "y",
-        lr = 0.5, nIter = 3)
+      val (feat, cols, wts) = classifierModel(s, dir)
       val z = cols.zip(wts).map { case (c, wi) => col(c) * lit(wi) }
         .reduce(_ + _)
       val scored = feat.select(col("y"),
@@ -2641,8 +2548,7 @@ private[graft] object QueriesStats3 {
       // their separate effects? RERI = RR11 − RR10 − RR01 + 1, with the
       // multiplicative interaction ratio alongside — the epi interaction
       // panel next to q439's stratified OR. One 2×2×2 aggregate.
-      val oc = t(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("cnt"))
+      val oc = customerOrderCounts(s, dir)
       val base = t(s, dir, "customer")
         .join(oc, col("c_custkey") === col("o_custkey"), "left")
         .select((col("c_acctbal") > 5000.0).as("a"),
@@ -2723,8 +2629,7 @@ private[graft] object QueriesStats3 {
       // nation treated as an independent study (the multi-site readout
       // q492's single ATE flattens). Stratum moments collapse map-side;
       // two bounded passes (tau² re-weights the second).
-      val oc = t(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("cnt"))
+      val oc = customerOrderCounts(s, dir)
       val base = t(s, dir, "customer")
         .join(oc, col("c_custkey") === col("o_custkey"), "left")
         .select(col("c_nationkey").as("nk"),
@@ -2831,9 +2736,7 @@ private[graft] object QueriesStats3 {
       // value while the other features keep their observed joint
       // distribution — the model-interpretability read behind q144's
       // calibration. Fixed 10× grid explode, one aggregate per point.
-      val (feat, cols) = classifierFeatures(s, dir)
-      val wts = graft.ops.LinearModel.logisticGd(feat, cols, "y",
-        lr = 0.5, nIter = 3)
+      val (feat, _, wts) = classifierModel(s, dir)
       val grid = s.range(1, 11).select(col("id").cast("double").as("g"))
       val pd = feat.crossJoin(broadcast(grid))
         .select(col("g"), (lit(1.0) / (lit(1.0) + exp(-(
@@ -2854,8 +2757,7 @@ private[graft] object QueriesStats3 {
       // Byar approximate CI — the case-mix-adjusted comparison raw rates
       // get wrong. Cell rollups collapse map-side; the standardization
       // runs on the bounded segment×nation grid.
-      val oc = t(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("cnt"))
+      val oc = customerOrderCounts(s, dir)
       val base = t(s, dir, "customer")
         .join(oc, col("c_custkey") === col("o_custkey"), "left")
         .select(col("c_mktsegment").as("sg"), col("c_nationkey")
@@ -2982,15 +2884,7 @@ private[graft] object QueriesStats3 {
       // PageRank and q488's first-passage times. Only the transition
       // rollup is data-sized.
       val types = Seq("click", "error", "purchase", "signup", "view")
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val tr = events(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          col("event_type").as("dst"))
-        .withColumn("src", lag(col("dst"), 1).over(byUser))
-        .filter(col("src").isNotNull)
-        .groupBy(col("src"), col("dst"))
-        .agg(count(lit(1)).cast("double").as("c"))
+      val tr = eventTransitions(s, dir)
       val rowTot = tr.groupBy(col("src")).agg(sum(col("c")).as("rt"))
       val p = tr.join(rowTot, Seq("src"))
         .select(col("src"), col("dst"), (col("c") / col("rt")).as("p"))

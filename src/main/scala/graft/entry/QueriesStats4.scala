@@ -55,9 +55,7 @@ private[graft] object QueriesStats4 {
       // score before and after — the parametric calibration next to
       // q144's binned reliability. The scored frame is the only
       // data-sized input.
-      val (feat, cols) = classifierFeatures(s, dir)
-      val wts = graft.ops.LinearModel.logisticGd(feat, cols, "y",
-        lr = 0.5, nIter = 3)
+      val (feat, cols, wts) = classifierModel(s, dir)
       val z = cols.zip(wts).map { case (c, wi) => col(c) * lit(wi) }
         .reduce(_ + _)
       val scored = feat.select(col("y"), lit(1.0).as("g0"), z.as("g1"))
@@ -111,10 +109,7 @@ private[graft] object QueriesStats4 {
       // θ ≈ #clusters/#exceedances — do extremes arrive alone (θ≈1) or
       // in bursts? The clustering half of the q386 POT story. One rank
       // for the threshold, one lag over the exceedance positions.
-      val daily = t(s, dir, "orders")
-        .groupBy(col("o_orderdate").cast("date").as("d"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-          .cast("double").as("rev"))
+      val daily = dailyOrderRevenue(s, dir)
       val w = Window.orderBy(col("d"))
       val r = daily.withColumn("prev", lag(col("rev"), 1).over(w))
         .filter(col("prev").isNotNull)
@@ -268,14 +263,7 @@ private[graft] object QueriesStats4 {
       // parametric baseline every KM curve is compared against), mean
       // lifetime 1/λ, S(h) at the 30/60/90 horizons — read next to
       // q476's stratified KM and q394's Weibull shape. One aggregate.
-      val maxD = t(s, dir, "orders").agg(max(col("o_orderdate")).as("mx"))
-      val cust = t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(min(col("o_orderdate")).as("first"),
-          max(col("o_orderdate")).as("last"))
-        .crossJoin(broadcast(maxD))
-        .select(datediff(col("last"), col("first")).cast("long").as("dur"),
-          (datediff(col("mx"), col("last")) > 90).as("event"))
+      val cust = survivalCohort(s, dir)
       val m = cust.agg(count(lit(1)).as("n"),
         sum(when(col("event"), 1L).otherwise(0L)).cast("double")
           .as("d"),
@@ -385,9 +373,7 @@ private[graft] object QueriesStats4 {
       // in 1-D from per-cluster extremes — the separation/compactness
       // scalar joining q367 (silhouette) and q368 (Davies-Bouldin) on
       // the same clustering question. One rank, one bounded pass.
-      val base = t(s, dir, "customer")
-        .select(col("c_custkey").as("ck"),
-          expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)").as("v"))
+      val base = customerBalanceCents(s, dir)
       val ranked = graft.ops.PrefixSum.globalRank(
           base, Seq(col("v"), col("ck")), "rk")
         .crossJoin(broadcast(base.agg(count(lit(1)).as("n"))))
@@ -441,10 +427,7 @@ private[graft] object QueriesStats4 {
       // pairs ship id-only; points with no eps-neighbor are excluded
       // (documented).
       val eps = 60000L
-      val sup = t(s, dir, "supplier")
-        .select(col("s_suppkey").as("sk"),
-          pmod(col("s_suppkey") * 48271L + 99991L, lit(1000000L)).as("x"),
-          pmod(col("s_suppkey") * 16807L + 12347L, lit(1000000L)).as("y"))
+      val sup = supplierPoints(s, dir)
       val offs = s.range(-1, 2).select(col("id").as("dx"))
         .crossJoin(s.range(-1, 2).select(col("id").as("dy")))
       val expd = sup.crossJoin(broadcast(offs))
@@ -485,9 +468,7 @@ private[graft] object QueriesStats4 {
       // (a, b) = (0, 1) via the restricted-vs-unrestricted F — is the
       // naive forecaster systematically biased? Calendar-bounded
       // exclusive window + two closed-form passes.
-      val daily = events(s, dir)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).cast("double").as("y"))
+      val daily = dailyEvents(s, dir)
       val w = Window.orderBy(col("d"))
         .rowsBetween(Window.unboundedPreceding, -1)
       val fc = daily.withColumn("f", avg(col("y")).over(w))
@@ -519,12 +500,7 @@ private[graft] object QueriesStats4 {
       // growth rate — was growth pro-poor or top-heavy (Ravallion's
       // distributional growth read on top of q409's Lorenz)? Exact cent
       // sums per decile, one rank per year.
-      val spend = t(s, dir, "orders")
-        .filter(year(col("o_orderdate")).isin(1995, 1996))
-        .groupBy(year(col("o_orderdate")).cast("long").as("yr"),
-          col("o_custkey"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-          .as("cents"))
+      val spend = customerYearCents(s, dir)
       val wY = Window.partitionBy(col("yr"))
         .orderBy(col("cents"), col("o_custkey"))
       val ranked = spend.withColumn("rk", row_number().over(wY)
@@ -553,9 +529,7 @@ private[graft] object QueriesStats4 {
       // where it happens — the separation scalar risk teams quote
       // alongside q169's AUC. One multi-column prefix-sum pass over the
       // distinct-score grid, argmax on the ROUNDED gap.
-      val (feat, cols) = classifierFeatures(s, dir)
-      val wts = graft.ops.LinearModel.logisticGd(feat, cols, "y",
-        lr = 0.5, nIter = 3)
+      val (feat, cols, wts) = classifierModel(s, dir)
       val z = cols.zip(wts).map { case (c, wi) => col(c) * lit(wi) }
         .reduce(_ + _)
       val scored = feat.select(col("y"),
@@ -616,10 +590,7 @@ private[graft] object QueriesStats4 {
       // mean — the zero-inflated estimator fisheries/claims data uses
       // when the positive part is log-normal. One left join + two
       // moment aggregates.
-      val oc = t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-          .as("cents"))
+      val oc = customerOrderCents(s, dir)
       val base = t(s, dir, "customer")
         .join(oc, col("c_custkey") === col("o_custkey"), "left")
         .select(coalesce(col("cents"), lit(0L)).as("cents"))
@@ -686,8 +657,7 @@ private[graft] object QueriesStats4 {
       // attributable fraction among the exposed — the public-health
       // "how much of the outcome does the exposure explain" scalar
       // completing the q439/q447/q516 epi panel. One 2×2 aggregate.
-      val oc = t(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("cnt"))
+      val oc = customerOrderCounts(s, dir)
       val base = t(s, dir, "customer")
         .join(oc, col("c_custkey") === col("o_custkey"), "left")
         .select((col("c_acctbal") > 5000.0).as("e"),
@@ -713,14 +683,7 @@ private[graft] object QueriesStats4 {
       // 0.5 — THE headline number a KM curve is drawn for (q512 gives
       // the bands; this reads them out). Same machinery + one
       // conditional min.
-      val maxD = t(s, dir, "orders").agg(max(col("o_orderdate")).as("mx"))
-      val cust = t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(min(col("o_orderdate")).as("first"),
-          max(col("o_orderdate")).as("last"))
-        .crossJoin(broadcast(maxD))
-        .select(datediff(col("last"), col("first")).cast("long").as("dur"),
-          (datediff(col("mx"), col("last")) > 90).as("event"))
+      val cust = survivalCohort(s, dir)
       val byDur = cust.groupBy(col("dur"))
         .agg(count(lit(1)).as("c_all"),
           sum(when(col("event"), 1L).otherwise(0L)).as("d"))
@@ -732,15 +695,13 @@ private[graft] object QueriesStats4 {
         .withColumn("n_risk",
           col("n_total") - (col("cum_all") - col("c_all")))
         .filter(col("d") > 0 && col("n_risk") > col("d"))
-      val w = Window.orderBy(col("dur"))
-        .rowsBetween(Window.unboundedPreceding, 0)
       val km = risk
         .withColumn("surv", exp(sum(log(
           (col("n_risk") - col("d")).cast("double") /
-            col("n_risk").cast("double"))).over(w)))
+            col("n_risk").cast("double"))).over(durRunning)))
         .withColumn("gsum", sum(col("d").cast("double") /
           (col("n_risk").cast("double") *
-            (col("n_risk") - col("d")).cast("double"))).over(w))
+            (col("n_risk") - col("d")).cast("double"))).over(durRunning))
         .withColumn("se", col("surv") * sqrt(col("gsum")))
       km.agg(first(col("n_risk")).as("__unused"),
           min(when(col("surv") <= 0.5, col("dur"))).as("median"),
@@ -760,12 +721,7 @@ private[graft] object QueriesStats4 {
       // (the y! terms cancel), evidence bucketed on the Jeffreys scale —
       // Bayesian model comparison on top of the frequentist fit. Same
       // 3-step Newton fold + two likelihood passes.
-      val daily = events(s, dir)
-        .filter(col("event_type") === "purchase")
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).cast("double").as("y"))
-        .withColumn("x",
-          when(dayofweek(col("d")).isin(1, 7), 1.0).otherwise(0.0))
+      val daily = dailyPurchases(s, dir)
       var fit = daily.agg(log(avg(col("y"))).as("a"))
         .select(col("a"), lit(0.0).as("b"))
       for (it <- 1 to 3) {
@@ -860,8 +816,7 @@ private[graft] object QueriesStats4 {
       // ACTUAL zero share the customer table knows — the truncated-
       // count model with its own validation. One aggregate + scalar
       // fold.
-      val oc = t(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("cnt"))
+      val oc = customerOrderCounts(s, dir)
       val m = oc.agg(count(lit(1)).cast("double").as("na"),
         avg(col("cnt").cast("double")).as("mbar"))
       val actual = t(s, dir, "customer")
@@ -892,9 +847,7 @@ private[graft] object QueriesStats4 {
       // ln(4sin²(ω_k/2)) over the 8 lowest frequencies — the spectral
       // companion to q275's Hurst exponent (d ≈ H − 0.5). Fixed 8×30
       // explode; demeaned series.
-      val daily = events(s, dir)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).cast("double").as("y"))
+      val daily = dailyEvents(s, dir)
       val mu = daily.agg(avg(col("y")).as("mu"),
         count(lit(1)).cast("double").as("nn"))
       val rn = graft.ops.PrefixSum.globalRank(daily, Seq(col("d")), "rk")
@@ -938,9 +891,7 @@ private[graft] object QueriesStats4 {
       // low = trending, high = oscillating — the classic randomness
       // scalar joining q276 (runs) and q430 (turning points).
       // Calendar-bounded lag + one moment aggregate.
-      val daily = events(s, dir)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).cast("double").as("y"))
+      val daily = dailyEvents(s, dir)
       val w = Window.orderBy(col("d"))
       val m = daily.withColumn("yp", lag(col("y"), 1).over(w))
         .agg(count(lit(1)).cast("double").as("n"),
@@ -967,12 +918,7 @@ private[graft] object QueriesStats4 {
       // with row shares — does the spend hierarchy persist (q312 tracks
       // places; this tracks economic position)? Two within-year exact
       // ranks, one transition rollup.
-      val spend = t(s, dir, "orders")
-        .filter(year(col("o_orderdate")).isin(1995, 1996))
-        .groupBy(year(col("o_orderdate")).cast("long").as("yr"),
-          col("o_custkey"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-          .as("cents"))
+      val spend = customerYearCents(s, dir)
       val both = spend.groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("ny")).filter(col("ny") === 2)
         .select(col("o_custkey"))
@@ -1005,12 +951,7 @@ private[graft] object QueriesStats4 {
       // (n_ij−n_ji)²/(n_ij+n_ji))? The matched-categories
       // generalization of q328's McNemar on the transition fixture.
       // Bounded 5×5 algebra after the same two-rank rollup.
-      val spend = t(s, dir, "orders")
-        .filter(year(col("o_orderdate")).isin(1995, 1996))
-        .groupBy(year(col("o_orderdate")).cast("long").as("yr"),
-          col("o_custkey"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-          .as("cents"))
+      val spend = customerYearCents(s, dir)
       val both = spend.groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("ny")).filter(col("ny") === 2)
         .select(col("o_custkey"))
@@ -1083,9 +1024,7 @@ private[graft] object QueriesStats4 {
       // classifier: decile bins of the predicted probability (exact
       // global ranks), Σ(O−E)²/(n·p̄(1−p̄)), df = 8 — the TEST behind
       // q144's calibration plot. One rank + one bin rollup.
-      val (feat, cols) = classifierFeatures(s, dir)
-      val wts = graft.ops.LinearModel.logisticGd(feat, cols, "y",
-        lr = 0.5, nIter = 3)
+      val (_, cols, wts) = classifierModel(s, dir)
       // features rebuilt WITH doc_id so tied scores bin deterministically
       val len = length(col("text")).cast("double")
       val featD = t(s, dir, "documents").select(col("doc_id"),
@@ -1122,10 +1061,7 @@ private[graft] object QueriesStats4 {
       // inequality is driven by many small units, S > 1 by a few giants
       // (the SHAPE q170's Gini scalar can't see). Exact integer cents,
       // one aggregate.
-      val spend = t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-          .as("cents"))
+      val spend = customerOrderCents(s, dir)
       val tot = spend.agg(count(lit(1)).cast("double").as("n"),
         sum(col("cents")).cast("double").as("tc"))
       val m = spend.crossJoin(broadcast(tot))
@@ -1149,9 +1085,7 @@ private[graft] object QueriesStats4 {
       // the 14 positive frequencies — 1 = white noise, →0 = tonal/
       // seasonal (the one-number read on q279's full periodogram).
       // Fixed 14×30 explode, q552's DFT machinery.
-      val daily = events(s, dir)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).cast("double").as("y"))
+      val daily = dailyEvents(s, dir)
       val mu = daily.agg(avg(col("y")).as("mu"),
         count(lit(1)).cast("double").as("nn"))
       val rn = graft.ops.PrefixSum.globalRank(daily, Seq(col("d")), "rk")
@@ -1186,10 +1120,7 @@ private[graft] object QueriesStats4 {
       // exact to 1e38, double only in the final ratio). The most
       // interpretable member of the q170/q409/q410/q489/q558
       // inequality suite.
-      val spend = t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-          .as("cents"))
+      val spend = customerOrderCents(s, dir)
       val tot = spend.agg(count(lit(1)).as("n"),
         sum(col("cents")).as("tc"))
       spend.crossJoin(broadcast(tot))
@@ -1231,9 +1162,7 @@ private[graft] object QueriesStats4 {
       // islands on the daily series): how long do hot streaks last —
       // the duration view behind q276's runs count. Islands via the
       // rank-difference key over the calendar-bounded frame.
-      val daily = events(s, dir)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).cast("double").as("y"))
+      val daily = dailyEvents(s, dir)
       val med = daily.agg(expr("percentile(y, 0.5)").as("med"))
       val flagged = daily.crossJoin(broadcast(med))
         .withColumn("above", col("y") > col("med"))
@@ -1255,9 +1184,7 @@ private[graft] object QueriesStats4 {
       // m(1−g)^(m−1) — the EXACT-null spectral test the q279
       // periodogram plot eyeballs. q559's DFT machinery, argmax on the
       // rounded share.
-      val daily = events(s, dir)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).cast("double").as("y"))
+      val daily = dailyEvents(s, dir)
       val mu = daily.agg(avg(col("y")).as("mu"),
         count(lit(1)).cast("double").as("nn"))
       val rn = graft.ops.PrefixSum.globalRank(daily, Seq(col("d")), "rk")
@@ -1460,10 +1387,7 @@ private[graft] object QueriesStats4 {
       // p − (1−p)/b and the edge p·b − (1−p) — the bet-sizing capstone
       // of the finance suite (q351 measures risk; this sizes exposure
       // to it). Calendar-bounded lag + one conditional aggregate.
-      val daily = t(s, dir, "orders")
-        .groupBy(col("o_orderdate").cast("date").as("d"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-          .cast("double").as("rev"))
+      val daily = dailyOrderRevenue(s, dir)
       val w = Window.orderBy(col("d"))
       val r = daily.withColumn("prev", lag(col("rev"), 1).over(w))
         .filter(col("prev").isNotNull)
@@ -1603,10 +1527,7 @@ private[graft] object QueriesStats4 {
       // at EXACT rank cutoffs — the "what do the whales carry" readout
       // between q409's deciles and q197's ABC classes. One global rank
       // + one grouped prefix sum.
-      val spend = t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-          .as("cents"))
+      val spend = customerOrderCents(s, dir)
       val ranked = graft.ops.PrefixSum.globalRank(
           spend, Seq(col("cents").desc, col("o_custkey")), "rk")
         .crossJoin(broadcast(spend.agg(count(lit(1)).as("n"),
@@ -1658,9 +1579,7 @@ private[graft] object QueriesStats4 {
       // scoring rule the accuracy metrics (q435) aren't. One scored
       // pass, probabilities clamped at 1e-12 identically on both
       // engines.
-      val (feat, cols) = classifierFeatures(s, dir)
-      val wts = graft.ops.LinearModel.logisticGd(feat, cols, "y",
-        lr = 0.5, nIter = 3)
+      val (feat, cols, wts) = classifierModel(s, dir)
       val z = cols.zip(wts).map { case (c, wi) => col(c) * lit(wi) }
         .reduce(_ + _)
       val scored = feat.select(col("y"),
@@ -1716,9 +1635,7 @@ private[graft] object QueriesStats4 {
       // forecast DISTRIBUTIONS honest, not just the means (q540 tests
       // bias; this tests the whole shape)? Exclusive prefix moments on
       // the calendar-bounded frame.
-      val daily = events(s, dir)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).cast("double").as("y"))
+      val daily = dailyEvents(s, dir)
       val w = Window.orderBy(col("d"))
         .rowsBetween(Window.unboundedPreceding, -1)
       val scored = daily
@@ -1784,8 +1701,6 @@ private[graft] object QueriesStats4 {
       // next to q525's Katz and q488's first passage). Rayleigh readout
       // at the final step.
       val types = Seq("click", "error", "purchase", "signup", "view")
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
       val tr = events(s, dir)
         .select(col("user_id"), col("event_id"), col("ts"),
           col("event_type").as("dst"))
@@ -1835,15 +1750,7 @@ private[graft] object QueriesStats4 {
       // margins out of a flow matrix. Convergence read off the residual
       // column-sum deviation.
       val types = Seq("click", "error", "purchase", "signup", "view")
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val tr = events(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          col("event_type").as("dst"))
-        .withColumn("src", lag(col("dst"), 1).over(byUser))
-        .filter(col("src").isNotNull)
-        .groupBy(col("src"), col("dst"))
-        .agg(count(lit(1)).cast("double").as("c"))
+      val tr = eventTransitions(s, dir)
       val cAggs = for { i <- types; j <- types } yield
         coalesce(max(when(col("src") === i && col("dst") === j,
           col("c"))), lit(0.0)).as(s"m_${i}_$j")
@@ -1929,14 +1836,7 @@ private[graft] object QueriesStats4 {
       // where q533's single rate actually bends (the discrete hazard
       // profile under the KM curve). Band exposure by clamping, one
       // fixed 4× explode.
-      val maxD = t(s, dir, "orders").agg(max(col("o_orderdate")).as("mx"))
-      val cust = t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(min(col("o_orderdate")).as("first"),
-          max(col("o_orderdate")).as("last"))
-        .crossJoin(broadcast(maxD))
-        .select(datediff(col("last"), col("first")).cast("long").as("dur"),
-          (datediff(col("mx"), col("last")) > 90).as("event"))
+      val cust = survivalCohort(s, dir)
       val bands = s.createDataFrame(Seq((0L, 30L), (31L, 60L),
         (61L, 90L), (91L, 100000L))).toDF("lo", "hi")
       val e = cust.crossJoin(broadcast(bands))
@@ -1989,15 +1889,7 @@ private[graft] object QueriesStats4 {
       // companion to q134's PageRank)? Only the transition rollup is
       // data-sized.
       val types = Seq("click", "error", "purchase", "signup", "view")
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val tr = events(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          col("event_type").as("dst"))
-        .withColumn("src", lag(col("dst"), 1).over(byUser))
-        .filter(col("src").isNotNull)
-        .groupBy(col("src"), col("dst"))
-        .agg(count(lit(1)).cast("double").as("c"))
+      val tr = eventTransitions(s, dir)
       val rowTot = tr.groupBy(col("src")).agg(sum(col("c")).as("rt"))
       val p = tr.join(rowTot, Seq("src"))
         .select(col("src"), col("dst"), (col("c") / col("rt")).as("p"))
@@ -2069,9 +1961,7 @@ private[graft] object QueriesStats4 {
       // symmetric trims — how far outliers move the headline number
       // (the robustness SWEEP behind q387's single trim and q485's
       // Huber point). One rank, one conditional aggregate per trim.
-      val base = t(s, dir, "customer")
-        .select(col("c_custkey").as("ck"),
-          expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)").as("v"))
+      val base = customerBalanceCents(s, dir)
       val ranked = graft.ops.PrefixSum.globalRank(
           base, Seq(col("v"), col("ck")), "rk")
         .crossJoin(broadcast(base.agg(count(lit(1)).as("n"))))
@@ -2094,14 +1984,7 @@ private[graft] object QueriesStats4 {
       // sums — "given you made it this far" retention, the number
       // lifecycle teams actually quote. Same suffix-count machinery,
       // three conditional log-sums.
-      val maxD = t(s, dir, "orders").agg(max(col("o_orderdate")).as("mx"))
-      val cust = t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(min(col("o_orderdate")).as("first"),
-          max(col("o_orderdate")).as("last"))
-        .crossJoin(broadcast(maxD))
-        .select(datediff(col("last"), col("first")).cast("long").as("dur"),
-          (datediff(col("mx"), col("last")) > 90).as("event"))
+      val cust = survivalCohort(s, dir)
       val byDur = cust.groupBy(col("dur"))
         .agg(count(lit(1)).as("c_all"),
           sum(when(col("event"), 1L).otherwise(0L)).as("d"))
@@ -2159,10 +2042,7 @@ private[graft] object QueriesStats4 {
       // thresholds $100..$1M — the raw log-log tail picture under
       // q262's Hill exponent. One spend rollup + a fixed 5× threshold
       // explode.
-      val spend = t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-          .as("cents"))
+      val spend = customerOrderCents(s, dir)
       val n = spend.agg(count(lit(1)).cast("double").as("n"))
       val thr = s.createDataFrame(Seq(Tuple1(10000L), Tuple1(100000L),
         Tuple1(1000000L), Tuple1(10000000L), Tuple1(100000000L)))
@@ -2214,10 +2094,7 @@ private[graft] object QueriesStats4 {
       // precondition any GARCH story needs; q508 tests breach timing,
       // this tests variance memory). Calendar-bounded lags, one moment
       // pass.
-      val daily = t(s, dir, "orders")
-        .groupBy(col("o_orderdate").cast("date").as("d"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-          .cast("double").as("rev"))
+      val daily = dailyOrderRevenue(s, dir)
       val w = Window.orderBy(col("d"))
       val r2 = daily.withColumn("prev", lag(col("rev"), 1).over(w))
         .filter(col("prev").isNotNull)
@@ -2242,10 +2119,7 @@ private[graft] object QueriesStats4 {
       // trading-day revenue profile: mean daily revenue by ISO weekday
       // with the share of the weekly total — the revenue-weighted
       // calendar read next to q182's count test. One weekday rollup.
-      val daily = t(s, dir, "orders")
-        .groupBy(col("o_orderdate").cast("date").as("d"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-          .cast("double").as("rev"))
+      val daily = dailyOrderRevenue(s, dir)
       val wd = daily
         .groupBy(dayofweek(col("d")).cast("long").as("dow"))
         .agg(count(lit(1)).as("n_days"),
@@ -2355,9 +2229,7 @@ private[graft] object QueriesStats4 {
       // IQR/median for customer balances — the unit-free robust spread
       // scalars next to q135's MAD (which is absolute). Exact-rank
       // quartiles.
-      val base = t(s, dir, "customer")
-        .select(col("c_custkey").as("ck"),
-          expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)").as("v"))
+      val base = customerBalanceCents(s, dir)
       val ranked = graft.ops.PrefixSum.globalRank(
           base, Seq(col("v"), col("ck")), "rk")
         .crossJoin(broadcast(base.agg(count(lit(1)).as("n"))))
@@ -2404,10 +2276,7 @@ private[graft] object QueriesStats4 {
       // tail-ratio dispersion of customer spend: p99/p50 and p90/p10 at
       // exact ranks — the "how heavy is heavy" scalars quoted next to
       // q262's Hill exponent. One rank, one conditional aggregate.
-      val spend = t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-          .as("cents"))
+      val spend = customerOrderCents(s, dir)
       val ranked = graft.ops.PrefixSum.globalRank(
           spend, Seq(col("cents"), col("o_custkey")), "rk")
         .crossJoin(broadcast(spend.agg(count(lit(1)).as("n"))))

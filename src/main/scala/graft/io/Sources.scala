@@ -92,7 +92,7 @@ final case class TextTable(path: String, schema: SchemaSpec,
 /** RCFile round-trip rides Spark's Hive support (`STORED AS RCFILE`): Spark
   * has no path-based RCFile reader, and the Hive-table route is the
   * reference-parity surface (SURVEY.md §2 A1/A2, §7.2 step 5). Requires a
-  * Hive-enabled session (GraftSession.localHive).
+  * Hive-enabled session (GraftSession.hiveBuilder).
   */
 final case class RcFileHiveTable(table: String) {
   def create(spark: SparkSession, schema: StructType): Unit =

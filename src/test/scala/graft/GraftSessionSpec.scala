@@ -62,6 +62,19 @@ class GraftSessionSpec extends AnyFunSuite {
     }
   }
 
+  test("Spark's own defaults keep AQE, runtime bloom filters, vectorized " +
+    "ORC and parquet pushdown on") {
+    // the builder no longer restates these; a Spark upgrade that flips one
+    // of them must fail here rather than change every plan silently
+    for (k <- Seq("spark.sql.adaptive.enabled",
+                  "spark.sql.adaptive.coalescePartitions.enabled",
+                  "spark.sql.adaptive.skewJoin.enabled",
+                  "spark.sql.optimizer.runtime.bloomFilter.enabled",
+                  "spark.sql.orc.enableVectorizedReader",
+                  "spark.sql.parquet.filterPushdown"))
+      assert(spark.conf.get(k) == "true", k)
+  }
+
   test("GraftSession.builder turns on reliable checkpoint cleanup") {
     assert(spark.sparkContext.getConf
       .getOption("spark.cleaner.referenceTracking.cleanCheckpoints")
@@ -115,14 +128,8 @@ class GraftSessionSpec extends AnyFunSuite {
     val defaults = Map(
       "spark.master" -> "local[*]",
       "spark.sql.shuffle.partitions" -> GraftSession.defaultShufflePartitions.toString,
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-      "spark.sql.orc.enableVectorizedReader" -> "true",
-      "spark.sql.parquet.filterPushdown" -> "true",
       "spark.ui.enabled" -> "false",
       "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true",
       "spark.sql.codegen.cache.maxEntries" -> "500")
@@ -131,7 +138,6 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(settings("local[6]", Map.empty) == defaults ++ Map(
       "spark.master" -> "local[6]", "spark.sql.shuffle.partitions" -> "6"))
     val launched = Map("spark.sql.shuffle.partitions" -> "7",
-      "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.codegen.cache.maxEntries" -> "100")
     assert(settings("local[4]", launched) ==
       defaults ++ launched + ("spark.master" -> "local[4]"))

@@ -76,59 +76,93 @@ class ScaleHygieneSpec extends AnyFunSuite {
 
   test("no broadcast hint on a val derived row-preservingly from a growing " +
     "table") {
-    // per query block (delimited by the "qNNN_name" -> ((s, dir) => {
-    // headers) so a val name in one query cannot shadow another query's
+    // per block: a query (delimited by the "qNNN_name" -> ((s, dir) => {
+    // headers) or a def of EntryShared, so a val name in one block cannot
+    // shadow another's. A shared def whose own body is a row-preserving
+    // chain off a growing table is growing where a query calls it, as
+    // `name(s, dir)`.
     val blockHeader = "\"q\\d+_\\w+\" ->".r
+    val sharedDef = "(?m)^  def (\\w+)[^=]*=".r
     val valDef = "val\\s+(\\w+)\\s*=".r
-    val offenders = gallerySources.flatMap { case (file, src) =>
-      val starts = blockHeader.findAllMatchIn(src).map(_.start).toList
-      val blocks = (starts zip (starts.drop(1) :+ src.length)).map {
+    def split(src: String, starts: List[Int]): List[String] =
+      (starts zip (starts.drop(1) :+ src.length)).map {
         case (a, b) => src.substring(a, b)
       }
-      blocks.flatMap { block =>
-        val qname = block.takeWhile(_ != '-').trim
-        // val name -> RHS text (up to the next val or block end)
-        val defs = valDef.findAllMatchIn(block).toList
-        val rhss = defs.zipWithIndex.map { case (m, i) =>
-          val end = if (i + 1 < defs.size) defs(i + 1).start else block.length
-          (m.group(1), block.substring(m.end, end))
-        }
-        // fixpoint: growing if RHS is a row-preserving chain off
-        // t(s, dir, "<growing>") or off an already-growing val
-        def chainOnlyRowPreserving(rhs: String): Boolean = {
-          val calls = "\\.\\s*(\\w+)\\s*\\(".r
-            .findAllMatchIn(rhs).map(_.group(1)).toList
-          calls.forall(c => rowPreserving.contains(c) ||
-            c == "as" || c == "col" || c == "lit")
-        }
-        var growing = Set.empty[String]
-        var changed = true
-        while (changed) {
-          changed = false
-          for ((name, rhs) <- rhss if !growing.contains(name)) {
-            val baseGrowingTable = growingTables.exists(tbl =>
-              rhs.trim.startsWith(s"""t(s, dir, "$tbl")"""))
-            val baseGrowingVal = growing.exists(g =>
-              rhs.trim.startsWith(s"$g.") || rhs.trim == g)
-            if ((baseGrowingTable || baseGrowingVal) &&
-                chainOnlyRowPreserving(rhs)) {
-              growing += name; changed = true
-            }
+    // the text after a definition's `=` at `from`, up to the next line
+    // indented no deeper than the definition (its next statement)
+    def rhsAt(block: String, start: Int, from: Int): String = {
+      val indent = start - (block.lastIndexOf('\n', start) + 1)
+      val eol = block.indexOf('\n', from)
+      val end = if (eol < 0) block.length else
+        s"(?m)^ {0,$indent}\\S".r.findFirstMatchIn(block.substring(eol + 1))
+          .fold(block.length)(eol + 1 + _.start)
+      block.substring(from, end)
+    }
+    // val name -> RHS text; a shared def's own body is one more entry,
+    // under its call text
+    def rhss(block: String): List[(String, String)] =
+      sharedDef.findPrefixMatchOf(block).toList.map { m =>
+        (s"${m.group(1)}(s, dir)", rhsAt(block, m.start + 2, m.end))
+      } ++ valDef.findAllMatchIn(block).map { m =>
+        (m.group(1), rhsAt(block, m.start, m.end))
+      }
+    def chainOnlyRowPreserving(rhs: String): Boolean = {
+      val calls = "\\.\\s*(\\w+)\\s*\\(".r
+        .findAllMatchIn(rhs).map(_.group(1)).toList
+      calls.forall(c => rowPreserving.contains(c) ||
+        c == "as" || c == "col" || c == "lit")
+    }
+    // fixpoint: growing if RHS is a row-preserving chain off
+    // t(s, dir, "<growing>") or off an already-growing name
+    def growingIn(defs: List[(String, String)], seeds: Set[String]): Set[String] = {
+      var growing = seeds
+      var changed = true
+      while (changed) {
+        changed = false
+        for ((name, rhs) <- defs if !growing.contains(name)) {
+          val baseGrowingTable = growingTables.exists(tbl =>
+            rhs.trim.startsWith(s"""t(s, dir, "$tbl")"""))
+          val baseGrowingVal = growing.exists(g =>
+            rhs.trim.startsWith(s"$g.") || rhs.trim == g)
+          if ((baseGrowingTable || baseGrowingVal) &&
+              chainOnlyRowPreserving(rhs)) {
+            growing += name; changed = true
           }
         }
-        // offense only when the hinted expression is the growing val
-        // itself or a row-preserving chain off it — broadcast(base.agg(…))
-        // is a bounded fold and legitimate
-        growing.toSeq.sorted.flatMap { name =>
-          val hint = ("broadcast\\(\\s*" + name + "\\s*([).])\\s*(\\w*)").r
-          hint.findAllMatchIn(block).flatMap { m =>
-            val offends = m.group(1) == ")" ||
-              rowPreserving.contains(m.group(2))
-            if (offends) Some(
-              s"$file $qname: broadcast($name…) where $name derives " +
-                "row-preservingly from a growing table")
-            else None
-          }
+      }
+      growing
+    }
+    val blocks = gallerySources.flatMap { case (file, src) =>
+      val header = if (file == "EntryShared.scala") sharedDef else blockHeader
+      split(src, header.findAllMatchIn(src).map(_.start).toList)
+        .map(b => (file, b))
+    }
+    assert(blocks.exists(_._1 == "EntryShared.scala"), "no EntryShared defs found")
+    var sharedGrowing = Set.empty[String]
+    var grew = true
+    while (grew) {
+      val next = blocks.filter(_._1 == "EntryShared.scala").flatMap { case (_, b) =>
+        growingIn(rhss(b), sharedGrowing).filter(_.endsWith("(s, dir)"))
+      }.toSet
+      grew = next != sharedGrowing
+      sharedGrowing = next
+    }
+    val offenders = blocks.flatMap { case (file, block) =>
+      val qname = block.takeWhile(c => c != '-' && c != '(' && c != ':').trim
+      // offense only when the hinted expression is the growing name
+      // itself or a row-preserving chain off it — broadcast(base.agg(…))
+      // is a bounded fold and legitimate
+      val growing = growingIn(rhss(block), sharedGrowing)
+      growing.toSeq.sorted.flatMap { name =>
+        val hint = ("broadcast\\(\\s*" + java.util.regex.Pattern.quote(name) +
+          "\\s*([).])\\s*(\\w*)").r
+        hint.findAllMatchIn(block).flatMap { m =>
+          val offends = m.group(1) == ")" ||
+            rowPreserving.contains(m.group(2))
+          if (offends) Some(
+            s"$file $qname: broadcast($name…) where $name derives " +
+              "row-preservingly from a growing table")
+          else None
         }
       }
     }

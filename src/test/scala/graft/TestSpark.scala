@@ -8,24 +8,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object TestSpark {
   /** One scratch root per test run: the warehouse and every [[tmpDir]]
-    * live under it. It is deleted at JVM exit by a Hadoop shutdown hook
-    * registered below Spark's own priority, so it runs after the shared
-    * session (and its Derby metastore) has stopped.
+    * live under it, and it is deleted at JVM exit.
     */
-  private lazy val root: java.nio.file.Path = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-test")
-    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
-      () => org.apache.spark.network.util.JavaUtils.deleteRecursively(dir.toFile),
-      org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 1)
-    dir
-  }
+  private lazy val root: java.nio.file.Path = Sweep.tempDirUntilExit("graft-test")
 
   lazy val warehouse: String = tmpDir("graft-warehouse")
 
   lazy val spark: SparkSession = {
     // Hive's session resources dir would otherwise default to java.io.tmpdir
     sys.props("spark.hadoop.hive.downloaded.resources.dir") = tmpDir("hive-resources")
-    GraftSession.localHive(warehouse, appName = "graft-test")
+    val s = GraftSession.hiveBuilder("local[*]", "graft-test", warehouse)
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
   }
 
   /** Runs `body` with `spark.graft.reliableMaterialize=true` on the shared

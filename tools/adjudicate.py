@@ -21,12 +21,13 @@ machine-labeled verdict table:
                    BENCH_NOTES r5-r8); no action.
 
 With `--ab BASELINE_REF` a second phase runs: every confirmed suspect is
-re-measured under the BASELINE COMMIT's engine source (git checkout of
-src/main/scala, repackage, isolated rerun, tree restored under
-try/finally) — the interleaved same-window old/new A/B that rounds 5-9
-established as the only load-proof reading when isolation itself runs
-under host load (sustained external load inflates even isolated CPU
-~1.2-1.5x; both r9 sweeps measured it directly). A/B verdicts:
+re-measured under the BASELINE COMMIT, built and run from a temporary
+`git worktree` of it that is removed afterwards (the working tree, its
+uncommitted edits included, is never touched) — the interleaved
+same-window old/new A/B that rounds 5-9 established as the only
+load-proof reading when isolation itself runs under host load
+(sustained external load inflates even isolated CPU ~1.2-1.5x; both r9
+sweeps measured it directly). A/B verdicts:
 
   AB-SAME          the old commit reads the same (within the ratchet
                    threshold) under current conditions — the regression
@@ -64,29 +65,34 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from ratchet import load, regressions  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-JAR = os.path.join(REPO, "target", "scala-2.13",
-                   "cascadinghivespark_2.13-0.1.0.jar")
 SPARK_SUBMIT = "/opt/spark/bin/spark-submit"
 
 
-def ensure_jar():
-    """Package the current tree — an adjudication that reruns STALE code
-    would compare the wrong commit and mislabel every verdict."""
-    r = subprocess.run(["sbt", "-batch", "package"], cwd=REPO,
+def jar(tree):
+    return os.path.join(tree, "target", "scala-2.13",
+                        "cascadinghivespark_2.13-0.1.0.jar")
+
+
+def ensure_jar(tree=REPO):
+    """Package `tree` — an adjudication that reruns STALE code would
+    compare the wrong commit and mislabel every verdict."""
+    r = subprocess.run(["sbt", "-batch", "package"], cwd=tree,
                        stdout=subprocess.PIPE, stderr=subprocess.STDOUT,
                        text=True)
     if r.returncode != 0:
         sys.exit(f"sbt package failed:\n{r.stdout[-2000:]}")
-    if not os.path.exists(JAR):
-        sys.exit(f"packaged jar not found at {JAR}")
+    if not os.path.exists(jar(tree)):
+        sys.exit(f"packaged jar not found at {jar(tree)}")
 
 
 LAUNCHER = "local"
 
 
-def run_isolated(query, sf, repeat, cpus):
-    """One Bench run timing exactly one query min-of-N; returns
-    (wall, cpu) or (None, None) on failure. LAUNCHER picks the mode:
+def run_isolated(query, sf, repeat, cpus, tree=REPO):
+    """One Bench run of `tree`'s build timing exactly one query min-of-N;
+    returns (wall, cpu) or (None, None) on failure. Every run starts in
+    REPO, whichever tree it builds from, so both sides of an A/B launch
+    from the same directory. LAUNCHER picks the mode:
     'local' = one spark-submit local[cpus] JVM; 'standalone' = a
     standalone_bench.sh invocation (own master + 2 executor JVMs) so
     suspects from a STANDALONE sweep are adjudicated under the same
@@ -102,7 +108,7 @@ def run_isolated(query, sf, repeat, cpus):
                SPARK_GRAFT_BENCH_JSON=out)
     if LAUNCHER == "standalone":
         r = subprocess.run(
-            ["bash", os.path.join(REPO, "tools", "standalone_bench.sh"),
+            ["bash", os.path.join(tree, "tools", "standalone_bench.sh"),
              sf, str(repeat), query],
             env=env, cwd=REPO, stdout=subprocess.PIPE,
             stderr=subprocess.STDOUT, text=True)
@@ -112,7 +118,7 @@ def run_isolated(query, sf, repeat, cpus):
              "--driver-memory", "8g",
              "--conf", "spark.ui.enabled=false",
              "--conf", f"spark.sql.shuffle.partitions={cpus}",
-             "--class", "graft.Bench", JAR],
+             "--class", "graft.Bench", jar(tree)],
             env=env, cwd=REPO, stdout=subprocess.PIPE,
             stderr=subprocess.STDOUT, text=True)
     try:
@@ -154,9 +160,9 @@ def ab_phase(rows, sf, repeat, cpus, ref):
     cannot manufacture a confirmation — the first A/B design compared
     phase-1 readings (taken ~40 min earlier under different load)
     against the old pass and mislabeled 10 box-state suspects as real.
-    The tree is restored (and repackaged) under try/finally: an
-    exception mid-phase must never leave the working tree on the old
-    commit."""
+    The old commit is checked out into its own temporary worktree and
+    built there, so the working tree is never switched and no file that
+    one commit has and the other lacks leaks into either build."""
     todo = [r for r in rows if r["verdict"] in
             ("CODE-REGRESSION", "WALL-CONFIRMED", "AB-CONFIRMED")]
     if not todo:
@@ -164,24 +170,25 @@ def ab_phase(rows, sf, repeat, cpus, ref):
     print(f"[adjudicate] A/B phase: {len(todo)} confirmed suspects vs "
           f"{ref} (bracketed new/old/new passes, isolated each)")
 
-    def sweep_pass(label):
+    def sweep_pass(label, tree=REPO):
         out = {}
         for r in todo:
             q = r["query"]
             print(f"[adjudicate] A/B [{label}] {q}...", flush=True)
-            out[q] = run_isolated(q, sf, repeat, cpus)
+            out[q] = run_isolated(q, sf, repeat, cpus, tree)
         return out
 
-    try:
-        newA = sweep_pass("new-1")
-        subprocess.run(["git", "checkout", ref, "--", "src/main/scala"],
+    newA = sweep_pass("new-1")
+    with tempfile.TemporaryDirectory(prefix="graft-ab-") as tmp:
+        old_tree = os.path.join(tmp, "old")
+        subprocess.run(["git", "worktree", "add", "--detach", old_tree, ref],
                        cwd=REPO, check=True)
-        ensure_jar()
-        old = sweep_pass(f"old {ref}")
-    finally:
-        subprocess.run(["git", "checkout", "HEAD", "--", "src/main/scala"],
-                       cwd=REPO, check=True)
-        ensure_jar()
+        try:
+            ensure_jar(old_tree)
+            old = sweep_pass(f"old {ref}", old_tree)
+        finally:
+            subprocess.run(["git", "worktree", "remove", "--force",
+                            old_tree], cwd=REPO, check=True)
     newB = sweep_pass("new-2")
 
     def pick(v, kind):
@@ -245,6 +252,8 @@ def main():
             sys.exit("--recheck needs --ab REF")
         with open(args.out) as f:
             rows = json.load(f)["verdicts"]
+        if not args.no_package:
+            ensure_jar()
         ab_phase(rows, sf, args.repeat, args.cpus, args.ab)
         finish(args, sf, rows)
         return
