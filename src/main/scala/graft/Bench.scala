@@ -9,15 +9,23 @@ package graft
   * touches every table so first-query timings don't absorb session/footer
   * initialization.
   *
-  * Per query the record holds the min wall and min executor CPU seconds of
-  * `SPARK_GRAFT_REPEAT` runs (`queries`, `cpu_queries`) and the codegen
-  * compiles of the LAST run (`compiles_queries`, summed in
-  * `compiles_total`): this JVM's `CodegenMetrics` count, so task compiles
-  * too under `local[n]`. With a repeat of 2 or more it counts the classes
-  * Spark's codegen cache did not keep from the run before, plus any whose
-  * generated source differs from run to run.
+  * Per query the record holds the min wall, min executor CPU and min driver
+  * CPU seconds of `SPARK_GRAFT_REPEAT` runs (`queries`, `cpu_queries`,
+  * `driver_cpu_queries`; the CPU columns summed in `cpu_total` and
+  * `driver_cpu_total`) and the codegen compiles of the LAST run
+  * (`compiles_queries`, summed in `compiles_total`): this JVM's
+  * `CodegenMetrics` count, so task compiles too under `local[n]`. With a
+  * repeat of 2 or more it counts the classes Spark's codegen cache did not
+  * keep from the run before, plus any whose generated source differs from
+  * run to run.
   */
 object Bench {
+  /** One query's record: min wall, executor CPU and driver CPU seconds of
+    * its runs and the compiles of its last run; all -1 when a run failed.
+    */
+  private final case class Row(name: String, wall: Double, cpu: Double,
+                               driverCpu: Double, compiles: Long)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Each query runs `repeat` times and records the MINIMUM wall time: the
@@ -52,23 +60,25 @@ object Bench {
         }
         runs.foreach(_.get) // a failed run fails the query: -1 below
         (runs.map(_.wallSeconds).min, runs.map(_.cpuSeconds).min,
-          runs.last.compiles)
+          runs.map(_.driverCpuSeconds).min, runs.last.compiles)
       }
       (sweep.cpus, timed.map { case (name, r) =>
-        (name, r.fold(_ => -1.0, _._1), r.fold(_ => -1.0, _._2),
-          r.fold(_ => -1L, _._3)) })
+        Row(name, r.fold(_ => -1.0, _._1), r.fold(_ => -1.0, _._2),
+          r.fold(_ => -1.0, _._3), r.fold(_ => -1L, _._4)) })
     }
-    def byQuery[V](f: ((String, Double, Double, Long)) => V): String =
-      results.map(r => "\"" + r._1 + "\":" + f(r)).mkString("{", ",", "}")
-    val qs = byQuery(_._2)
-    val cq = byQuery(r => f"${r._3}%.3f")
-    val kq = byQuery(_._4)
-    val errs = results.collect { case (k, v, _, _) if v < 0 => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val cpuTotal = results.map(_._3).filter(_ >= 0).sum
-    val compilesTotal = results.map(_._4).filter(_ >= 0).sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu_queries":$cq,"cpu_total":${f"$cpuTotal%.1f"},"compiles_queries":$kq,"compiles_total":$compilesTotal,"errors":$errs,"repeat":$repeat,"sf":"$sfDir"}"""
+    def byQuery[V](f: Row => V): String =
+      results.map(r => "\"" + r.name + "\":" + f(r)).mkString("{", ",", "}")
+    val qs = byQuery(_.wall)
+    val cq = byQuery(r => f"${r.cpu}%.3f")
+    val dq = byQuery(r => f"${r.driverCpu}%.3f")
+    val kq = byQuery(_.compiles)
+    val failed = results.filter(_.wall < 0).map("\"" + _.name + "\"")
+    val errs = failed.mkString("[", ",", "]")
+    val total = results.map(_.wall).filter(_ >= 0).sum
+    val cpuTotal = results.map(_.cpu).filter(_ >= 0).sum
+    val driverCpuTotal = results.map(_.driverCpu).filter(_ >= 0).sum
+    val compilesTotal = results.map(_.compiles).filter(_ >= 0).sum
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu_queries":$cq,"cpu_total":${f"$cpuTotal%.1f"},"driver_cpu_queries":$dq,"driver_cpu_total":${f"$driverCpuTotal%.1f"},"compiles_queries":$kq,"compiles_total":$compilesTotal,"errors":$errs,"repeat":$repeat,"sf":"$sfDir"}"""
     // The full JSON also goes to a FILE: the driver's stdout capture
     // truncates long lines (600 wall + 600 CPU entries), and a tail cut
     // mid-map invites misreads (r6: a CPU-map tail diffed against an r5
@@ -127,12 +137,11 @@ object Bench {
     // (BENCH_r01..r09 all ended `parsed: null`). This line carries the
     // totals and points at the per-query file; it stays a few hundred bytes
     // no matter how many queries run.
-    val nErr = results.count(_._2 < 0)
+    val nErr = failed.size
     // error names capped at 5 so a pathological all-fail run can't push
     // this line past the tail capture either; the file has the full list
-    val errsCapped = results.collect { case (k, v, _, _) if v < 0 => "\"" + k + "\"" }
-      .take(5).mkString("[", ",", "]")
-    val summary = s"""{"metric":"total","value":${f"$total%.1f"},"unit":"sec","cpu_total":${f"$cpuTotal%.1f"},"compiles_total":$compilesTotal,"n_queries":${results.size},"n_errors":$nErr,"errors":$errsCapped,"repeat":$repeat,"cpus":$cpus,"sf":"$sfDir","queries_file":${written.map("\"" + _ + "\"").getOrElse("null")}}"""
+    val errsCapped = failed.take(5).mkString("[", ",", "]")
+    val summary = s"""{"metric":"total","value":${f"$total%.1f"},"unit":"sec","cpu_total":${f"$cpuTotal%.1f"},"driver_cpu_total":${f"$driverCpuTotal%.1f"},"compiles_total":$compilesTotal,"n_queries":${results.size},"n_errors":$nErr,"errors":$errsCapped,"repeat":$repeat,"cpus":$cpus,"sf":"$sfDir","queries_file":${written.map("\"" + _ + "\"").getOrElse("null")}}"""
     println(summary)
   }
 }

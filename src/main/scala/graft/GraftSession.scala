@@ -54,7 +54,14 @@ object GraftSession {
       // gallery pass; q116 or q334 alone in a Bench repeat); Spark splits
       // the cache into 4 LRU segments, so 500 holds one such set about 4
       // times over (README). Static: read once per JVM, at its first codegen.
-      "spark.sql.codegen.cache.maxEntries" -> "500"
+      "spark.sql.codegen.cache.maxEntries" -> "500",
+      // Generated class names leave out the whole-stage codegen stage id.
+      // AQE hands out stage ids as query stages get planned, in an order
+      // that can change from run to run, so with the id in the name an
+      // unchanged pipeline misses the cache above and compiles again.
+      // Stack traces lose the id; the generated source and the plan's
+      // `*(N)` marker keep it.
+      "spark.sql.codegen.useIdInClassName" -> "false"
     ).map { case (k, v) => k -> props.getOrElse(k, v) }
   }
 

@@ -1687,10 +1687,10 @@ private[graft] object QueriesStats1 {
       // fold, and each channel's credit is how much conversion DROPS
       // when its state is redirected to 'null'. All five scenarios
       // (base + 4 removals) ride ONE bounded wide frame (5 rows x 25
-      // prob columns) whose iteration is pure fixed-operand-order
-      // column arithmetic — deterministic on both engines; only the
-      // journey extraction touches data-sized rows (per-user windows,
-      // bounded by activity).
+      // prob columns) whose iteration is one Recurrence of
+      // fixed-operand-order arithmetic per row — deterministic on both
+      // engines; only the journey extraction touches data-sized rows
+      // (per-user windows, bounded by activity).
       val chans = Seq("click", "view", "signup", "error")
       val ev = events(s, dir).select(col("user_id"),
         col("event_type").as("et"), unix_micros(col("ts")).as("us"),
@@ -1736,21 +1736,19 @@ private[graft] object QueriesStats1 {
       val aggs = froms.flatMap(f => tos.map(tt =>
         sum(when(col("f") === f && col("tt") === tt, col("p"))
           .otherwise(0.0)).as(s"t_${f}_$tt")))
-      var cur = redirected.groupBy(col("scen"))
-        .agg(aggs.head, aggs.tail: _*)
-      chans.foreach(c => cur = cur.withColumn(s"p_$c", lit(0.0)))
-      for (_ <- 1 to 20) {
-        val keep = col("scen") +:
-          froms.flatMap(f => tos.map(tt => col(s"t_${f}_$tt")))
-        val ps = chans.map { c =>
+      val ps = Recurrence.iterate(chans.map(c => s"p_$c" -> lit(0.0)), 20) {
+        st => chans.map { c =>
           chans.foldLeft(col(s"t_${c}_conv"))((acc, d) =>
-            acc + col(s"t_${c}_$d") * col(s"p_$d")).as(s"p_$c")
+            acc + col(s"t_${c}_$d") * st(s"p_$d"))
         }
-        cur = cur.select(keep ++ ps: _*)
       }
-      val fin = cur.select(col("scen"),
-        chans.foldLeft(col("t_start_conv"))((acc, d) =>
-          acc + col(s"t_start_$d") * col(s"p_$d")).as("p_start"))
+      val fin = redirected.groupBy(col("scen"))
+        .agg(aggs.head, aggs.tail: _*)
+        .select(col("scen") +: tos.map(tt => col(s"t_start_$tt")) :+
+          ps.as("ps"): _*)
+        .select(col("scen"),
+          chans.foldLeft(col("t_start_conv"))((acc, d) =>
+            acc + col(s"t_start_$d") * col(s"ps.p_$d")).as("p_start"))
       val wideF = fin.groupBy()
         .agg(sum(when(col("scen") === "base", col("p_start"))
           .otherwise(0.0)).as("p_base"),
@@ -2218,7 +2216,7 @@ private[graft] object QueriesStats1 {
       // returns, and solve NPV(r) = 0 for the monthly rate. The cash
       // flows pivot to a WIDE 5-row frame (13 exact-kilodollar
       // columns), so every bisection step is one fixed-operand-order
-      // NPV expression + interval update — pure column arithmetic,
+      // NPV expression + interval update — one Recurrence per row,
       // deterministic on both engines (q340's fold pattern).
       val seg = t(s, dir, "orders")
         .join(t(s, dir, "customer")
@@ -2241,25 +2239,19 @@ private[graft] object QueriesStats1 {
       def npv(r: Column) = (1 to 12).foldLeft(col("c0").cast("double")
           * -1.0)((acc, mm) =>
         acc + col(s"cf$mm") / pow(r + 1.0, mm.toDouble))
-      // ONE projection per bisection step (a withColumn chain would put
-      // ~6 nodes per step into analysis — the q288 stage-count lesson)
-      val carry = col("sg") +: col("c0") +:
-        (1 to 12).map(mm => col(s"cf$mm"))
-      var cur = c0.join(cf, Seq("sg"))
-        .select(carry :+ lit(0.0).as("lo") :+ lit(1.0).as("hi"): _*)
-      for (k <- 1 to 30) {
-        val mid = (col("lo") + col("hi")) / 2
-        cur = cur.select(carry :+
-          when(npv(mid) > 0, mid).otherwise(col("lo")).as("lo") :+
-          when(npv(mid) > 0, col("hi")).otherwise(mid).as("hi"): _*)
-        // truncate the plan: CollapseProject would otherwise inline the
-        // interval recurrence into one exponentially-growing expression
-        if (k % 10 == 0) cur = cur.materializeEager
+      val rate = Recurrence.iterate(Seq("lo" -> lit(0.0), "hi" -> lit(1.0)),
+          30) { st =>
+        val mid = (st("lo") + st("hi")) / 2
+        Seq(when(npv(mid) > 0, mid).otherwise(st("lo")),
+          when(npv(mid) > 0, st("hi")).otherwise(mid))
       }
-      cur.select(col("sg").as("segment"), col("c0").as("c0_kusd"),
+      c0.join(cf, Seq("sg"))
+        .select(col("sg") +: col("c0") +:
+          (1 to 12).map(mm => col(s"cf$mm")) :+ rate.as("r"): _*)
+        .select(col("sg").as("segment"), col("c0").as("c0_kusd"),
           (1 to 12).map(mm => col(s"cf$mm")).reduce(_ + _)
             .as("total_return_kusd"),
-          round((col("lo") + col("hi")) / 2, 8).as("irr_monthly"))
+          round((col("r.lo") + col("r.hi")) / 2, 8).as("irr_monthly"))
         .withColumn("irr_annual",
           round(pow(col("irr_monthly") + 1.0, 12.0) - 1.0, 6))
         .orderBy(col("segment"))
@@ -2846,13 +2838,12 @@ private[graft] object QueriesStats1 {
 
     "q364_holt_trend" -> ((s, dir) => {
       // Holt double-exponential smoothing over the 27-quarter revenue
-      // series (alpha .3, beta .1): level+trend state folded
-      // column-by-column on a ONE-row wide frame — 26 fixed-operand
-      // steps, plan truncated every 10 (q350's barrier lesson), with
-      // the one-step absolute error accumulated inside the same fold.
-      // The recurrence is inherently sequential; making the frame wide
-      // makes each step pure scalar arithmetic, identical on any
-      // engine.
+      // series (alpha .3, beta .1): level+trend state folded over the
+      // quarters of a ONE-row wide frame — one Recurrence of 26
+      // fixed-operand steps, with the one-step absolute error
+      // accumulated inside the same fold. The recurrence is inherently
+      // sequential; making the frame wide makes each step pure scalar
+      // arithmetic, identical on any engine.
       val qidx = expr(
         "(year(o_orderdate) - 1992) * 4 + (month(o_orderdate) - 1) div 3")
       val aggs = (0 to 26).map(k =>
@@ -2860,22 +2851,19 @@ private[graft] object QueriesStats1 {
           expr("CAST(floor(o_totalprice) AS BIGINT)")).otherwise(0L)) /
           1000.0).cast("double").as(s"y$k"))
       val wide = t(s, dir, "orders").agg(aggs.head, aggs.tail: _*)
-      val ys = (0 to 26).map(k => col(s"y$k"))
-      var cur = wide.select(ys :+ col("y0").as("l") :+
-        (col("y1") - col("y0")).as("b") :+ lit(0.0).as("sae"): _*)
-      for (tt <- 1 to 26) {
-        val pred = col("l") + col("b")
-        val l2 = lit(0.3) * col(s"y$tt") + lit(0.7) * pred
-        cur = cur.select(ys :+ l2.as("l") :+
-          (lit(0.1) * (l2 - col("l")) + lit(0.9) * col("b")).as("b") :+
-          (col("sae") + abs(col(s"y$tt") - pred)).as("sae"): _*)
-        if (tt % 10 == 0) cur = cur.materializeEager
+      val fit = Recurrence.overInputs(Seq("l" -> col("y0"),
+          "b" -> (col("y1") - col("y0")), "sae" -> lit(0.0)),
+          array((1 to 26).map(k => col(s"y$k")): _*)) { (st, y) =>
+        val pred = st("l") + st("b")
+        val l2 = lit(0.3) * y + lit(0.7) * pred
+        Seq(l2, lit(0.1) * (l2 - st("l")) + lit(0.9) * st("b"),
+          st("sae") + abs(y - pred))
       }
-      cur.select(lit(27L).as("n_quarters"),
-        round(col("l"), 2).as("level_kusd"),
-        round(col("b"), 2).as("trend_kusd"),
-        round(col("l") + col("b"), 2).as("forecast_kusd"),
-        round(col("sae") / 26.0, 2).as("mae_kusd"))
+      wide.select(fit.as("f")).select(lit(27L).as("n_quarters"),
+        round(col("f.l"), 2).as("level_kusd"),
+        round(col("f.b"), 2).as("trend_kusd"),
+        round(col("f.l") + col("f.b"), 2).as("forecast_kusd"),
+        round(col("f.sae") / 26.0, 2).as("mae_kusd"))
     }),
 
     "q365_pacf" -> ((s, dir) => {

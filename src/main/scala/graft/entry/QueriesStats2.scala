@@ -586,10 +586,13 @@ private[graft] object QueriesStats2 {
     "q391_holt_winters" -> ((s, dir) => {
       // Additive Holt-Winters (season length 4) over the 27-quarter
       // revenue series — q364's Holt plus a seasonal state vector,
-      // folded the same way: 23 fixed-operand steps on a ONE-row wide
-      // frame, checkpoint barriers, one-step MAE accumulated in-fold.
-      // Each step touches exactly one seasonal slot (the step index is
-      // a literal, so the update compiles to plain column arithmetic).
+      // folded the same way: one Recurrence of 23 fixed-operand steps
+      // on a ONE-row wide frame, one-step MAE accumulated in-fold.
+      // Each step touches exactly one seasonal slot, and the slots
+      // rotate with the step: s0 is always this step's slot (quarter
+      // tt mod 4), s1..s3 the next ones, and the updated s0 moves to
+      // the back. So the step needs no index, and after quarter 26 s0
+      // holds slot 27 mod 4 = 3, the forecast's.
       val qidx = expr(
         "(year(o_orderdate) - 1992) * 4 + (month(o_orderdate) - 1) div 3")
       val aggs = (0 to 26).map(k =>
@@ -597,34 +600,26 @@ private[graft] object QueriesStats2 {
           expr("CAST(floor(o_totalprice) AS BIGINT)")).otherwise(0L)) /
           1000.0).cast("double").as(s"y$k"))
       val wide = t(s, dir, "orders").agg(aggs.head, aggs.tail: _*)
-      val ys = (0 to 26).map(k => col(s"y$k"))
       val initL = (col("y0") + col("y1") + col("y2") + col("y3")) / 4
       val initB = ((col("y4") + col("y5") + col("y6") + col("y7")) / 4 -
         (col("y0") + col("y1") + col("y2") + col("y3")) / 4) / 4
-      var cur = wide.select(ys ++ Seq(initL.as("l"), initB.as("b"),
-        (col("y0") - initL).as("s0"), (col("y1") - initL).as("s1"),
-        (col("y2") - initL).as("s2"), (col("y3") - initL).as("s3"),
-        lit(0.0).as("sae")): _*)
-      val carry = ys
-      for (tt <- 4 to 26) {
-        val sj = s"s${tt % 4}"
-        val pred = col("l") + col("b") + col(sj)
-        val l2 = lit(0.3) * (col(s"y$tt") - col(sj)) +
-          lit(0.7) * (col("l") + col("b"))
-        val others = Seq(0, 1, 2, 3).filterNot(_ == tt % 4)
-          .map(j => col(s"s$j"))
-        cur = cur.select(carry ++ Seq(l2.as("l"),
-          (lit(0.1) * (l2 - col("l")) + lit(0.9) * col("b")).as("b"),
-          (lit(0.2) * (col(s"y$tt") - l2) + lit(0.8) * col(sj)).as(sj))
-          ++ others ++
-          Seq((col("sae") + abs(col(s"y$tt") - pred)).as("sae")): _*)
-        if (tt % 8 == 0) cur = cur.materializeEager
+      val fit = Recurrence.overInputs(Seq("l" -> initL, "b" -> initB,
+          "s0" -> (col("y0") - initL), "s1" -> (col("y1") - initL),
+          "s2" -> (col("y2") - initL), "s3" -> (col("y3") - initL),
+          "sae" -> lit(0.0)),
+          array((4 to 26).map(tt => col(s"y$tt")): _*)) { (st, y) =>
+        val pred = st("l") + st("b") + st("s0")
+        val l2 = lit(0.3) * (y - st("s0")) + lit(0.7) * (st("l") + st("b"))
+        Seq(l2, lit(0.1) * (l2 - st("l")) + lit(0.9) * st("b"),
+          st("s1"), st("s2"), st("s3"),
+          lit(0.2) * (y - l2) + lit(0.8) * st("s0"),
+          st("sae") + abs(y - pred))
       }
-      cur.select(lit(27L).as("n_quarters"),
-        round(col("l"), 2).as("level_kusd"),
-        round(col("b"), 2).as("trend_kusd"),
-        round(col("l") + col("b") + col("s3"), 2).as("forecast_kusd"),
-        round(col("sae") / 23.0, 2).as("mae_kusd"))
+      wide.select(fit.as("f")).select(lit(27L).as("n_quarters"),
+        round(col("f.l"), 2).as("level_kusd"),
+        round(col("f.b"), 2).as("trend_kusd"),
+        round(col("f.l") + col("f.b") + col("f.s0"), 2).as("forecast_kusd"),
+        round(col("f.sae") / 23.0, 2).as("mae_kusd"))
     }),
 
     "q392_cliffs_delta" -> ((s, dir) => {
@@ -1492,8 +1487,8 @@ private[graft] object QueriesStats2 {
       // count "contests" (i beats j on a day iff its count is higher;
       // ties skipped), fit by 10 MM iterations with per-round
       // normalization. The only data-sized pass is the daily rollup —
-      // the win matrix collapses to ONE wide row and the fold is plain
-      // column arithmetic with checkpoint barriers (q391's pattern).
+      // the win matrix collapses to ONE wide row and the fold is one
+      // Recurrence of plain arithmetic (q391's pattern).
       val types = Seq("click", "error", "purchase", "signup", "view")
       val daily = events(s, dir)
         .groupBy(to_date(col("ts")).as("d"))
@@ -1509,29 +1504,27 @@ private[graft] object QueriesStats2 {
       val wNames = (for {
         i <- types.indices; j <- types.indices if i != j
       } yield col(s"w_${i}_$j")).toSeq
-      var cur = daily.agg(winCols.head, winCols.tail: _*)
-        .select(wNames ++ types.indices.map(i => lit(0.2).as(s"p$i")): _*)
-      for (it <- 1 to 10) {
+      val fit = Recurrence.iterate(
+          types.indices.map(i => s"p$i" -> lit(0.2)), 10) { st =>
         val qs = types.indices.map { i =>
           val wi = types.indices.filter(_ != i)
             .map(j => col(s"w_${i}_$j")).reduce(_ + _).cast("double")
           val denom = types.indices.filter(_ != i).map { j =>
             (col(s"w_${i}_$j") + col(s"w_${j}_$i")).cast("double") /
-              (col(s"p$i") + col(s"p$j"))
+              (st(s"p$i") + st(s"p$j"))
           }.reduce(_ + _)
-          (wi / denom).as(s"q$i")
+          wi / denom
         }
-        val withQ = cur.select(wNames ++ qs: _*)
-        val qsum = types.indices.map(i => col(s"q$i")).reduce(_ + _)
-        cur = withQ.select(wNames ++
-          types.indices.map(i => (col(s"q$i") / qsum).as(s"p$i")): _*)
-        if (it % 3 == 0) cur = cur.materializeEager
+        val qsum = qs.reduce(_ + _)
+        qs.map(_ / qsum)
       }
       val wins = types.indices.map { i =>
         types.indices.filter(_ != i).map(j => col(s"w_${i}_$j"))
           .reduce(_ + _).as(s"W$i")
       }
-      cur.select(wNames ++ wins ++ types.indices.map(i => col(s"p$i")): _*)
+      daily.agg(winCols.head, winCols.tail: _*)
+        .select(wNames :+ fit.as("f"): _*)
+        .select(wins ++ types.indices.map(i => col(s"f.p$i").as(s"p$i")): _*)
         .selectExpr("stack(5, " + types.indices.map(i =>
           s"'${types(i)}', W$i, round(p$i, 6)").mkString(", ") +
           ") AS (event_type, wins, strength)")
@@ -1940,8 +1933,8 @@ private[graft] object QueriesStats2 {
       // demand series (reorder-up-to S=500 when below s=200, zero lead
       // time, unmet demand lost): q369 SIZES the policy, this MEASURES
       // one — service level, stockout units, orders placed. The demand
-      // series folds on a ONE-row wide frame (integer arithmetic
-      // throughout, so the replay is exact on both engines).
+      // series folds as one Recurrence on a ONE-row wide frame (integer
+      // arithmetic throughout, so the replay is exact on both engines).
       val d0 = events(s, dir).agg(min(to_date(col("ts"))).as("d0"))
       val idx = events(s, dir)
         .filter(col("event_type") === "purchase")
@@ -1951,20 +1944,20 @@ private[graft] object QueriesStats2 {
         sum(when(col("k") === k, 1L).otherwise(0L)).as(s"y$k"))
       val wide = idx.agg(aggs.head, aggs.tail: _*)
       val ys = (0 to 29).map(k => col(s"y$k"))
-      var cur = wide.select(ys ++ Seq(lit(500L).as("inv"),
-        lit(0L).as("n_orders"), lit(0L).as("lost")): _*)
-      for (k <- 0 to 29) {
-        val pre = when(col("inv") < 200L, lit(500L)).otherwise(col("inv"))
-        val ord = when(col("inv") < 200L, 1L).otherwise(0L)
-        val after = pre - col(s"y$k")
-        cur = cur.select(ys ++ Seq(
-          greatest(after, lit(0L)).as("inv"),
-          (col("n_orders") + ord).as("n_orders"),
-          (col("lost") + greatest(-after, lit(0L))).as("lost")): _*)
-        if (k % 8 == 7) cur = cur.materializeEager
+      val sim = Recurrence.overInputs(Seq("inv" -> lit(500L),
+          "n_orders" -> lit(0L), "lost" -> lit(0L)), array(ys: _*)) {
+        (st, y) =>
+          val pre = when(st("inv") < 200L, lit(500L)).otherwise(st("inv"))
+          val ord = when(st("inv") < 200L, 1L).otherwise(0L)
+          val after = pre - y
+          Seq(greatest(after, lit(0L)), st("n_orders") + ord,
+            st("lost") + greatest(-after, lit(0L)))
       }
-      cur.select((ys.reduce(_ + _)).as("total_demand"), col("n_orders"),
-          col("lost").as("lost_units"), col("inv").as("final_inventory"))
+      wide.select(ys :+ sim.as("sim"): _*)
+        .select((ys.reduce(_ + _)).as("total_demand"),
+          col("sim.n_orders").as("n_orders"),
+          col("sim.lost").as("lost_units"),
+          col("sim.inv").as("final_inventory"))
         .select(col("total_demand"), col("n_orders"), col("lost_units"),
           col("final_inventory"),
           round(lit(1.0) - col("lost_units").cast("double") /

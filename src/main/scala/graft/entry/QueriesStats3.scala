@@ -1274,9 +1274,9 @@ private[graft] object QueriesStats3 {
       // local-level Kalman filter over the 30-day event-count series
       // (R = series variance, Q = R/10 — both data-derived so the
       // recursion is engine-identical): 29 predict/update steps folded
-      // on the ONE-row wide frame with checkpoint barriers (q391's
-      // pattern), innovation RMSE accumulated in-fold — the state-space
-      // smoother next to q207's EWMA.
+      // over the days of the ONE-row wide frame as one Recurrence
+      // (q391's pattern), innovation RMSE accumulated in-fold — the
+      // state-space smoother next to q207's EWMA.
       val d0 = events(s, dir).agg(min(to_date(col("ts"))).as("d0"))
       val idx = events(s, dir).crossJoin(broadcast(d0))
         .select(datediff(to_date(col("ts")), col("d0")).as("k"))
@@ -1288,24 +1288,20 @@ private[graft] object QueriesStats3 {
       val meanY = ys.reduce(_ + _) / 30.0
       val varY = ys.map(y => (y - meanY) * (y - meanY)).reduce(_ + _) /
         30.0
-      var cur = wide.select(ys ++ Seq(col("y0").as("x"),
-        varY.as("r"), (varY / 10.0).as("q"), varY.as("p"),
-        lit(0.0).as("sse")): _*)
-      for (k <- 1 to 29) {
-        val pPred = col("p") + col("q")
-        val kg = pPred / (pPred + col("r"))
-        val innov = col(s"y$k") - col("x")
-        cur = cur.select(ys ++ Seq(
-          (col("x") + kg * innov).as("x"), col("r"), col("q"),
-          ((lit(1.0) - kg) * pPred).as("p"),
-          (col("sse") + innov * innov).as("sse")): _*)
-        if (k % 8 == 0) cur = cur.materializeEager
+      val kf = Recurrence.overInputs(Seq("x" -> col("y0"), "r" -> varY,
+          "q" -> varY / 10.0, "p" -> varY, "sse" -> lit(0.0)),
+          array(ys.tail: _*)) { (st, y) =>
+        val pPred = st("p") + st("q")
+        val kg = pPred / (pPred + st("r"))
+        val innov = y - st("x")
+        Seq(st("x") + kg * innov, st("r"), st("q"), (lit(1.0) - kg) * pPred,
+          st("sse") + innov * innov)
       }
-      cur.select(lit(30L).as("n_days"), round(col("x"), 4)
-          .as("final_level"),
-        round((col("p") + col("q")) / (col("p") + col("q") + col("r")),
-          6).as("steady_gain"),
-        round(sqrt(col("sse") / 29.0), 4).as("innovation_rmse"))
+      wide.select(kf.as("kf")).select(lit(30L).as("n_days"),
+        round(col("kf.x"), 4).as("final_level"),
+        round((col("kf.p") + col("kf.q")) /
+          (col("kf.p") + col("kf.q") + col("kf.r")), 6).as("steady_gain"),
+        round(sqrt(col("kf.sse") / 29.0), 4).as("innovation_rmse"))
     }),
 
     "q483_graph_churn" -> ((s, dir) => {
@@ -1484,7 +1480,7 @@ private[graft] object QueriesStats3 {
       // expected first-passage steps to 'purchase' from each other event
       // type under the q163 Markov kernel: h_i = 1 + Σ_{j≠purchase}
       // p_ij·h_j solved by 20 Jacobi sweeps on a ONE-row frame (the
-      // bounded 4-unknown system; checkpoint barriers) — the
+      // bounded 4-unknown system; one Recurrence) — the
       // time-to-conversion read the transition matrix alone doesn't
       // give.
       val types = Seq("click", "error", "signup", "view")
@@ -1495,19 +1491,16 @@ private[graft] object QueriesStats3 {
       val pAggs = for { i <- types; j <- types } yield
         coalesce(max(when(col("src") === i && col("dst") === j,
           col("p"))), lit(0.0)).as(s"p_${i}_$j")
-      var cur = p.agg(pAggs.head, pAggs.tail: _*)
-        .select((for { i <- types; j <- types }
-          yield col(s"p_${i}_$j")) ++
-          types.map(i => lit(1.0).as(s"h_$i")): _*)
-      val pCols = for { i <- types; j <- types } yield col(s"p_${i}_$j")
-      for (it <- 1 to 20) {
-        cur = cur.select(pCols ++ types.map { i =>
-          (lit(1.0) + types.map(j => col(s"p_${i}_$j") * col(s"h_$j"))
-            .reduce(_ + _)).as(s"h_$i")
-        }: _*)
-        if (it % 6 == 0) cur = cur.materializeEager
+      val h = Recurrence.iterate(types.map(i => s"h_$i" -> lit(1.0)), 20) {
+        st => types.map { i =>
+          lit(1.0) + types.map(j => col(s"p_${i}_$j") * st(s"h_$j"))
+            .reduce(_ + _)
+        }
       }
-      cur.selectExpr("stack(4, " + types.map(i =>
+      p.agg(pAggs.head, pAggs.tail: _*)
+        .select(h.as("h"))
+        .select(types.map(i => col(s"h.h_$i").as(s"h_$i")): _*)
+        .selectExpr("stack(4, " + types.map(i =>
           s"'$i', round(h_$i, 4)").mkString(", ") +
           ") AS (from_state, expected_steps_to_purchase)")
         .orderBy(col("from_state"))
@@ -2880,9 +2873,9 @@ private[graft] object QueriesStats3 {
     "q525_katz" -> ((s, dir) => {
       // Katz centrality of the five event types under the transition
       // kernel (x = 1 + α·Pᵀx, α = 0.5, 15 sweeps on the ONE-row
-      // 5-state frame) — attenuated-walk importance next to q134's
-      // PageRank and q488's first-passage times. Only the transition
-      // rollup is data-sized.
+      // 5-state frame, one Recurrence) — attenuated-walk importance
+      // next to q134's PageRank and q488's first-passage times. Only
+      // the transition rollup is data-sized.
       val types = Seq("click", "error", "purchase", "signup", "view")
       val tr = eventTransitions(s, dir)
       val rowTot = tr.groupBy(col("src")).agg(sum(col("c")).as("rt"))
@@ -2891,17 +2884,16 @@ private[graft] object QueriesStats3 {
       val pAggs = for { i <- types; j <- types } yield
         coalesce(max(when(col("src") === i && col("dst") === j,
           col("p"))), lit(0.0)).as(s"p_${i}_$j")
-      val pCols = for { i <- types; j <- types } yield col(s"p_${i}_$j")
-      var cur = p.agg(pAggs.head, pAggs.tail: _*)
-        .select(pCols ++ types.map(i => lit(1.0).as(s"x_$i")): _*)
-      for (it <- 1 to 15) {
-        cur = cur.select(pCols ++ types.map { i =>
-          (lit(1.0) + lit(0.5) * types.map(j =>
-            col(s"p_${j}_$i") * col(s"x_$j")).reduce(_ + _)).as(s"x_$i")
-        }: _*)
-        if (it % 5 == 0) cur = cur.materializeEager
+      val x = Recurrence.iterate(types.map(i => s"x_$i" -> lit(1.0)), 15) {
+        st => types.map { i =>
+          lit(1.0) + lit(0.5) * types.map(j =>
+            col(s"p_${j}_$i") * st(s"x_$j")).reduce(_ + _)
+        }
       }
-      cur.selectExpr("stack(5, " + types.map(i =>
+      p.agg(pAggs.head, pAggs.tail: _*)
+        .select(x.as("x"))
+        .select(types.map(i => col(s"x.x_$i").as(s"x_$i")): _*)
+        .selectExpr("stack(5, " + types.map(i =>
           s"'$i', round(x_$i, 4), round(x_$i / (${types
             .map(t0 => s"x_$t0").mkString(" + ")}), 6)")
           .mkString(", ") + ") AS (event_type, katz, share)")

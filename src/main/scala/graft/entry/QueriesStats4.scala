@@ -1697,9 +1697,9 @@ private[graft] object QueriesStats4 {
     "q580_spectral_radius" -> ((s, dir) => {
       // spectral radius of the weighted item-type transition matrix by
       // 15 power iterations with L1 normalization on the ONE-row 5-state
-      // frame — the growth factor of repeated flows (the eigen view
-      // next to q525's Katz and q488's first passage). Rayleigh readout
-      // at the final step.
+      // frame (one Recurrence) — the growth factor of repeated flows
+      // (the eigen view next to q525's Katz and q488's first passage).
+      // Rayleigh readout at the final step.
       val types = Seq("click", "error", "purchase", "signup", "view")
       val tr = events(s, dir)
         .select(col("user_id"), col("event_id"), col("ts"),
@@ -1712,19 +1712,17 @@ private[graft] object QueriesStats4 {
         coalesce(max(when(col("src") === i && col("dst") === j,
           col("c"))), lit(0.0)).as(s"c_${i}_$j")
       val cCols = for { i <- types; j <- types } yield col(s"c_${i}_$j")
-      var cur = tr.agg(cAggs.head, cAggs.tail: _*)
-        .select(cCols ++ types.map(i => lit(0.2).as(s"x_$i")): _*)
-      for (it <- 1 to 15) {
-        val ys = types.map { i =>
-          types.map(j => col(s"c_${i}_$j") * col(s"x_$j"))
-            .reduce(_ + _).as(s"y_$i")
-        }
-        val withY = cur.select(cCols ++ ys: _*)
-        val norm = types.map(i => col(s"y_$i")).reduce(_ + _)
-        cur = withY.select(cCols ++
-          types.map(i => (col(s"y_$i") / norm).as(s"x_$i")): _*)
-        if (it % 5 == 0) cur = cur.materializeEager
+      val x = Recurrence.iterate(types.map(i => s"x_$i" -> lit(0.2)), 15) {
+        st =>
+          val ys = types.map { i =>
+            types.map(j => col(s"c_${i}_$j") * st(s"x_$j")).reduce(_ + _)
+          }
+          val norm = ys.reduce(_ + _)
+          ys.map(_ / norm)
       }
+      val cur = tr.agg(cAggs.head, cAggs.tail: _*)
+        .select(cCols :+ x.as("x"): _*)
+        .select(cCols ++ types.map(i => col(s"x.x_$i").as(s"x_$i")): _*)
       val lamExpr = types.map { i =>
         types.map(j => col(s"c_${i}_$j") * col(s"x_$j")).reduce(_ + _)
       }.reduce(_ + _)
@@ -1745,33 +1743,33 @@ private[graft] object QueriesStats4 {
 
     "q581_sinkhorn" -> ((s, dir) => {
       // Sinkhorn-Knopp doubly-stochastic scaling of the 5×5 transition
-      // counts (10 alternating row/column normalizations on one row) —
-      // the optimal-transport-adjacent balancing that strips both
-      // margins out of a flow matrix. Convergence read off the residual
-      // column-sum deviation.
+      // counts (10 alternating row/column normalizations on one row, one
+      // Recurrence) — the optimal-transport-adjacent balancing that
+      // strips both margins out of a flow matrix. Convergence read off
+      // the residual column-sum deviation.
       val types = Seq("click", "error", "purchase", "signup", "view")
       val tr = eventTransitions(s, dir)
       val cAggs = for { i <- types; j <- types } yield
         coalesce(max(when(col("src") === i && col("dst") === j,
           col("c"))), lit(0.0)).as(s"m_${i}_$j")
-      val mCols = for { i <- types; j <- types } yield
-        s"m_${i}_$j"
-      var cur = tr.agg(cAggs.head, cAggs.tail: _*)
-      for (it <- 1 to 10) {
+      val mNames = for { i <- types; j <- types } yield s"m_${i}_$j"
+      val m = Recurrence.iterate(mNames.map(n => n -> col(n)), 10) { st =>
         // row normalize
-        cur = cur.select(types.flatMap { i =>
-          val rs = types.map(j => col(s"m_${i}_$j")).reduce(_ + _)
-          types.map(j => (col(s"m_${i}_$j") / rs).as(s"m_${i}_$j"))
-        }: _*)
+        val r = types.map { i =>
+          val rs = types.map(j => st(s"m_${i}_$j")).reduce(_ + _)
+          i -> types.map(j => j -> st(s"m_${i}_$j") / rs).toMap
+        }.toMap
         // column normalize
-        cur = cur.select(types.flatMap { i =>
+        types.flatMap { i =>
           types.map { j =>
-            val cs = types.map(i2 => col(s"m_${i2}_$j")).reduce(_ + _)
-            (col(s"m_${i}_$j") / cs).as(s"m_${i}_$j")
+            val cs = types.map(i2 => r(i2)(j)).reduce(_ + _)
+            r(i)(j) / cs
           }
-        }: _*)
-        if (it % 3 == 0) cur = cur.materializeEager
+        }
       }
+      val cur = tr.agg(cAggs.head, cAggs.tail: _*)
+        .select(m.as("m"))
+        .select(mNames.map(n => col(s"m.$n").as(n)): _*)
       val rowDevs = types.map { i =>
         abs(types.map(j => col(s"m_${i}_$j")).reduce(_ + _) - 1.0)
       }.reduce((a, b) => greatest(a, b))
@@ -1884,10 +1882,10 @@ private[graft] object QueriesStats4 {
     "q585_stationary_dist" -> ((s, dir) => {
       // stationary distribution of the event-type Markov chain (20
       // power iterations of x·P on the one-row 5-state frame, uniform
-      // start) compared with the OBSERVED type frequencies — does the
-      // chain's equilibrium match the marginal mix (the undamped
-      // companion to q134's PageRank)? Only the transition rollup is
-      // data-sized.
+      // start, one Recurrence) compared with the OBSERVED type
+      // frequencies — does the chain's equilibrium match the marginal
+      // mix (the undamped companion to q134's PageRank)? Only the
+      // transition rollup is data-sized.
       val types = Seq("click", "error", "purchase", "signup", "view")
       val tr = eventTransitions(s, dir)
       val rowTot = tr.groupBy(col("src")).agg(sum(col("c")).as("rt"))
@@ -1899,16 +1897,14 @@ private[graft] object QueriesStats4 {
       val pAggs = for { i <- types; j <- types } yield
         coalesce(max(when(col("src") === i && col("dst") === j,
           col("p"))), lit(0.0)).as(s"p_${i}_$j")
-      val pCols = for { i <- types; j <- types } yield col(s"p_${i}_$j")
-      var cur = p.agg(pAggs.head, pAggs.tail: _*)
-        .select(pCols ++ types.map(i => lit(0.2).as(s"x_$i")): _*)
-      for (it <- 1 to 20) {
-        cur = cur.select(pCols ++ types.map { j =>
-          types.map(i => col(s"x_$i") * col(s"p_${i}_$j"))
-            .reduce(_ + _).as(s"x_$j")
-        }: _*)
-        if (it % 6 == 0) cur = cur.materializeEager
+      val x = Recurrence.iterate(types.map(i => s"x_$i" -> lit(0.2)), 20) {
+        st => types.map { j =>
+          types.map(i => st(s"x_$i") * col(s"p_${i}_$j")).reduce(_ + _)
+        }
       }
+      val cur = p.agg(pAggs.head, pAggs.tail: _*)
+        .select(x.as("x"))
+        .select(types.map(i => col(s"x.x_$i").as(s"x_$i")): _*)
       val obsShares = obs.crossJoin(broadcast(obsTot))
         .select(col("event_type"), (col("oc") / col("ot")).as("obsSh"))
       cur.selectExpr("stack(5, " + types.map(i =>

@@ -132,13 +132,15 @@ class GraftSessionSpec extends AnyFunSuite {
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.ui.enabled" -> "false",
       "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true",
-      "spark.sql.codegen.cache.maxEntries" -> "500")
+      "spark.sql.codegen.cache.maxEntries" -> "500",
+      "spark.sql.codegen.useIdInClassName" -> "false")
     assert(settings("local[*]", Map.empty) == defaults)
     // a local[n] master sizes the shuffle to n
     assert(settings("local[6]", Map.empty) == defaults ++ Map(
       "spark.master" -> "local[6]", "spark.sql.shuffle.partitions" -> "6"))
     val launched = Map("spark.sql.shuffle.partitions" -> "7",
-      "spark.sql.codegen.cache.maxEntries" -> "100")
+      "spark.sql.codegen.cache.maxEntries" -> "100",
+      "spark.sql.codegen.useIdInClassName" -> "true")
     assert(settings("local[4]", launched) ==
       defaults ++ launched + ("spark.master" -> "local[4]"))
     // a launcher master replaces the fallback, and sizes the shuffle too
