@@ -1,8 +1,11 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
@@ -29,14 +32,21 @@ object TextExpressions {
   def ngramHashes(tokens: Column, n: Int): Column =
     ColumnShim.column(NgramHashes(ColumnShim.expression(tokens), n))
 
-  /** The (idB, jaccard) pairs of one document A at or above `threshold`,
-    * from A's rare-gram count `szA` and the posting-list tails A collected
-    * (`array<array<struct<id, sz>>>`: for each of A's grams, the entries
-    * after A in that gram's id-sorted list). See [[JaccardOverlap]].
+  /** The `(idB, inter)` candidates of one document A from the posting-list
+    * tails A collected (`array<array<long>>`: for each of A's rare grams,
+    * the ids after A in that gram's id-sorted list, so A's rare-gram count
+    * is the number of tails): each B with its count of shared grams, kept
+    * where `inter / szA >= threshold`. See [[JaccardOverlap]].
     */
-  def jaccardOverlap(szA: Column, tails: Column, threshold: Double): Column =
-    ColumnShim.column(JaccardOverlap(
-      ColumnShim.expression(szA), ColumnShim.expression(tails), threshold))
+  def jaccardOverlap(tails: Column, threshold: Double): Column =
+    ColumnShim.column(JaccardOverlap(ColumnShim.expression(tails), threshold))
+
+  /** Aggregate: the sorted non-null ids (longs) of a group with at most
+    * `cap` of them; past the cap, `cap + 1` of them. See [[CappedIdList]].
+    */
+  def cappedIdList(ids: Column, cap: Int): Column =
+    ColumnShim.column(CappedIdList(ColumnShim.expression(ids.cast(LongType)), cap)
+      .toAggregateExpression())
 
   /** Fraction of positions at which two equal-length long arrays agree —
     * the MinHash Jaccard estimate.
@@ -184,57 +194,64 @@ object NgramHashes {
 /** Per-document overlap kernel of the n-gram Jaccard pairs: counts how
   * often each B occurs across A's posting-list tails (an open-addressing
   * long-keyed table sized to the tails, so the buffer is bounded by A's
-  * rare-gram count x the df cap) and keeps B where
-  * `inter / (szA + szB - inter) >= threshold` — the same long arithmetic
-  * and double division as a relational count join, so the values are
-  * bit-identical. Only B sharing at least one gram with A is ever counted.
+  * rare-gram count x the df cap) and emits `(idB, inter)` where
+  * `inter / szA >= threshold`, szA being A's rare-gram count (its number of
+  * tails). Only B sharing at least one gram with A is ever counted.
+  *
+  * The bound is exact pruning, not an approximation: every pair the
+  * Jaccard test `inter / (szA + szB - inter) >= threshold` keeps passes it.
+  * `szA + szB - inter >= szA` holds in longs (B's rare set holds its
+  * `inter` shared grams, so `szB >= inter`), and double division rounds
+  * monotonically, so `inter / szA` is at least the Jaccard. A's size is
+  * all the bound needs, which keeps B's size out of the tails; the caller
+  * joins it and applies the exact test.
+  *
   * The threshold is a reference object, not a literal in the generated
   * code, so every threshold shares one compiled class.
   */
-case class JaccardOverlap(left: Expression, right: Expression, threshold: Double)
-    extends BinaryExpression {
+case class JaccardOverlap(child: Expression, threshold: Double)
+    extends UnaryExpression {
 
   override def dataType: DataType = JaccardOverlap.ResultType
 
-  override def nullSafeEval(szA: Any, tails: Any): Any =
-    JaccardOverlap.compute(szA.asInstanceOf[Long], tails.asInstanceOf[ArrayData], threshold)
+  override def nullSafeEval(tails: Any): Any =
+    JaccardOverlap.compute(tails.asInstanceOf[ArrayData], threshold)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val t = ctx.addReferenceObj("threshold", threshold, "java.lang.Double")
-    defineCodeGen(ctx, ev, (s, a) =>
-      s"graft.expressions.JaccardOverlap.compute($s, $a, $t.doubleValue())")
+    defineCodeGen(ctx, ev, a =>
+      s"graft.expressions.JaccardOverlap.compute($a, $t.doubleValue())")
   }
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
 }
 
 object JaccardOverlap {
   val ResultType: DataType = ArrayType(StructType(Seq(
     StructField("idB", LongType, nullable = false),
-    StructField("jaccard", DoubleType, nullable = false))), containsNull = false)
+    StructField("inter", LongType, nullable = false))), containsNull = false)
 
   /** The per-row kernel, shared by interpreted eval and generated code. */
-  def compute(szA: Long, tails: ArrayData, threshold: Double): ArrayData = {
+  def compute(tails: ArrayData, threshold: Double): ArrayData = {
     val nt = tails.numElements()
+    val szA = nt.toDouble
     var total = 0
     var i = 0
     while (i < nt) { total += tails.getArray(i).numElements(); i += 1 }
     // power-of-two table at load <= 1/2
     val mask = Integer.highestOneBit(math.max(total, 1)) * 4 - 1
     val ids  = new Array[Long](mask + 1)
-    val szs  = new Array[Long](mask + 1)
     val hits = new Array[Int](mask + 1) // 0 = empty slot
     i = 0
     while (i < nt) {
       val tail = tails.getArray(i)
       var j = 0
       while (j < tail.numElements()) {
-        val e = tail.getStruct(j, 2)
-        val id = e.getLong(0)
+        val id = tail.getLong(j)
         var slot = VectorExpressions.mix64(id).toInt & mask
         while (hits(slot) != 0 && ids(slot) != id) slot = (slot + 1) & mask
-        if (hits(slot) == 0) { ids(slot) = id; szs(slot) = e.getLong(1) }
+        ids(slot) = id
         hits(slot) += 1
         j += 1
       }
@@ -244,13 +261,85 @@ object JaccardOverlap {
     var slot = 0
     while (slot <= mask) {
       val inter = hits(slot).toLong
-      if (inter != 0) {
-        val jaccard = inter.toDouble / (szA + szs(slot) - inter).toDouble
-        if (jaccard >= threshold) out += new GenericInternalRow(Array[Any](ids(slot), jaccard))
-      }
+      if (inter != 0 && inter.toDouble / szA >= threshold)
+        out += new GenericInternalRow(Array[Any](ids(slot), inter))
       slot += 1
     }
     new GenericArrayData(out.toArray)
+  }
+}
+
+/** The sorted non-null ids of a group, holding at most `cap + 1` of them:
+  * every id of a group with at most `cap` non-null ids, and `cap + 1` of
+  * them (which ones is unspecified) past that. A `collect_list` whose
+  * buffer is bounded, for a caller that keeps only the groups under the
+  * cap: the posting lists of the n-gram Jaccard pairs, where a boilerplate
+  * gram in every document would otherwise buffer every document's id.
+  */
+case class CappedIdList(child: Expression, cap: Int,
+    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[CappedIdList.Buffer]
+    with UnaryLike[Expression] {
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "capped_id_list"
+
+  override def createAggregationBuffer(): CappedIdList.Buffer =
+    new CappedIdList.Buffer(cap + 1L)
+
+  override def update(b: CappedIdList.Buffer, row: InternalRow): CappedIdList.Buffer = {
+    val v = child.eval(row)
+    if (v != null) b.add(v.asInstanceOf[Long])
+    b
+  }
+
+  override def merge(b: CappedIdList.Buffer, o: CappedIdList.Buffer): CappedIdList.Buffer = {
+    var i = 0
+    while (i < o.n) { b.add(o.ids(i)); i += 1 }
+    b
+  }
+
+  override def eval(b: CappedIdList.Buffer): Any = {
+    val ids = java.util.Arrays.copyOf(b.ids, b.n)
+    java.util.Arrays.sort(ids)
+    UnsafeArrayData.fromPrimitiveArray(ids)
+  }
+
+  override def serialize(b: CappedIdList.Buffer): Array[Byte] = {
+    val bytes = java.nio.ByteBuffer.allocate(8 * b.n)
+    var i = 0
+    while (i < b.n) { bytes.putLong(b.ids(i)); i += 1 }
+    bytes.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): CappedIdList.Buffer = {
+    val b = new CappedIdList.Buffer(cap + 1L)
+    val in = java.nio.ByteBuffer.wrap(bytes)
+    while (in.hasRemaining) b.add(in.getLong())
+    b
+  }
+
+  override def withNewMutableAggBufferOffset(o: Int): CappedIdList =
+    copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): CappedIdList =
+    copy(inputAggBufferOffset = o)
+  override protected def withNewChildInternal(c: Expression): CappedIdList =
+    copy(child = c)
+}
+
+object CappedIdList {
+  /** Up to `limit` ids, in arrival order; later ids are dropped. A Long,
+    * so a cap of `Int.MaxValue` (no cap) does not wrap.
+    */
+  final class Buffer(limit: Long) {
+    var ids = new Array[Long](4)
+    var n = 0
+    def add(id: Long): Unit = if (n < limit) {
+      if (n == ids.length) ids = java.util.Arrays.copyOf(ids, math.min(2L * n, limit).toInt)
+      ids(n) = id
+      n += 1
+    }
   }
 }
 

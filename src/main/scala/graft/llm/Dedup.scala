@@ -489,61 +489,66 @@ object Dedup {
     * boilerplate that would make every posting list quadratic in the
     * hottest key.
     *
-    * The rare posting list, each entry carrying its doc's rare-gram
-    * count, is grouped by gram into id-sorted lists of at most
-    * `maxShingleFreq` entries; every doc A collects the entries after it
-    * in each of its lists, and one codegen'd expression per A
-    * ([[graft.expressions.JaccardOverlap]]) counts each B and emits only
-    * the pairs at or above the threshold (exact — spec-tested against
-    * brute force). No pair row exists below the threshold: at sf0.1 (q25,
-    * t=0.3) a relational self-join emitted 4.9M pair rows in 4.2M groups
-    * for 6,024 kept pairs. A's buffer is bounded by its rare-gram count x
-    * the df cap.
+    * The pairs come from posting lists of ids alone:
+    *  - one aggregate per gram gives its df (`count`, so a null id counts
+    *    toward it) and its id-sorted posting list
+    *    ([[graft.expressions.CappedIdList]]: nulls are skipped, so a null
+    *    id pairs with nothing, and a buffer of at most maxShingleFreq + 1
+    *    ids, so a boilerplate gram never buffers the corpus);
+    *  - every entry A of a kept list takes the ids after it, the last entry
+    *    an empty tail, so the number of tails A collects is its rare-gram
+    *    count szA;
+    *  - one codegen'd expression per A ([[graft.expressions.JaccardOverlap]])
+    *    counts each B over A's tails and emits `(idB, inter)` only where
+    *    `inter / szA >= threshold`, a bound no kept pair fails;
+    *  - the candidates join each B's rare-gram count szB, and
+    *    `inter / (szA + szB - inter) >= threshold` keeps the pairs (long
+    *    arithmetic, then double division; spec-tested against brute force).
+    *
+    * No candidate exists below the bound, and A's buffer is bounded by its
+    * rare-gram count x the df cap. The candidates cross one small shuffle,
+    * so a caller's global sort samples them instead of running the kernel
+    * again. No step checkpoints, so a lost executor's partitions recompute.
     *
     * Measured on the 50k-doc stress corpus at local[4] (short ~150-gram
-    * lists, heavy near-dup clusters; `graft.Stress <sf0.1> 10 docs`): 5.8 s
-    * wall at t=0.8, where the relational self-join took 32.7 s and an
-    * AllPairs-style prefix filter (self-join on each doc's rarest grams,
-    * then per-pair verification) 15.0 s — replicas collide on rare grams
-    * anyway, so the prefix prunes little while adding a per-doc rarity
-    * sort.
+    * lists, heavy near-dup clusters; `graft.Stress <sf0.1> 10 docs`): 5.7 s
+    * wall and 13.9 executor CPU-s at t=0.5, 4.0 s at t=0.8. Tails of
+    * (id, size) structs took 10.9 s and 27.2 CPU-s at t=0.5; at t=0.8 the
+    * relational self-join took 32.7 s and an AllPairs-style prefix filter
+    * (self-join on each doc's rarest grams, then per-pair verification)
+    * 15.0 s — replicas collide on rare grams anyway, so the prefix prunes
+    * little while adding a per-doc rarity sort.
     */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                         n: Int = 3, threshold: Double = 0.3,
                         maxShingleFreq: Int = 100): DataFrame = {
-    // Materialized: the gram-df aggregation and the filtered posting list
-    // both consume it; shingling should run once per document.
-    val posting = df.select(col(idCol).as("__id"),
+    val lists = df.select(col(idCol).as("__id"),
         explode(array_distinct(
           graft.expressions.TextExpressions.ngramHashes(
             TF.normTokens(col(textCol)), n))).as("__g"))
-      .materialize
-
-    val rare = posting.groupBy(col("__g"))
-      .agg(count(lit(1)).as("__df"))
+      .groupBy(col("__g"))
+      .agg(count(lit(1)).as("__df"), graft.expressions.TextExpressions
+          .cappedIdList(col("__id"), maxShingleFreq).as("__pl"))
       .filter(col("__df").between(2, maxShingleFreq))
-
-    val rp = posting.join(rare, Seq("__g"))
-      .materialize
-
-    // each posting entry carries its doc's rare-gram count; a null id
-    // pairs with nothing, as in `idA < idB`
-    val sized = rp.filter(col("__id").isNotNull)
-      .groupBy(col("__id")).agg(collect_list(col("__g")).as("__gs"))
-      .select(explode(col("__gs")).as("__g"),
-        struct(col("__id"), size(col("__gs")).cast("long").as("__sz")).as("__e"))
-    val lists = sized.groupBy(col("__g"))
-      .agg(sort_array(collect_list(col("__e"))).as("__pl"))
-    // doc A at position p of a list takes the entries after it
-    val tails = lists.select(col("__pl"), posexplode(col("__pl")))
-      .filter(col("pos") < size(col("__pl")) - 1)
-      .select(col("col.__id").as("idA"), col("col.__sz").as("__szA"),
+    // doc A at position p of a list takes the ids after it
+    val cands = lists.select(col("__pl"), posexplode(col("__pl")))
+      .select(col("col").as("idA"),
         slice(col("__pl"), col("pos") + 2, size(col("__pl")) - col("pos") - 1)
           .as("__tail"))
-    tails.groupBy(col("idA"), col("__szA"))
+      .groupBy(col("idA"))
       .agg(collect_list(col("__tail")).as("__tails"))
-      .select(col("idA"), inline(graft.expressions.TextExpressions
-        .jaccardOverlap(col("__szA"), col("__tails"), threshold)))
+      .select(col("idA"), size(col("__tails")).cast("long").as("__szA"),
+        inline(graft.expressions.TextExpressions
+          .jaccardOverlap(col("__tails"), threshold)))
+      .repartition(col("idB"))
+    val sizes = lists.select(explode(col("__pl")).as("idB"))
+      .groupBy(col("idB")).agg(count(lit(1)).as("__szB"))
+    cands.join(sizes, Seq("idB"))
+      .select(col("idA"), col("idB"),
+        (col("inter").cast("double") /
+          (col("__szA") + col("__szB") - col("inter")).cast("double"))
+          .as("jaccard"))
+      .filter(col("jaccard") >= threshold)
   }
 
   /** Exact embedding near-duplicate pairs: all-pairs cosine >= threshold.

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.llm.{Dedup, Similarity}
@@ -117,18 +118,22 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("ngram jaccard overlap kernel equals brute force on id, df-cap and threshold edges") {
     // unigrams; cap 3: "cap" (df 3) is kept, "hot" (df 4) is dropped, s*
-    // (df 1) are dropped, so doc e's rare set is empty
+    // (df 1) are dropped, so doc e's rare set is empty. The null-id doc
+    // counts toward df: "w" reaches df 4 only through it and is dropped,
+    // and "x1" stays rare at df 3; a null id pairs with nothing.
     val (a, b, c, d, e) = (-7L, (1L << 41) + 3, -(1L << 42), 5L, (1L << 40) + 9)
     val docs = Seq(
-      a -> "cap x1 x2 hot sa",
-      b -> "cap x1 x2 hot sb",
-      c -> "cap y1 hot",
-      d -> "y1 sd",
-      e -> "se1 se2 hot").toDF("doc_id", "text")
-    val sets = docs.as[(Long, String)].collect().toSeq
+      Some(a) -> "cap x1 x2 hot sa w",
+      Some(b) -> "cap x1 x2 hot sb",
+      Some(c) -> "cap y1 hot w",
+      Some(d) -> "y1 sd w",
+      Some(e) -> "se1 se2 hot",
+      None    -> "w x1 sn").toDF("doc_id", "text")
+    val sets = docs.as[(Option[Long], String)].collect().toSeq
       .map { case (id, t) => id -> t.split(" ").toSet }
     val df = sets.flatMap(_._2).groupBy(identity).map { case (g, gs) => g -> gs.size }
-    val rare = sets.map { case (id, gs) =>
+    assert(df("w") == 4 && sets.count { case (id, gs) => id.nonEmpty && gs("w") } == 3)
+    val rare = sets.collect { case (Some(id), gs) =>
       id -> gs.filter(g => df(g) >= 2 && df(g) <= 3) }.toMap
     assert(rare(e).isEmpty && rare(a) == Set("cap", "x1", "x2"))
     def brute(t: Double) = (for {
@@ -151,6 +156,25 @@ class DedupSimilaritySpec extends AnyFunSuite {
       assert(got == exp, s"t=$t " +
         s"missing=${exp -- got} spurious=${got -- exp}")
     }
+  }
+
+  test("ngram jaccard keeps a pair whose jaccard meets the overlap bound exactly") {
+    // A's rare set {t1, t2, t3} strictly contains B's {t1, t2}, so the
+    // jaccard 2/3 equals the kernel's bound inter / szA
+    val docs = Seq(1L -> "t1 t2 t3", 2L -> "t1 t2", 3L -> "t3 u1")
+      .toDF("doc_id", "text")
+    def pairs(t: Double) = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
+        n = 1, threshold = t, maxShingleFreq = 10)
+      .filter($"idB" === 2L).as[(Long, Long, Double)].collect().toSet
+    val tight = 2.0 / 3.0
+    assert(pairs(tight) == Set((1L, 2L, tight)))
+    assert(pairs(Math.nextUp(tight)).isEmpty)
+  }
+
+  test("ngram jaccard pairs hold no checkpoint, so lost partitions recompute") {
+    val plan = Dedup.ngramJaccardPairs(corpus, "text", "doc_id",
+      n = 2, threshold = 0.5, maxShingleFreq = 1000).queryExecution.analyzed
+    assert(plan.collect { case r: LogicalRDD => r }.isEmpty, plan.treeString)
   }
 
   test("connectedComponents: chain, triangle, isolated pair, long path") {

@@ -329,4 +329,21 @@ class ExpressionsSpec extends AnyFunSuite {
       s"expected the static kernel call in generated code:\n${cg.take(800)}")
     assert(!cg.startsWith("Found 0 WholeStageCodegen"), cg.take(200))
   }
+
+  test("CappedIdList: sorted non-null ids, at most cap + 1 of them across partitions") {
+    val ids = Seq((1, Some(5L)), (1, None), (1, Some(-3L)), (3, None),
+        (2, Some(9L)), (2, Some(1L)), (2, Some(4L)), (2, Some(7L)), (2, Some(2L)))
+      .toDF("k", "id").repartition(3)
+    val got = ids.groupBy($"k")
+      .agg(TextExpressions.cappedIdList($"id", 3).as("l"))
+      .as[(Int, Seq[Long])].collect().toMap
+    assert(got(1) == Seq(-3L, 5L))
+    assert(got(3).isEmpty)
+    assert(got(2).length == 4 && got(2) == got(2).sorted &&
+      got(2).toSet.subsetOf(Set(9L, 1L, 4L, 7L, 2L)), got(2))
+    val uncapped = ids.groupBy($"k")
+      .agg(TextExpressions.cappedIdList($"id", Int.MaxValue).as("l"))
+      .as[(Int, Seq[Long])].collect().toMap
+    assert(uncapped(2) == Seq(1L, 2L, 4L, 7L, 9L))
+  }
 }
