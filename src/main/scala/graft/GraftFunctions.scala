@@ -1,20 +1,15 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 import graft.expressions._
 
 /** SQL-surface registration of the engine's native expressions, so plain
   * `spark.sql` users can call them — the engine's analog of the reference's
   * SerDe-registry entry point (SURVEY.md §2 A17: the piece that made its
-  * formats usable from any host). Two routes:
-  *
-  *   - [[GraftFunctions.register]]: imperative, per-session;
-  *   - [[GraftExtensions]]: `spark.sql.extensions=graft.GraftExtensions`
-  *     for config-driven injection at session build time.
+  * formats usable from any host). [[GraftFunctions.register]] installs them
+  * on a session.
   */
 object GraftFunctions {
 
@@ -77,20 +72,6 @@ object GraftFunctions {
     val reg = spark.sessionState.functionRegistry
     functions.foreach { case (name, builder) =>
       reg.createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
-  }
-}
-
-/** Config-driven variant: `--conf spark.sql.extensions=graft.GraftExtensions`
-  * (or `.withExtensions(new GraftExtensions)`).
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.functions.foreach { case (name, builder) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.expressions", name),
-        builder))
     }
   }
 }

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import graft.ops._
-import graft.functions.{TextFunctions => TF, UrlFunctions => UF, VectorFunctions => VF}
-import graft.llm.{Bpe, Dedup, Multimodal, Pq, Search, Similarity}
+import graft.functions.{TextFunctions => TF}
 
 /** Shared fixtures for the [[SparkEntry]] query parts: table
   * readers, per-JVM scratch dirs, the near-dup corpus, the derived

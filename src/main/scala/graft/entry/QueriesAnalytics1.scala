@@ -1,12 +1,12 @@
 package graft
 
 import graft.Materialize.Ops
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
-import graft.functions.{TextFunctions => TF, UrlFunctions => UF, VectorFunctions => VF}
-import graft.llm.{Bpe, Dedup, Multimodal, Pq, Search, Similarity}
+import graft.functions.{TextFunctions => TF}
+import graft.llm.{Dedup, Search, Similarity}
 import graft.EntryShared._
 
 /** Analytics breadth I — engagement, ranking metrics, hypothesis tests, ER blocking, time-series: q151-q225.

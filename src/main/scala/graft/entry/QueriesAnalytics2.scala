@@ -1,12 +1,12 @@
 package graft
 
 import graft.Materialize.Ops
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
-import graft.functions.{TextFunctions => TF, UrlFunctions => UF, VectorFunctions => VF}
-import graft.llm.{Bpe, Dedup, Multimodal, Pq, Search, Similarity}
+import graft.functions.{TextFunctions => TF}
+import graft.llm.Search
 import graft.EntryShared._
 
 /** Analytics breadth II — experimentation, concentration/inequality, nonparametric tests, attribution: q226-q300.
@@ -740,7 +740,6 @@ private[graft] object QueriesAnalytics2 {
       // trunc()/floor() — native operators disagree AND unary-minus
       // precedence flips `-7 // 2` to -(7//2); out-of-range substring is
       // '' not NULL; least() skips NULLs on both engines.
-      import s.implicits._
       val c = t(s, dir, "customer")
         .select(expr("nullif(c_nationkey, 3)").as("nk"))
       val joinMatches = c.join(broadcast(t(s, dir, "nation")),

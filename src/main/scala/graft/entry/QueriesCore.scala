@@ -1,12 +1,12 @@
 package graft
 
 import graft.Materialize.Ops
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
-import graft.functions.{TextFunctions => TF, UrlFunctions => UF, VectorFunctions => VF}
-import graft.llm.{Bpe, Dedup, Multimodal, Pq, Search, Similarity}
+import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
+import graft.llm.{Dedup, Multimodal, Similarity}
 import graft.EntryShared._
 
 /** Core relational surface, IO/catalog round trips, and the first LLM-pipeline operators (dedup, ANN, streaming, multimodal): q01-q75.

@@ -1,7 +1,7 @@
 package graft
 
 import graft.Materialize.Ops
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
@@ -812,7 +812,6 @@ private[graft] object QueriesPipeline {
       // guarantee) and contain every planted copy pair. All three output
       // facts are invariants, so the oracle states them from the corpus
       // size alone.
-      import s.implicits._
       val base = t(s, dir, "documents").orderBy(col("doc_id")).limit(40)
         .select(col("doc_id").as("id"), encode(col("text"), "UTF-8").as("payload"))
       val copies = base.select((col("id") + 100000L).as("id"), col("payload"))

@@ -5,8 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
-import graft.functions.{TextFunctions => TF, UrlFunctions => UF, VectorFunctions => VF}
-import graft.llm.{Bpe, Dedup, Multimodal, Pq, Search, Similarity}
+import graft.functions.{TextFunctions => TF}
 import graft.EntryShared._
 
 /** Statistics gallery I — causal inference, survival, SPC, change-point and trend tests: q301-q375.

@@ -5,8 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
-import graft.functions.{TextFunctions => TF, UrlFunctions => UF, VectorFunctions => VF}
-import graft.llm.{Bpe, Dedup, Multimodal, Pq, Search, Similarity}
+import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
+import graft.llm.Dedup
 import graft.EntryShared._
 
 /** Statistics gallery II — NLP eval metrics, discovery, forecasting, robust estimation, ops research: q376-q450.

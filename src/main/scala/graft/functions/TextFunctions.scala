@@ -42,30 +42,6 @@ object TextFunctions {
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = profile(text).getField("n_toks")
 
-  /** BPE-ish subword count estimate: word-pieces + digits + punctuation runs.
-    * A cheap proxy for tokenizer-cost accounting at corpus scale.
-    */
-  def bpeTokenCount(text: Column): Column =
-    size(filter(
-      split(text, "(?=[\\p{Punct}])|\\s+|(?<=[\\p{Punct}])", -1),
-      t => length(t) > 0))
-
-  /** Contiguous word n-grams (shingles) over the normalized tokens. */
-  def wordNgrams(text: Column, n: Int): Column = {
-    val toks = normTokens(text)
-    when(size(toks) < n, array()).otherwise(
-      transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-  }
-
-  /** Character n-grams of the lowercased text (language-ID features). */
-  def charNgrams(text: Column, n: Int): Column = {
-    val t = lower(text)
-    when(length(t) < n, array()).otherwise(
-      transform(sequence(lit(0), length(t) - n),
-        i => t.substr(i + 1, lit(n))))
-  }
-
   // --- quality scoring -----------------------------------------------------
 
   val StopwordsEn: Seq[String] = Seq(
@@ -178,17 +154,6 @@ object TextFunctions {
     */
   def contentFingerprint(text: Column): Column =
     xxhash64(concat_ws(" ", normTokens(text)))
-
-  /** Rolling-hash fingerprint: xxhash64 of each k-shingle, combined with a
-    * polynomial roll mod 2^31-1 — order-sensitive (unlike a bag-of-ngrams
-    * hash) and overflow-safe under ANSI mode (acc < 2^31, so
-    * acc*1000003 + h32 < 2^62).
-    */
-  def rollingFingerprint(text: Column, k: Int = 5): Column =
-    aggregate(
-      transform(wordNgrams(text, k), g => pmod(xxhash64(g), lit(4294967296L))),
-      lit(0L),
-      (acc, h) => pmod(acc * lit(1000003L) + h, lit(2147483647L)))
 
   /** Fraction of word-n-gram occurrences that repeat an earlier occurrence
     * in the same document: 1 - distinct/total (the duplicate-ngram signal of

@@ -30,12 +30,6 @@ object Dedup {
     df.join(keep, Seq(idCol), "left_semi")
   }
 
-  /** Exact-duplicate group statistics (fingerprint, representative id, count). */
-  def exactGroups(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    df.select(col(idCol), TF.contentFingerprint(col(textCol)).as("fingerprint"))
-      .groupBy(col("fingerprint"))
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
-
   /** Deterministic MinHash signature: for each of `numHashes` linear
     * permutations h_i(x) = (a_i*x + b_i) mod p over the hashed word
     * shingles (native NgramHashes over normalized tokens), take the min.
@@ -213,35 +207,6 @@ object Dedup {
       .select(col("idA"), col("idB"), col("jaccard_est"))
   }
 
-  /** Near-dedup via MinHash-LSH: removes, per connected candidate pair, the
-    * larger id (single-pass approximation of connected components — exact CC
-    * needs iteration, overkill for dedup where dropping either side is fine).
-    */
-  def minhashDedup(df: DataFrame, textCol: String, idCol: String,
-                   shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 8,
-                   threshold: Double = 0.5): DataFrame = {
-    val drop = minhashPairs(df, textCol, idCol, shingleSize, numHashes, bands, threshold)
-      .select(col("idB").as(idCol)).distinct()
-    df.join(drop, Seq(idCol), "left_anti")
-  }
-
-  /** Near-dedup keeping EXACTLY one document (the smallest id) per
-    * connected near-duplicate cluster: [[minhashPairs]] candidates grouped
-    * by [[connectedComponents]]. Unlike [[minhashDedup]]'s single-pass
-    * approximation (which can drop both endpoints of a chain), the
-    * component representative is always retained.
-    */
-  def minhashDedupClustered(df: DataFrame, textCol: String, idCol: String,
-                            shingleSize: Int = 3, numHashes: Int = 32,
-                            bands: Int = 8, threshold: Double = 0.5): DataFrame = {
-    val pairs = minhashPairs(df, textCol, idCol, shingleSize, numHashes,
-      bands, threshold).select(col("idA"), col("idB"))
-    val drop = connectedComponents(pairs)
-      .filter(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    df.join(drop, Seq(idCol), "left_anti")
-  }
-
   /** Connected components over an undirected pair graph (idA, idB):
     * returns (id, component) where component = the smallest id reachable
     * from `id`. Iterative min-label propagation — each round every node
@@ -249,8 +214,7 @@ object Dedup {
     * O(graph diameter) rounds (near-dup clusters are star-like, so a
     * handful). One shuffle per round on (8-byte id, 8-byte label) rows;
     * rounds run until a fixpoint or `maxIter`. This is the exact grouping
-    * step after near-dup pair generation — [[minhashDedup]]'s single-pass
-    * drop is the cheap approximation of keeping one doc per component.
+    * step after near-dup pair generation.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame =
     connectedComponentsWithStats(pairs, maxIter)._1
@@ -679,9 +643,8 @@ object Dedup {
   }
 
   /** Embedding near-dedup keeping EXACTLY one vector (the smallest id) per
-    * connected near-duplicate cluster — the embedding-side mirror of
-    * [[minhashDedupClustered]]: [[embeddingPairs]] candidates grouped by
-    * [[connectedComponents]], so chained near-dups (a~b~c with a!~c)
+    * connected near-duplicate cluster: [[embeddingPairs]] candidates grouped
+    * by [[connectedComponents]], so chained near-dups (a~b~c with a!~c)
     * collapse to one representative instead of dropping both chain ends.
     */
   def embeddingDedupClustered(df: DataFrame, vecCol: String, idCol: String,

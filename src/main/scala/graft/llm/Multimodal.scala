@@ -1,20 +1,15 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: image/audio/video travel as opaque `binary`
   * columns with typed metadata alongside. The Spark-side machinery — schema,
-  * partitioning, batch shape, metadata extraction — is real; the actual codec
-  * work (JPEG decode, audio resample, frame extraction) is STUBBED with
-  * deterministic fakes because no media libraries ship in this environment.
-  * Swap [[decodeImageStub]] for a real decoder per partition and nothing else
-  * changes.
+  * partitioning, batch shape, metadata extraction — is real; codecs beyond
+  * what the JDK decodes (ImageIO images, PCM/AIFF/AU audio) fall back to
+  * deterministic fakes because no media libraries ship with the engine.
   */
 object Multimodal {
-
-  /** Typed metadata extracted from a media payload. */
-  final case class MediaMeta(nBytes: Long, checksum: Long, width: Int, height: Int)
 
   /** Pack a string column into a binary payload column (UTF-8). In
     * production the payload arrives as real image/audio bytes from parquet
@@ -46,92 +41,14 @@ object Multimodal {
       (b(0) == 'G' && b(1) == 'I' && b(2) == 'F') ||
       (b(0) == 'B' && b(1) == 'M'))
 
-  /** Decode one payload to typed metadata. Real image payloads (by container
-    * signature) are decoded with the JDK's own `javax.imageio` — no external
-    * media libs needed for PNG/JPEG/GIF/BMP width x height. Everything else
-    * (this container's test payloads are UTF-8 text) gets deterministic fake
-    * dimensions derived from the payload hash, so the partition-batch
-    * machinery around the decode is exercised either way. A libjpeg-turbo /
-    * ffmpeg binding for exotic formats would replace only the fallback arm.
-    */
-  def decodeImage(bytes: Array[Byte]): MediaMeta = {
-    var h = 1125899906842597L
-    var i = 0
-    while (i < bytes.length) { h = 31 * h + bytes(i); i += 1 }
-    val real =
-      if (looksLikeImage(bytes))
-        try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
-        catch { case _: java.io.IOException => None }
-      else None
-    real match {
-      case Some(img) =>
-        MediaMeta(bytes.length.toLong, h, img.getWidth, img.getHeight)
-      case None =>
-        MediaMeta(
-          nBytes = bytes.length.toLong,
-          checksum = h,
-          width = 64 + math.floorMod(h, 1024).toInt,
-          height = 64 + math.floorMod(h >> 10, 1024).toInt)
-    }
-  }
-
-  /** Decode payloads to typed metadata with per-partition batching — the
-    * `mapPartitions` seam where a heavier codec binding plugs in.
-    */
-  def decodeMeta(df: DataFrame, binCol: String): Dataset[MediaMeta] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(binCol)).as[Array[Byte]].mapPartitions { it =>
-      // per-partition: a real implementation initializes the codec once here
-      it.map(decodeImage)
-    }
-  }
-
-  /** ??? real feature extractor goes here (CLIP-style image embedding, audio
-    * fingerprint): no model runtime ships in this container, so features
-    * derive deterministically from payload byte windows. The contract a
-    * real extractor keeps: fixed `dim`, one vector per payload, L2-ready
-    * doubles — the output feeds [[graft.llm.Similarity]] and
-    * [[Dedup.embeddingPairs]] unchanged.
-    */
-  def featureVectorStub(bytes: Array[Byte], dim: Int): Array[Double] = {
-    val v = new Array[Double](dim)
-    var h = 1125899906842597L
-    var i = 0
-    while (i < bytes.length) {
-      h = 31 * h + bytes(i)
-      v(i % dim) += (h & 0xFFFF) / 65536.0 - 0.5
-      i += 1
-    }
-    v
-  }
-
-  /** Decode payloads to fixed-dim feature vectors with per-partition
-    * batching — the mapPartitions seam where a real model binding plugs in
-    * (initialize the model once per partition, score row batches). Output
-    * (id, feature) rows feed the ANN / embedding-dedup operators directly.
-    */
-  def extractFeatures(df: DataFrame, idCol: String, binCol: String,
-                      dim: Int = 16): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // real impl: load the model ONCE here, then stream batches
-        it.map { case (id, bytes) => (id, featureVectorStub(bytes, dim)) }
-      }
-      .toDF(idCol, "feature")
-  }
-
   /** 64-bit perceptual average-hash (aHash): scale to an 8x8 grayscale
     * grid, bit k set iff cell k's luminance exceeds the grid mean. Small
     * visual edits move few bits, so near-duplicate images sit within a
-    * small Hamming distance — [[imageNearDupPairs]] then reuses the
-    * pigeonhole SimHash blocking unchanged. Real image containers hash
-    * through the JDK decode + area-average scaling; other payloads fall
-    * back to a deterministic 64-byte-bucket variant so the machinery runs
-    * on any fixture.
+    * small Hamming distance — [[Dedup.hammingPairs]] over
+    * [[perceptualHashes]] reuses the pigeonhole SimHash blocking. Real
+    * image containers hash through the JDK decode + area-average scaling;
+    * other payloads fall back to a deterministic 64-byte-bucket variant so
+    * the machinery runs on any fixture.
     */
   def aHash(bytes: Array[Byte]): Long = {
     val real =
@@ -200,15 +117,6 @@ object Multimodal {
       .mapPartitions(_.map { case (id, b) => (id, aHash(b)) })
       .toDF(idCol, "phash")
   }
-
-  /** Near-duplicate image pairs: aHash + the pigeonhole Hamming blocking
-    * ([[Dedup.hammingPairs]] — recall 1 below the bucket cap, exact
-    * Hamming verify). Only (id, 8-byte hash) rows shuffle.
-    */
-  def imageNearDupPairs(df: DataFrame, idCol: String, binCol: String,
-                        maxHamming: Int = 6): DataFrame =
-    Dedup.hammingPairs(perceptualHashes(df, idCol, binCol), "phash", idCol,
-      maxHamming)
 
   /** Typed audio metadata. `rmsMilli` is the root-mean-square amplitude
     * normalized to full scale, in thousandths (integer — engine-portable);
@@ -284,7 +192,7 @@ object Multimodal {
   }
 
   /** Decode one audio payload. Real RIFF/WAVE PCM payloads parse with
-    * plain JDK byte handling (the audio twin of [[decodeImage]]'s
+    * plain JDK byte handling (the audio twin of [[aHash]]'s
     * ImageIO arm — format/rate/channels/duration from the fmt chunk, RMS
     * loudness from the 16-bit samples; no external audio libs needed for
     * the PCM family). AIFF/AIFC and Sun AU payloads decode through
@@ -383,21 +291,10 @@ object Multimodal {
     }
   }
 
-  /** Decode audio payloads to typed metadata with per-partition batching —
-    * the mapPartitions seam where a heavier codec binding plugs in.
-    */
-  def decodeAudioMeta(df: DataFrame, binCol: String): Dataset[AudioMeta] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(binCol)).as[Array[Byte]].mapPartitions { it =>
-      // per-partition: a real implementation initializes the codec once here
-      it.map(decodeAudio)
-    }
-  }
-
-  /** Keyed variant of [[decodeAudioMeta]]: (id, all AudioMeta fields) rows
-    * through the same per-partition seam, ready to join back to the
-    * payload table's planted truth or downstream filters.
+  /** Decode audio payloads to (id, all AudioMeta fields) rows with
+    * per-partition batching — the mapPartitions seam where a heavier codec
+    * binding plugs in — ready to join back to the payload table's planted
+    * truth or downstream filters.
     */
   def decodeAudioMetaKeyed(df: DataFrame, idCol: String,
                            binCol: String): DataFrame = {
@@ -412,34 +309,6 @@ object Multimodal {
       })
       .toDF(idCol, "n_bytes", "sample_rate", "channels", "bits",
         "n_frames", "duration_ms", "rms_milli", "is_real")
-  }
-
-  /** ??? real resampler goes here (libjpeg scale / ffmpeg -s): stubbed as
-    * deterministic byte decimation to `targetBytes` — keeps the real
-    * contract (bounded output size per payload, pure per-row transform,
-    * no shuffle).
-    */
-  def resizeStub(bytes: Array[Byte], targetBytes: Int): Array[Byte] =
-    if (bytes.length <= targetBytes) bytes
-    else {
-      val out    = new Array[Byte](targetBytes)
-      val stride = bytes.length.toDouble / targetBytes
-      var i = 0
-      while (i < targetBytes) { out(i) = bytes((i * stride).toInt); i += 1 }
-      out
-    }
-
-  /** Resize every payload to at most `targetBytes` via the per-partition
-    * decode seam; schema is preserved with the payload column replaced.
-    */
-  def resizePayloads(df: DataFrame, idCol: String, binCol: String,
-                     targetBytes: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, b) => (id, resizeStub(b, targetBytes)) })
-      .toDF(idCol, binCol)
   }
 
   /** Sample up to `n` evenly spaced fixed-size "frames" from each payload —

@@ -73,20 +73,6 @@ object AsofJoin {
       .drop("__rn")
   }
 
-  /** Forward as-of, aggregation form (min_by on the packed order struct). */
-  def forwardAgg(left: DataFrame, right: DataFrame,
-                 leftKey: String, rightKey: String,
-                 leftId: String, leftTs: String, rightTs: String,
-                 rightTie: String, pick: Seq[(String, String)],
-                 carryCols: Seq[String] = Nil): DataFrame = {
-    val j = left.join(right,
-      col(leftKey) === col(rightKey) && col(rightTs) >= col(leftTs))
-    val ordKey = struct(col(rightTs), col(rightTie))
-    val picked = pick.map { case (c, out) => min_by(col(c), ordKey).as(out) }
-    j.groupBy((leftId +: carryCols).map(col): _*)
-      .agg(picked.head, picked.tail: _*)
-  }
-
   /** LEFT-OUTER as-of join (aggregation form): every left row appears
     * exactly once; left rows with no key-and-time match carry nulls in the
     * picked columns. Composed as the inner as-of aggregate joined back to

@@ -50,13 +50,4 @@ object Checks {
     val cond = quasiCols.map(c => col(c) <=> col(s"__q_$c")).reduce(_ && _)
     df.join(counts, cond, "left_semi")
   }
-
-  /** The audit twin of [[kAnonymous]]: per-group row counts labeled with
-    * whether the group survives at `k` — what a privacy review reads.
-    */
-  def kAnonymityProfile(df: DataFrame, quasiCols: Seq[String],
-                        k: Long): DataFrame =
-    df.groupBy(quasiCols.map(col): _*)
-      .agg(count(lit(1)).as("n_rows"))
-      .withColumn("released", col("n_rows") >= k)
 }

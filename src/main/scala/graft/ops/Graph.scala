@@ -279,7 +279,6 @@ object Graph {
         countDistinct(col("v")).as("n_vertices"))
       .select(lit(round.toLong).as("round"), col("n_vertices"), col("n_edges"))
     var out = summary(0, cur)
-    var prevEdges = -1L
     var round = 1
     while (round <= nRounds) {
       val deg = cur

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Materialize.Ops
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Distributed training of a linear quality classifier — the "cheap

@@ -116,9 +116,7 @@ object Sampling {
     * threshold to straddle).
     *
     * Cost: one shuffle on the group column and a per-group sort — the
-    * price of EXACT ranking. For 100 TB use [[topQuantileByGroupApprox]]:
-    * a two-pass approx-threshold variant whose heavy pass is a pure
-    * filter (no sort, no skew exposure).
+    * price of EXACT ranking.
     */
   def topQuantileByGroup(df: DataFrame, groupCol: String, scoreCol: String,
                          tieCol: String, p: Double): DataFrame = {
@@ -128,23 +126,6 @@ object Sampling {
     df.withColumn("__pr", percent_rank().over(w))
       .filter(col("__pr") >= p)
       .drop("__pr")
-  }
-
-  /** Scale path for [[topQuantileByGroup]]: per-group approx_percentile
-    * threshold (partial-aggregating sketch, one shuffle of sketch rows
-    * only) broadcast back as a filter. Rank error is bounded by the
-    * sketch `accuracy`; rows AT the threshold are kept.
-    */
-  def topQuantileByGroupApprox(df: DataFrame, groupCol: String,
-                               scoreCol: String, p: Double,
-                               accuracy: Int = 10000): DataFrame = {
-    require(p >= 0 && p <= 1, "p must be in [0, 1]")
-    val thresholds = df.groupBy(col(groupCol))
-      .agg(percentile_approx(col(scoreCol), lit(p), lit(accuracy))
-        .as("__thr"))
-    df.join(broadcast(thresholds), Seq(groupCol))
-      .filter(col(scoreCol) >= col("__thr"))
-      .drop("__thr")
   }
 
   /** Deterministic negative sampling for contrastive training pairs: for

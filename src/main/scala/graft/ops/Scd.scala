@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -49,15 +49,6 @@ object Scd {
       .select(col(keyCol), col(attrCol), col("valid_from"),
         col("valid_to"), col("version"), col("is_current"))
   }
-
-  /** Point-in-time lookup against an SCD2 history: the interval in force
-    * at `asOf` (valid_from <= asOf < valid_to, open interval matches
-    * everything after valid_from). A filter + projection — no shuffle
-    * beyond what the caller's sink needs.
-    */
-  def asOfSnapshot(history: DataFrame, asOf: Column): DataFrame =
-    history.filter(col("valid_from") <= asOf &&
-      (col("valid_to").isNull || col("valid_to") > asOf))
 
   /** Fact-to-dimension as-of join: each fact row picks the SCD2 interval
     * in force at its timestamp (valid_from <= ts < valid_to; the open

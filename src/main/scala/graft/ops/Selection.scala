@@ -3,7 +3,7 @@ package graft.ops
 import graft.Materialize.Ops
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Coverage-driven data selection: pick the k documents that together
   * cover the most distinct items (tokens, n-grams, topics) — the greedy

@@ -42,16 +42,4 @@ object Sharding {
         lit(tokensPerShard.toDouble)).cast("long"))
       .drop("__g", "__tok", "__cum")
   }
-
-  /** Materialize the shards: one directory per shard id, rows within a
-    * shard file-sorted by `pos` so a sequential reader sees the exact
-    * training order. Directory-per-shard means a trainer reading shard k
-    * touches only that directory (partition pruning on read).
-    */
-  def writeShards(df: DataFrame, order: Seq[Column], tokens: Column,
-                  tokensPerShard: Long, path: String): Unit =
-    shardAssignments(df, order, tokens, tokensPerShard)
-      .repartition(col("shard_id"))
-      .sortWithinPartitions(col("shard_id"), col("pos"))
-      .write.partitionBy("shard_id").mode("overwrite").parquet(path)
 }

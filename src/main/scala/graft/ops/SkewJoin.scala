@@ -53,24 +53,4 @@ object SkewJoin {
       .drop("__salt")
       .drop(rightKey)
   }
-
-  /** Two-phase (partial/final) aggregation for skewed group keys: first
-    * aggregate on (key, salt), then re-aggregate on key. `partials` build
-    * the salted partial aggregates; `finals` combine them. Equivalent to
-    * what HashAggregateExec does automatically for algebraic aggregates —
-    * spelled out for compositions where the partial isn't automatic (e.g.
-    * exact distinct counts fed into a second stage).
-    */
-  def saltedAgg(df: DataFrame, key: String, factor: Int,
-                partials: Seq[org.apache.spark.sql.Column],
-                finals: Seq[org.apache.spark.sql.Column],
-                saltKey: Option[String] = None): DataFrame = {
-    val saltSource = saltKey.fold(xxhash64(struct(df.columns.map(col): _*)))(
-      c => xxhash64(col(c)))
-    val salted = df.withColumn("__salt", pmod(saltSource, lit(factor)).cast("int"))
-    salted.groupBy(col(key), col("__salt"))
-      .agg(partials.head, partials.tail: _*)
-      .groupBy(col(key))
-      .agg(finals.head, finals.tail: _*)
-  }
 }

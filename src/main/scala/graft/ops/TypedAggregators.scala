@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Encoder, Encoders, TypedColumn}
+import org.apache.spark.sql.{Encoder, TypedColumn}
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Typed `Aggregator[IN, BUF, OUT]` examples — the engine's UDAF surface
@@ -9,51 +9,6 @@ import org.apache.spark.sql.expressions.Aggregator
   * same way `sum` does.
   */
 object TypedAggregators {
-
-  /** Weighted mean over (value, weight) pairs. */
-  object WeightedMean extends Aggregator[(Double, Double), (Double, Double), Double] {
-    def zero: (Double, Double) = (0.0, 0.0)
-    def reduce(b: (Double, Double), a: (Double, Double)): (Double, Double) =
-      (b._1 + a._1 * a._2, b._2 + a._2)
-    def merge(x: (Double, Double), y: (Double, Double)): (Double, Double) =
-      (x._1 + y._1, x._2 + y._2)
-    def finish(b: (Double, Double)): Double = if (b._2 == 0.0) 0.0 else b._1 / b._2
-    def bufferEncoder: Encoder[(Double, Double)] = Encoders.tuple(Encoders.scalaDouble, Encoders.scalaDouble)
-    def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-  }
-
-  def weightedMean: TypedColumn[(Double, Double), Double] = WeightedMean.toColumn
-
-  /** Numerically stable (Welford) streaming variance. Buffer is
-    * (count, mean, M2); merge uses the parallel-variance combination rule,
-    * so partial aggregation is exact.
-    */
-  object Variance extends Aggregator[Double, (Long, Double, Double), Double] {
-    def zero: (Long, Double, Double) = (0L, 0.0, 0.0)
-    def reduce(b: (Long, Double, Double), x: Double): (Long, Double, Double) = {
-      val n = b._1 + 1
-      val delta = x - b._2
-      val mean = b._2 + delta / n
-      (n, mean, b._3 + delta * (x - mean))
-    }
-    def merge(a: (Long, Double, Double), b: (Long, Double, Double)): (Long, Double, Double) = {
-      if (a._1 == 0) b
-      else if (b._1 == 0) a
-      else {
-        val n = a._1 + b._1
-        val delta = b._2 - a._2
-        val mean = a._2 + delta * b._1 / n
-        (n, mean, a._3 + b._3 + delta * delta * a._1 * b._1 / n)
-      }
-    }
-    def finish(b: (Long, Double, Double)): Double =
-      if (b._1 < 2) 0.0 else b._3 / (b._1 - 1)
-    def bufferEncoder: Encoder[(Long, Double, Double)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble, Encoders.scalaDouble)
-    def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-  }
-
-  def sampleVariance: TypedColumn[Double, Double] = Variance.toColumn
 
   /** Misra-Gries heavy-hitters sketch: at most `k` (item, count) entries of
     * bounded-state per partial, merged with the Agarwal et al. mergeable-

@@ -54,7 +54,4 @@ object HiveDdl {
     */
   def defaultColNames(n: Int): Seq[String] =
     (0 until n).map(i => s"$DefaultColPrefix$i")
-
-  /** Render a StructType back to a canonical Hive DDL string. */
-  def toDdl(schema: StructType): String = schema.toDDL
 }

@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{TextFunctions => TF}
 
-/** Approximate/sketch aggregates and remaining text utilities that have no
-  * SQL-oracle counterpart (different algorithms across engines).
+/** Approximate/sketch aggregates that have no SQL-oracle counterpart
+  * (different algorithms across engines).
   */
 class ApproxSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -20,18 +19,5 @@ class ApproxSpec extends AnyFunSuite {
     val approx = r.getLong(1).toDouble
     assert(math.abs(approx - exact) / exact < 0.05,
       s"approx $approx vs exact $exact")
-  }
-
-  test("bpeTokenCount splits punctuation runs as extra tokens") {
-    val got = TestSpark.rows(Seq("don't stop, now!", "plain words")
-      .toDF("t").select(TF.bpeTokenCount($"t"))).flatten
-    // don ' t stop , now !  = 7 ; plain words = 2
-    assert(got == Seq(7, 2))
-  }
-
-  test("charNgrams produces length-n windows of the lowercased text") {
-    val got = TestSpark.rows(Seq("AbCd").toDF("t").select(TF.charNgrams($"t", 2)))
-      .flatten.head.asInstanceOf[scala.collection.Seq[String]]
-    assert(got == Seq("ab", "bc", "cd"))
   }
 }

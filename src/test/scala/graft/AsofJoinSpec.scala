@@ -81,11 +81,5 @@ class AsofJoinSpec extends AnyFunSuite {
     // trade1 10:07 -> 10:10 quote (3.0); trade2 exact 10:10 (3.0);
     // trade3 09:00 -> first quote 10:00 (1.0); trade4/5: nothing after
     assert(win == Seq((1L, 3.0), (2L, 3.0), (3L, 1.0)))
-    val agg = AsofJoin.forwardAgg(trades, quotes,
-        "tkey", "qkey", "trade_id", "tts", "qts",
-        rightTie = "price", pick = Seq("price" -> "price"))
-      .select($"trade_id", $"price").orderBy($"trade_id")
-      .as[(Long, Double)].collect().toSeq
-    assert(agg == win)
   }
 }

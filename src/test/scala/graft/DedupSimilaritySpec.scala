@@ -38,12 +38,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(out.filter($"doc_id" < 10).count() == 10)
   }
 
-  test("exactGroups reports duplicate groups") {
-    val g = Dedup.exactGroups(corpus, "text", "doc_id")
-    assert(g.count() == 120)
-    assert(g.filter($"n_dups" === 2).count() == 10)
-  }
-
   test("minhash pairs find injected near-dups with high estimated jaccard") {
     val pairs = Dedup.minhashPairs(corpus, "text", "doc_id",
       shingleSize = 2, numHashes = 64, bands = 16, threshold = 0.4)
@@ -54,13 +48,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // exact dups must all be found with estimate 1.0
     val exactFound = pairs.filter($"idB" === $"idA" + 1000 && $"jaccard_est" === 1.0).count()
     assert(exactFound == 10)
-  }
-
-  test("minhashDedup drops the larger id of each pair") {
-    val out = Dedup.minhashDedup(corpus, "text", "doc_id",
-      shingleSize = 2, numHashes = 64, bands = 16, threshold = 0.4)
-    assert(out.filter($"doc_id" >= 1000 && $"doc_id" < 2000).count() == 0)
-    assert(out.filter($"doc_id" < 10).count() == 10)
   }
 
   test("simhash pigeonhole blocking: recall 1.0 vs brute-force Hamming scan") {
@@ -326,24 +313,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(recall >= 0.9, s"k-means IVF recall@5 on clustered corpus = $recall")
   }
 
-  test("minhashDedupClustered keeps exactly the min id of every component") {
-    val out = Dedup.minhashDedupClustered(corpus, "text", "doc_id",
-        shingleSize = 2, numHashes = 64, bands = 16, threshold = 0.4)
-      .select("doc_id").as[Long].collect().toSet
-    val pairs = Dedup.minhashPairs(corpus, "text", "doc_id",
-      shingleSize = 2, numHashes = 64, bands = 16, threshold = 0.4)
-    val comps = Dedup.connectedComponents(pairs.select($"idA", $"idB"))
-      .as[(Long, Long)].collect()
-    val reps = comps.filter { case (id, c) => id == c }.map(_._1).toSet
-    val nonReps = comps.filter { case (id, c) => id != c }.map(_._1).toSet
-    assert(reps.subsetOf(out))
-    assert(nonReps.intersect(out).isEmpty)
-    // docs not in any pair survive untouched
-    val allIds = corpus.select("doc_id").as[Long].collect().toSet
-    val inGraph = comps.map(_._1).toSet
-    assert((allIds -- inGraph).subsetOf(out))
-  }
-
   test("embedding LSH pairs are a subset of exact pairs with decent recall") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val exact = Dedup.embeddingPairsExact(emb, "embedding", "vec_id", 0.35)
@@ -475,7 +444,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
       .select($"vec_id",
         expr("transform(embedding, x -> cast(x as double))").as("embedding"))
-    val d = expr("size(embedding)")
     def perturb(src: org.apache.spark.sql.DataFrame, off: Long, eps: Double) =
       src.select(($"vec_id" + off).as("vec_id"),
         expr(s"transform(embedding, (x, i) -> x + $eps * " +

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.expressions.{TextExpressions, TextProfileExpressions, VectorExpressions}
+import graft.expressions.{TextExpressions, VectorExpressions}
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 
 /** Native expressions vs their declarative/regex formulations — the parity
@@ -129,17 +129,6 @@ class ExpressionsSpec extends AnyFunSuite {
     val s2 = TestSpark.rows(df.select(VF.hyperplaneSignature($"v", 12))).flatten.head
     assert(s1 == s2)
     assert(s1.asInstanceOf[Long] >= 0L && s1.asInstanceOf[Long] < (1L << 12))
-  }
-
-  test("rolling fingerprint is order-sensitive") {
-    val df = Seq(
-      ("one two three four five six", "one two three four five six"),
-      ("one two three four five six", "six five four three two one")
-    ).toDF("x", "y")
-    val fp = df.select(
-      (TF.rollingFingerprint($"x", 2) === TF.rollingFingerprint($"y", 2)).as("eq"))
-    val got = TestSpark.rows(fp).flatten.map(_.asInstanceOf[Boolean])
-    assert(got == Seq(true, false))
   }
 
   test("dupNgramFrac: repetition fraction, short-doc and all-same edges") {

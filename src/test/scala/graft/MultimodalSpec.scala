@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.llm.Multimodal
 
 /** Multimodal binary-column plumbing: payload packing, metadata extraction,
-  * the mapPartitions decode seam, and frame sampling — all on the
-  * deterministic stub decoder (no media codecs in this environment).
+  * perceptual hashing, the mapPartitions audio decode seam, and frame
+  * sampling.
   */
 class MultimodalSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -30,16 +29,7 @@ class MultimodalSpec extends AnyFunSuite {
     javax.imageio.ImageIO.write(img, "png", bos)
     val bytes = bos.toByteArray
     assert(Multimodal.looksLikeImage(bytes))
-    val meta = Multimodal.decodeMeta(Seq(bytes).toDF("payload"), "payload")
-      .collect().head
-    assert(meta.width == 123 && meta.height == 45,
-      s"real decode expected 123x45, got ${meta.width}x${meta.height}")
-    assert(meta.nBytes == bytes.length.toLong)
-    // non-image payloads keep the deterministic fallback dimensions
-    val fake = Multimodal.decodeImage("definitely not an image".getBytes("UTF-8"))
     assert(!Multimodal.looksLikeImage("definitely not an image".getBytes("UTF-8")))
-    assert(fake.width >= 64 && fake.width < 64 + 1024)
-    assert(fake.height >= 64 && fake.height < 64 + 1024)
   }
 
   test("aHash: perceptual near-dups close, distinct images far, real PNGs") {
@@ -66,7 +56,8 @@ class MultimodalSpec extends AnyFunSuite {
     // pipeline: pigeonhole Hamming blocking finds exactly the planted pair
     val payloads = Seq((1L, base), (2L, near), (3L, far))
       .toDF("id", "payload")
-    val pairs = Multimodal.imageNearDupPairs(payloads, "id", "payload")
+    val pairs = graft.llm.Dedup.hammingPairs(
+        Multimodal.perceptualHashes(payloads, "id", "payload"), "phash", "id", 6)
       .select($"idA", $"idB").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L)), s"expected only (1,2), got $pairs")
   }
@@ -79,47 +70,11 @@ class MultimodalSpec extends AnyFunSuite {
     assert(df.schema("checksum").dataType.typeName == "long")
   }
 
-  test("decodeMeta runs the stub decoder per partition, deterministic") {
-    val withBin = Multimodal.withBinaryPayload(docs, "text")
-    val metas = Multimodal.decodeMeta(withBin, "payload").collect().sortBy(_.nBytes)
-    assert(metas.map(_.nBytes).toSeq == Seq(11L, 32L))
-    assert(metas.forall(m => m.width >= 64 && m.width < 64 + 1024))
-    val again = Multimodal.decodeMeta(withBin, "payload").collect().sortBy(_.nBytes)
-    assert(metas.map(_.checksum).toSeq == again.map(_.checksum).toSeq)
-  }
-
   test("frame sampling emits n frames per payload with checksums") {
     val df = Multimodal.frameSample(
       Multimodal.withBinaryPayload(docs, "text"), "payload", n = 4, frameBytes = 4)
     assert(df.count() == 8)
     assert(df.groupBy("doc_id").count().select("count").as[Long].collect().forall(_ == 4))
-  }
-
-  test("feature extraction: fixed dim, deterministic, feeds the ANN path") {
-    val withBin = Multimodal.withBinaryPayload(docs, "text")
-    val feats = Multimodal.extractFeatures(withBin, "doc_id", "payload", dim = 8)
-    val rows = feats.orderBy("doc_id").collect()
-    assert(rows.forall(_.getSeq[Double](1).length == 8))
-    val again = Multimodal.extractFeatures(withBin, "doc_id", "payload", dim = 8)
-      .orderBy("doc_id").collect()
-    assert(rows.map(_.getSeq[Double](1)).toSeq == again.map(_.getSeq[Double](1)).toSeq)
-    // composition: extracted features drive exact ANN end-to-end
-    val knn = graft.llm.Similarity.bruteForceTopK(
-      feats, feats, "feature", "doc_id", k = 1)
-    assert(knn.count() == docs.count())
-  }
-
-  test("resize bounds payload size, is identity below the target, deterministic") {
-    val withBin = Multimodal.withBinaryPayload(docs, "text")
-    val resized = Multimodal.resizePayloads(withBin, "doc_id", "payload", targetBytes = 10)
-    val sizes = resized.select(length($"payload")).as[Int].collect()
-    assert(sizes.forall(_ <= 10))
-    val small = Multimodal.resizePayloads(withBin, "doc_id", "payload", targetBytes = 100000)
-    val orig = withBin.select($"doc_id", length($"payload").as("n"))
-      .orderBy("doc_id").as[(Long, Int)].collect().toSeq
-    val kept = small.select($"doc_id", length($"payload").as("n"))
-      .orderBy("doc_id").as[(Long, Int)].collect().toSeq
-    assert(orig == kept)
   }
 
   test("WAV synth -> decode round trip: rate/channels/duration exact, RMS = amp/sqrt(2)") {

@@ -32,7 +32,7 @@ class PropertySpec extends AnyFunSuite {
       if (cols.nonEmpty) {
         val ddl = cols.map { case (n, t) => s"`$n` $t" }.mkString(", ")
         val s1 = HiveDdl.parse(ddl)
-        val s2 = HiveDdl.parse(HiveDdl.toDdl(s1))
+        val s2 = HiveDdl.parse(s1.toDDL)
         assert(s1 == s2, s"not a fixpoint for: $ddl")
       }
     }

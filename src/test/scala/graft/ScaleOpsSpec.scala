@@ -2,15 +2,15 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{SkewJoin, TypedAggregators}
+import graft.ops.SkewJoin
 import graft.io.TypedSources
 
 object ScaleOpsSpec {
   final case class Part(p_partkey: Long, p_name: String, p_size: Int)
 }
 
-/** Scale-infrastructure operators: salted joins/aggregations, typed
-  * Aggregator UDAFs, typed sources, bucketed co-located joins.
+/** Scale-infrastructure operators: salted joins, typed Aggregator UDAFs,
+  * typed sources, bucketed co-located joins.
   */
 class ScaleOpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -26,32 +26,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     val salted = SkewJoin.saltedJoin(left, right, "k", "rk", factor = 8)
       .orderBy("k", "v").collect().toSeq
     assert(salted == plain)
-  }
-
-  test("saltedAgg equals direct aggregation") {
-    val df = spark.range(10000)
-      .select((when($"id" < 9000, 0L).otherwise($"id" % 7)).as("k"), ($"id" % 100).as("v"))
-    val direct = df.groupBy("k").agg(sum("v").as("s"), count(lit(1)).as("n"))
-      .orderBy("k").collect().toSeq
-    val salted = SkewJoin.saltedAgg(df, "k", 16,
-      partials = Seq(sum("v").as("ps"), count(lit(1)).as("pn")),
-      finals = Seq(sum("ps").as("s"), sum("pn").as("n")))
-      .orderBy("k").collect().toSeq
-    assert(salted == direct)
-  }
-
-  test("weightedMean Aggregator: partial+final merge correctness") {
-    val ds = Seq((10.0, 1.0), (20.0, 3.0)).toDS().repartition(2)
-    val got = ds.select(TypedAggregators.weightedMean).collect().head
-    assert(math.abs(got - 17.5) < 1e-12)
-  }
-
-  test("sampleVariance Aggregator matches var_samp across partitions") {
-    val values = (1 to 1000).map(_.toDouble * 0.5)
-    val ds = values.toDS().repartition(7)
-    val got = ds.select(TypedAggregators.sampleVariance).collect().head
-    val expected = ds.toDF("x").agg(var_samp($"x")).collect().head.getDouble(0)
-    assert(math.abs(got - expected) / expected < 1e-12)
   }
 
   test("typed sources round-trip a case class dataset (A20)") {

@@ -4,7 +4,6 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.schema.HiveDdl
 import graft.catalog.PartitionFilter
-import org.apache.spark.sql.functions.col
 
 /** Schema acquisition (SURVEY.md §1.3) and the partition-filter grammar
   * (§2 A11). DDL fixtures from FIXTURES.md §6 (HiveSchemaUtilTest).

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.io._
-import graft.ops._
 
 /** File-source surface (SURVEY.md §2 A1-A8, A20-A21): round trips, schema
   * modes, compression invariance, projection.

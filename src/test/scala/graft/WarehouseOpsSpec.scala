@@ -214,17 +214,6 @@ class WarehouseOpsSpec extends AnyFunSuite {
       s"expected exactly one shuffle:\n$plan")
   }
 
-  test("asOfSnapshot returns the interval in force at the probe time") {
-    val log = Seq((10L, 1L, "A"), (10L, 2L, "B"), (10L, 3L, "C"))
-      .toDF("k", "seq", "attr")
-      .withColumn("ts", timestamp_seconds($"seq" * 100))
-    val h = Scd.scd2History(log, "k", "attr", "ts", "seq")
-    val at150 = Scd.asOfSnapshot(h, timestamp_seconds(lit(150))).collect()
-    assert(at150.length == 1 && at150(0).getString(1) == "A")
-    val at999 = Scd.asOfSnapshot(h, timestamp_seconds(lit(999))).collect()
-    assert(at999.length == 1 && at999(0).getString(1) == "C")
-  }
-
   // --- snapshot diff --------------------------------------------------------
 
   test("snapshotDiff classifies added/removed/changed/unchanged, null-safe") {
@@ -323,13 +312,6 @@ class WarehouseOpsSpec extends AnyFunSuite {
       .select($"id").as[Long].collect().toSet
     // US/A (3 rows) and null/B (3 rows) survive; DE/A (2) and FR/C (1) don't
     assert(kept == Set(1L, 2L, 3L, 6L, 7L, 8L))
-    val profile = graft.ops.Checks.kAnonymityProfile(rows,
-        Seq("country", "seg"), k = 3)
-      .select($"country", $"seg", $"n_rows", $"released")
-      .as[(Option[String], String, Long, Boolean)].collect().toSet
-    assert(profile == Set((Some("US"), "A", 3L, true),
-      (Some("DE"), "A", 2L, false), (None, "B", 3L, true),
-      (Some("FR"), "C", 1L, false)))
   }
 
   test("gapFillHourly materializes gap buckets and forward-fills") {
@@ -572,21 +554,6 @@ class WarehouseOpsSpec extends AnyFunSuite {
     assert(ids.zip(ids.tail).forall { case (a, b) => a <= b })
   }
 
-  test("writeShards produces one readable directory per shard in order") {
-    val docs = (1L to 40L).map(i => (i, 25L)).toDF("id", "toks")
-    val dir = TestSpark.tmpDir("graft-shards")
-    graft.ops.Sharding.writeShards(docs, Seq($"id"), $"toks",
-      tokensPerShard = 250L, path = dir)
-    val shard0 = spark.read.parquet(s"$dir/shard_id=0")
-    assert(shard0.count() == 10)
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 40)
-    assert(back.select("shard_id").distinct().count() == 4)
-    // reading one shard dir prunes to that shard only
-    val pos = shard0.orderBy($"pos").collect().map(_.getAs[Long]("pos"))
-    assert(pos.toSeq == (1L to 10L))
-  }
-
   // --- quantile filter ------------------------------------------------------
 
   test("topQuantileByGroup keeps exactly the top 20% ranks per group") {
@@ -597,17 +564,6 @@ class WarehouseOpsSpec extends AnyFunSuite {
     // 50 rows per group, percent_rank >= 0.8 -> ranks 41..50 -> 10 rows each
     assert(kept.length == 20)
     assert(kept.map(_.getDouble(1)).min >= 81.0)
-  }
-
-  test("approx quantile filter agrees with exact on distinct scores") {
-    val df = (1 to 1000).map(i => ("g", i.toDouble, i.toLong))
-      .toDF("g", "score", "id")
-    val exact = Sampling.topQuantileByGroup(df, "g", "score", "id", 0.8)
-      .collect().map(_.getLong(2)).toSet
-    val approx = Sampling.topQuantileByGroupApprox(df, "g", "score", 0.8)
-      .collect().map(_.getLong(2)).toSet
-    val overlap = (exact & approx).size.toDouble / exact.size
-    assert(overlap >= 0.95, s"approx/exact overlap $overlap")
   }
 
   test("tfidfPairs: identical docs score 1, df cap silences ubiquitous terms, disjoint score nothing") {
